@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * database_handler.py:428-433, streamlit.py:48). Pure declarative filters:
   * Catalyst pushes them into the parquet scan (visible as `PushedFilters`),
   * which is what makes them viable at 100 TB — invalid rows never leave the
-  * scan stage.
+  * scan stage. Over a JSON parse the same pushdown is a cost: it inlines
+  * the parse into every conjunct, so [[graft.stream.Pipeline.transform]]
+  * fences the filter above its single parse.
   */
 object Quality {
 

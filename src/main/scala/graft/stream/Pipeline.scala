@@ -70,30 +70,28 @@ private case class SessionState(trips: Long, revenue: Double,
   * plan runs in batch tests, against `MemoryStream`, or against a Kafka
   * source — Spark's unified API. Semantics preserved: 10 s processing-time
   * trigger (T1), checkpointed offsets (T3), at-least-once `foreachBatch`
-  * append (T4), empty-batch skip (spark_consumer.py:87-88). Deliberately
-  * NOT preserved: the reference's `count()`-then-write double execution
-  * (spark_consumer.py:86,106) — we persist the batch once (SURVEY §4).
+  * append (T4), empty-batch skip (spark_consumer.py:87-88) — an empty
+  * batch writes no data files, because the warehouse write is partitioned.
+  * Deliberately NOT preserved: the reference's `count()`-then-write double
+  * execution (spark_consumer.py:86,106) — each batch runs once, as the
+  * write job (SURVEY §4).
   */
 object Pipeline {
 
   /** parse (P1–P3) → enrich (P5–P10) → validity filter (P11) → warehouse
     * projection (P4). Works on any frame with a `value` column (Kafka
     * layout, MemoryStream[String] aliased, file source).
+    *
+    * Named observed metrics (`Dataset.observe`) report per-micro-batch
+    * parsed/valid row counts and the valid fare sum through
+    * `StreamingQueryProgress.observedMetrics` (and
+    * `QueryExecutionListener` in batch): the quality filter's drop rate
+    * rides the write job as accumulators, with no extra pass. The
+    * `graft_parsed` node also fences the filter: Catalyst does not push
+    * predicates through `CollectMetrics`, so the filter reads the parsed
+    * columns instead of re-running `from_json` once per conjunct.
     */
-  def transform(raw: DataFrame): DataFrame =
-    Enrich.warehouseProjection(
-      Quality.validTrips(
-        Enrich.enrich(
-          Json.parseStream(raw, Schemas.tripStream))))
-
-  /** [[transform]] with named observed metrics (`Dataset.observe`):
-    * per-micro-batch parsed/valid row counts and fare sum, surfaced
-    * through `StreamingQueryProgress.observedMetrics` (and
-    * `QueryExecutionListener` in batch). This is how a 100 TB pipeline
-    * watches its quality-filter drop rate in production — metrics ride
-    * the existing job as accumulators, no extra pass, no count() jobs.
-    */
-  def transformObserved(raw: DataFrame): DataFrame = {
+  def transform(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     val parsed = Enrich.enrich(Json.parseStream(raw, Schemas.tripStream))
       .observe("graft_parsed", count(lit(1)).as("rows_parsed"))
@@ -103,26 +101,27 @@ object Pipeline {
           sum(col("fare_amount")).as("fare_sum")))
   }
 
+  /** The warehouse sink shared by [[start]] and [[startIdempotent]]:
+    * [[transform]] appended by `write` once per micro-batch, one job per
+    * trigger. An empty micro-batch needs no skip: a partitioned write of
+    * zero rows creates no data files.
+    */
+  private def sink(raw: DataFrame, checkpointDir: String, trigger: Trigger)
+                  (write: (DataFrame, Long) => Unit): StreamingQuery =
+    transform(raw).writeStream
+      .outputMode("append")
+      .trigger(trigger)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(write)
+      .start()
+
   /** T1/T3/T4/T9 — start the sink: micro-batch append to the parquet
     * warehouse via `foreachBatch`.
     */
   def start(raw: DataFrame, warehousePath: String, checkpointDir: String,
             trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    transform(raw).writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Empty-batch skip (spark_consumer.py:87-88). isEmpty only reads
-        // the first non-empty partition — cheaper than the reference's
-        // count().
-        if (!batch.isEmpty) {
-          val once = batch.persist()
-          try Warehouse.appendTrips(once, warehousePath)
-          finally { once.unpersist(); () }
-        }
-      }
-      .start()
+    sink(raw, checkpointDir, trigger)((batch, _) =>
+      Warehouse.appendTrips(batch, warehousePath))
 
   /** [[start]] with the effectively-once sink: each micro-batch lands in
     * its own `batch_id=` partition via dynamic overwrite
@@ -134,15 +133,8 @@ object Pipeline {
                       checkpointDir: String,
                       trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
       : StreamingQuery =
-    transform(raw).writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          Warehouse.appendTripsIdempotent(batch, warehousePath, batchId)
-      }
-      .start()
+    sink(raw, checkpointDir, trigger)((batch, batchId) =>
+      Warehouse.appendTripsIdempotent(batch, warehousePath, batchId))
 
   /** T5 upgrade path — event-time hourly aggregation with a watermark:
     * the streaming form of [[graft.agg.Analytics.hourlyStatistics]]. State

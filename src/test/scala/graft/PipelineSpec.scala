@@ -2,9 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Expression, JsonToStructs}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, to_timestamp}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.stream.Pipeline
@@ -169,6 +172,60 @@ class PipelineSpec extends AnyFunSuite {
     // No batch ever had data → appendTrips never ran → no parquet output.
     assert(!Files.list(java.nio.file.Paths.get(warehouse)).iterator().hasNext ||
       spark.read.parquet(warehouse).isEmpty)
+  }
+
+  test("an all-invalid micro-batch commits with no data files, then the next batch lands") {
+    // Neither sink probes the batch for emptiness: a partitioned write of
+    // zero rows creates no data files, which keeps the reference's
+    // empty-batch skip (spark_consumer.py:87-88) without a second job.
+    def dataFiles(dir: String) = Files.walk(java.nio.file.Paths.get(dir))
+      .filter(p => p.toString.endsWith(".parquet")).count()
+    val sinks = Seq[(String, (DataFrame, String, String) => StreamingQuery)](
+      "start" -> ((raw, wh, ckpt) =>
+        Pipeline.start(raw, wh, ckpt, Trigger.ProcessingTime("0 seconds"))),
+      "startIdempotent" -> ((raw, wh, ckpt) =>
+        Pipeline.startIdempotent(raw, wh, ckpt, Trigger.ProcessingTime("0 seconds"))))
+    val batch = Pipeline.transform(goodRows.toDF("value"))
+    for ((name, sink) <- sinks) {
+      val warehouse = Files.createTempDirectory(s"graft-wh-$name").toString
+      val checkpoint = Files.createTempDirectory(s"graft-ckpt-$name").toString
+      val source = MemoryStream[String](
+        implicitly[org.apache.spark.sql.Encoder[String]], spark.sqlContext)
+      val query = sink(source.toDF(), warehouse, checkpoint)
+      def ranBatches = query.recentProgress.filter(_.numInputRows > 0)
+        .map(_.batchId).toSeq
+      try {
+        source.addData(badRows: _*) // malformed + zero-duration only
+        query.processAllAvailable()
+        assert(ranBatches == Seq(0L), name)
+        assert(dataFiles(warehouse) == 0L, name)
+        source.addData(goodRows: _*)
+        query.processAllAvailable()
+        assert(ranBatches == Seq(0L, 1L), name)
+      } finally query.stop()
+      val landed = spark.read.parquet(warehouse)
+        .select(batch.columns.map(col).toSeq: _*)
+      assert(landed.orderBy("vendor_id").collect().toSeq ==
+        batch.orderBy("vendor_id").collect().toSeq, name)
+    }
+  }
+
+  test("transform parses each message once: the validity filter sits above the parse") {
+    // Catalyst pushes a filter through projections and inlines their
+    // aliases, which here would re-run from_json once per conjunct.
+    // The observed-metrics node in transform is the fence that stops it.
+    val in = Files.createTempFile("graft-plan", ".jsonl")
+    Files.write(in, (goodRows ++ badRows).mkString("\n").getBytes)
+    val plan = Pipeline.transform(spark.read.text(in.toString))
+      .queryExecution.optimizedPlan
+    def parses(e: Expression) = e.collect { case j: JsonToStructs => j }.size
+    assert(plan.collect { case n => n.expressions.map(parses).sum }.sum == 1,
+      plan.toString)
+    val valid = plan.collect {
+      case f: Filter if f.references.exists(_.name == "trip_duration_minutes") => f
+    }
+    assert(valid.size == 1 && parses(valid.head.condition) == 0 &&
+      valid.head.child.exists(_.expressions.exists(parses(_) > 0)), plan.toString)
   }
 
   test("incremental corpus dedup runs the batch operator stream-static") {

@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.Skew
@@ -296,23 +297,33 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("observed metrics report parsed vs valid rows per micro-batch") {
-    val source = MemoryStream[String](
-      implicitly[org.apache.spark.sql.Encoder[String]], spark.sqlContext)
+    // Exact on a plain sink and on the foreachBatch warehouse sink: the
+    // metrics ride the batch's one job, so no second job inflates them.
     def trip(fare: Double, durMin: Int) =
       tripJson(1, "2015-01-15 10:00:00", fare, durMin)
-    val query = Pipeline.transformObserved(source.toDF())
-      .writeStream.format("memory").queryName("observed")
-      .outputMode("append").start()
-    try {
-      source.addData(trip(10.0, 5), trip(20.0, 6), trip(5.0, 0)) // last: invalid
-      query.processAllAvailable()
-      val metrics = query.recentProgress.flatMap(p =>
-        Option(p.observedMetrics.get("graft_parsed")).map(r =>
-          r.getAs[Long]("rows_parsed")) zip
-        Option(p.observedMetrics.get("graft_valid")).map(r =>
-          r.getAs[Long]("rows_valid")))
-      assert(metrics.exists { case (p, v) => p == 3L && v == 2L })
-    } finally query.stop()
+    val rows = "not json" +: (0 until 30).map(i => trip(i - 2.0, i % 4))
+    val valid = Pipeline.transform(rows.toDF("value")).count()
+    assert(valid > 0L && valid < rows.size)
+    val tmp = java.nio.file.Files.createTempDirectory("observed").toString
+    val sinks = Seq[(String, DataFrame => StreamingQuery)](
+      "memory" -> (Pipeline.transform(_).writeStream.format("memory")
+        .queryName("observed").outputMode("append").start()),
+      "startIdempotent" -> (Pipeline.startIdempotent(_, s"$tmp/wh",
+        s"$tmp/ckpt", Trigger.ProcessingTime("0 seconds"))))
+    for ((name, sink) <- sinks) {
+      val source = MemoryStream[String](
+        implicitly[org.apache.spark.sql.Encoder[String]], spark.sqlContext)
+      val query = sink(source.toDF())
+      try {
+        source.addData(rows: _*)
+        query.processAllAvailable()
+        val ran = query.recentProgress.filter(_.numInputRows > 0)
+        def total(metric: String, field: String) = ran.map(p =>
+          p.observedMetrics.get(metric).getAs[Long](field)).sum
+        assert(total("graft_parsed", "rows_parsed") == rows.size.toLong, name)
+        assert(total("graft_valid", "rows_valid") == valid, name)
+      } finally query.stop()
+    }
   }
 
   test("dynamic partition pruning fires on the date-partitioned warehouse") {
