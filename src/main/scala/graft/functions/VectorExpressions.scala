@@ -312,9 +312,20 @@ object VectorFunctions {
 /** `SparkSessionExtensions` hook registering the engine's custom SQL
   * functions and optimizer rules. Activate with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`.
+  *
+  * It also binds the `file:` scheme, on the running context's Hadoop
+  * configuration, to [[graft.io.NioLocalFileSystem]] and
+  * [[graft.io.NioLocalFs]]: Hadoop's local filesystem without a `chmod`
+  * or `readlink` fork per created or renamed file. Every later session
+  * and job configuration copies the binding. The classes are named as
+  * strings, so building a session loads none of them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    org.apache.spark.graftbridge.ActiveContext.get.foreach { sc =>
+      sc.hadoopConfiguration.set("fs.file.impl", "graft.io.NioLocalFileSystem")
+      sc.hadoopConfiguration.set("fs.AbstractFileSystem.file.impl", "graft.io.NioLocalFs")
+    }
     ext.injectFunction(VectorFunctions.dotInjection)
     ext.injectFunction((
       FunctionIdentifier("set_overlap"),

@@ -124,10 +124,13 @@ object Pipeline {
       Warehouse.appendTrips(batch, warehousePath))
 
   /** [[start]] with the effectively-once sink: each micro-batch lands in
-    * its own `batch_id=` partition via dynamic overwrite
+    * its own `batch_id=` directory via dynamic overwrite
     * ([[graft.warehouse.Warehouse.appendTripsIdempotent]]), so replays
     * after failure overwrite instead of duplicating — the T4 upgrade path
-    * SURVEY §2.6 names.
+    * SURVEY §2.6 names. The batch id is in the path, not in the plan, so
+    * a steady trigger reuses the write's generated code; with the
+    * session's `file:` filesystem ([[graft.functions.GraftExtensions]])
+    * it forks no process either (PipelineSpec pins both).
     */
   def startIdempotent(raw: DataFrame, warehousePath: String,
                       checkpointDir: String,

@@ -41,6 +41,13 @@ object Warehouse {
     * the reference's non-idempotent JDBC append (spark_consumer.py:106)
     * cannot make that claim.
     *
+    * The batch id goes into the output path, not into the rows: the
+    * write partitions by `pickup_date` under `path/batch_id=N`, so
+    * readers of `path` discover both keys. A `lit(batchId)` column would
+    * be inlined by codegen and compile fresh classes every micro-batch;
+    * this plan is the same for every batch and its code is reused. A
+    * replay of batch N replaces only the dates it carries.
+    *
     * Lifecycle: the `batch_id=` partitions ARE the replay protection
     * and must be preserved while the stream can still replay those ids;
     * they also accumulate one partition per trigger (the index
@@ -52,11 +59,10 @@ object Warehouse {
     */
   def appendTripsIdempotent(df: DataFrame, path: String, batchId: Long): Unit = df
     .withColumn("pickup_date", to_date(col("pickup_datetime")))
-    .withColumn("batch_id", lit(batchId))
     .write.mode("overwrite")
     .option("partitionOverwriteMode", "dynamic")
-    .partitionBy("batch_id", "pickup_date")
-    .parquet(path)
+    .partitionBy("pickup_date")
+    .parquet(s"$path/batch_id=$batchId")
 
   /** S5 as the reference actually wired it — JDBC append — for
     * deployments where a live database replaces the parquet warehouse.

@@ -228,6 +228,83 @@ class PipelineSpec extends AnyFunSuite {
       valid.head.child.exists(_.expressions.exists(parses(_) > 0)), plan.toString)
   }
 
+  test("a steady idempotent trigger spawns no process and compiles no code") {
+    // The warehouse write and the checkpoint commits go through the
+    // engine's `file:` filesystem (no chmod/readlink forks), and the
+    // write plan carries no per-batch literal, so once the first
+    // triggers have compiled it, later triggers reuse the generated code.
+    import scala.jdk.CollectionConverters._
+    val warehouse = Files.createTempDirectory("graft-wh-steady").toString
+    val checkpoint = Files.createTempDirectory("graft-ckpt-steady").toString
+    val source = MemoryStream[String](
+      implicitly[org.apache.spark.sql.Encoder[String]], spark.sqlContext)
+    val query = Pipeline.startIdempotent(source.toDF(), warehouse, checkpoint,
+      Trigger.ProcessingTime("0 seconds"))
+    def trigger(): Unit = {
+      source.addData(goodRows ++ badRows: _*)
+      query.processAllAvailable()
+    }
+    val jfr = new jdk.jfr.Recording()
+    val dump = Files.createTempFile("graft-steady", ".jfr")
+    try {
+      trigger(); trigger()
+      jfr.enable("jdk.ProcessStart")
+      val compiles0 = org.apache.spark.graftbridge.CodegenCount.compiles
+      jfr.start()
+      (1 to 3).foreach(_ => trigger())
+      jfr.stop()
+      val compiles = org.apache.spark.graftbridge.CodegenCount.compiles - compiles0
+      jfr.dump(dump)
+      val spawned = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+        .map(_.getString("command")).toSeq
+      assert(query.recentProgress.count(_.numInputRows > 0) == 5)
+      val byCommand = spawned.groupBy(_.takeWhile(_ != ' ')).view.mapValues(_.size).toMap
+      assert((spawned.size, compiles) == (0, 0L),
+        s"in 3 triggers: processes $byCommand, codegen compiles $compiles")
+    } finally {
+      jfr.close()
+      Files.deleteIfExists(dump)
+      query.stop()
+    }
+    assert(spark.read.parquet(warehouse).count() == 10)
+  }
+
+  test("idempotent warehouse layout: batch_id=N/pickup_date=D, replays replace only their dates") {
+    import scala.jdk.CollectionConverters._
+    def dataFiles(dir: String) = Files.walk(java.nio.file.Paths.get(dir))
+      .iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .map(p => java.nio.file.Paths.get(dir).relativize(p).toString).toSeq
+    val dir = Files.createTempDirectory("graft-idem-layout").toString
+    val trips = Pipeline.transform(goodRows.toDF("value")) // 2015-01-15, -16
+    Warehouse.appendTripsIdempotent(trips, dir, 1L)
+    Warehouse.appendTripsIdempotent(trips, dir, 3L)
+    Warehouse.appendTripsIdempotent(trips.limit(0), dir, 2L)
+    val layout = """batch_id=(\d+)/pickup_date=(\d{4}-\d\d-\d\d)/part-[^/]+\.parquet""".r
+    val parts = dataFiles(dir).map {
+      case layout(b, d) => (b.toLong, d)
+      case other => fail(s"unexpected warehouse file $other")
+    }
+    assert(parts.distinct.sorted == Seq(1L, 3L).flatMap(b =>
+      Seq(b -> "2015-01-15", b -> "2015-01-16")))
+    val read = spark.read.parquet(dir)
+    assert(read.schema.map(f => f.name -> f.dataType) ==
+      trips.schema.map(f => f.name -> f.dataType) ++ Seq(
+        "batch_id" -> org.apache.spark.sql.types.IntegerType,
+        "pickup_date" -> org.apache.spark.sql.types.DateType))
+    // Replay batch 3 with only its 2015-01-15 trip, fare changed: that
+    // date's partition is replaced, its 2015-01-16 partition and batch 1
+    // stay as they were.
+    Warehouse.appendTripsIdempotent(
+      trips.filter(col("vendor_id") === 1).withColumn("fare_amount", col("fare_amount") + 1),
+      dir, 3L)
+    val fares = spark.read.parquet(dir)
+      .select(col("batch_id"), col("pickup_date").cast("string"), col("fare_amount"))
+      .orderBy("batch_id", "pickup_date").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getDouble(2))).toSeq
+    assert(fares == Seq((1, "2015-01-15", 12.0), (1, "2015-01-16", 30.0),
+      (3, "2015-01-15", 13.0), (3, "2015-01-16", 30.0)))
+  }
+
   test("incremental corpus dedup runs the batch operator stream-static") {
     import spark.implicits._
     val corpus = Seq((0L, "seen doc one"), (1L, "seen doc two"))
