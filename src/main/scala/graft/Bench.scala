@@ -1,32 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, max}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // Bench measures the PRODUCTION plan of the sketch queries — the
     // correctness path (Verify + the driver's DuckDB gate) keeps the
     // in-query exact-verification twins; see SparkEntry.verifyExact.
     sys.props("graft.verify.exact") = "false"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Generated-class cache sized to the workload: the default
-      // (spark.sql.codegen.cache.maxEntries = 100) is guaranteed to
-      // thrash across this suite's 149 queries × ~3 codegen units each,
-      // so the "warm" pass silently re-pays janino compilation for
-      // almost every stage — measured as sporadic per-run warm>cold
-      // anomalies (ann_recall 0.72→3.68 s one run, absent the next,
-      // never reproducible in isolation). A long-lived production
-      // session serving a query library this size would size the cache
-      // the same way; 4096 entries of generated classes is a few
-      // hundred MB of metaspace at most.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Clamp telemetry surface (r11 verdict item 5): every capped
     // candidate join exposes dropped_buckets / dropped_rows / max_bucket

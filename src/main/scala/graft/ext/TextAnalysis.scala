@@ -1233,8 +1233,7 @@ object TextAnalysis {
     val tfHist = feats(target).groupBy("f").agg(count(lit(1)).as("ct"))
       .localCheckpoint()
     // A feature-less target would make every max(nt) — and so every
-    // log-ratio — silently null; fail loudly instead (the trainLogReg
-    // 'no documents carry features' discipline).
+    // log-ratio — silently null; fail loudly instead.
     require(!tfHist.isEmpty,
       "dsirWeights: target corpus carries no features — every log-ratio " +
         "would be null; pass a non-empty target")

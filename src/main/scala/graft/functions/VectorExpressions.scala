@@ -294,9 +294,9 @@ object VectorFunctions {
   /** L2 norm via the same codegen'd kernel. */
   def vec_norm(a: Column): Column = sqrt(vec_dot(a, a))
 
-  /** Injection entry for SQL users:
-    * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-    * makes `vec_dot(a, b)` callable from Spark SQL text.
+  /** Injection entry for SQL users: [[GraftExtensions]] (which every
+    * [[graft.GraftSession.builder]] session loads) makes `vec_dot(a, b)`
+    * callable from Spark SQL text.
     */
   val dotInjection: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("vec_dot"),
@@ -310,8 +310,8 @@ object VectorFunctions {
 }
 
 /** `SparkSessionExtensions` hook registering the engine's custom SQL
-  * functions and optimizer rules. Activate with
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`.
+  * functions and optimizer rules. Every [[graft.GraftSession.builder]]
+  * session loads it.
   *
   * It also binds the `file:` scheme, on the running context's Hadoop
   * configuration, to [[graft.io.NioLocalFileSystem]] and

@@ -1,28 +1,22 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
-/** Optimization-round job profiler: runs named SparkEntry queries under
-  * the Bench session config (production plans, warm codegen cache) and
-  * prints every Spark JOB the warm run fires with its wall time and
-  * call site — the per-query answer to "where do the seconds go" that
-  * QBench's one number can't give. Not part of the driver contract.
+/** The name-addressed job profiler: runs named SparkEntry queries under
+  * the Bench session (production plans, warm tables and indexes), once
+  * cold and once warm, and prints both walls plus every Spark JOB the
+  * warm run fires with its wall time and call site — the per-query
+  * answer to "where do the seconds go". Not part of the driver contract.
   *
   * Usage: runMain graft.tools.OptProbe <name> [<name> ...]
+  * (`SPARK_GRAFT_SF_DIR` and `SPARK_GRAFT_CPUS` as for Bench.)
   */
 object OptProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     sys.props("graft.verify.exact") = "false"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Same table warm + index warm as Bench so the probe measures
     // steady-state cost, not first-decode init.
@@ -79,8 +73,9 @@ object OptProbe {
 
     args.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      // cold run (codegen) — not reported
+      val c0 = System.nanoTime()
       fn(spark, sfDir).count()
+      val cold = (System.nanoTime() - c0) / 1e9
       jobs.clear(); order.clear()
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
@@ -90,7 +85,7 @@ object OptProbe {
       import scala.jdk.CollectionConverters._
       val js = order.asScala.toSeq.flatMap(id => Option(jobs.get(id)))
       val sumJobs = js.map(j => (j.end - j.start) / 1e3).sum
-      println(f"OPTPROBE $name warm=$wall%.2f s jobs=${js.size} jobSum=$sumJobs%.2f s (gaps=${wall - sumJobs}%.2f s)")
+      println(f"OPTPROBE $name cold=$cold%.2f s warm=$wall%.2f s jobs=${js.size} jobSum=$sumJobs%.2f s (gaps=${wall - sumJobs}%.2f s)")
       js.foreach { j =>
         println(f"  job ${j.id}%4d ${(j.end - j.start) / 1e3}%7.3f s tasks=${j.tasks}%4d  ${j.desc.take(160)}")
       }

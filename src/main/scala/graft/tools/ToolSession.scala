@@ -2,10 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared local-session builder and host-telemetry readers for the dev
-  * tools (NOT the driver contract mains, which own their
-  * configuration). The /proc readers are the r16 I/O-counter
-  * convention — one implementation so a parsing fix lands once.
+/** Quiet local session and host-telemetry readers for the dev tools.
+  * The /proc readers are the r16 I/O-counter convention — one
+  * implementation so a parsing fix lands once.
   */
 private[tools] object ToolSession {
   /** /proc/self/io counter (e.g. "read_bytes", "write_bytes") — actual
@@ -48,16 +47,7 @@ private[tools] object ToolSession {
   }
 
   def local(cores: Int): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Match Bench: the default 100-entry generated-class cache
-      // thrashes across multi-query tool runs (see Bench.scala).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }
