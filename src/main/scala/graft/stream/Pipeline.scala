@@ -1,9 +1,11 @@
 package graft.stream
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.etl.{Enrich, Quality}
+import graft.ext.{Contamination, CorpusPrep, Dedup, Quantization, Retrieval,
+  Similarity, TextAnalysis}
 import graft.ingest.Json
 import graft.model.Schemas
 import graft.warehouse.Warehouse
@@ -101,18 +103,45 @@ object Pipeline {
           sum(col("fare_amount")).as("fare_sum")))
   }
 
-  /** The warehouse sink shared by [[start]] and [[startIdempotent]]:
-    * [[transform]] appended by `write` once per micro-batch, one job per
-    * trigger. An empty micro-batch needs no skip: a partitioned write of
+  /** The one `foreachBatch` builder every sink in this object starts
+    * through: `stream` is handed to `body` once per micro-batch with
+    * its batch id, and offsets are checkpointed under `checkpointDir`.
+    * The warehouse sinks ([[start]], [[startIdempotent]]) pass
+    * [[transform]] straight in, one job per trigger: an empty
+    * micro-batch needs no skip there, because a partitioned write of
     * zero rows creates no data files.
+    *
+    * The index and verdict streams reach it through [[nonEmptyBatches]]
+    * and share one replay contract:
+    *  - One streaming writer per index (and verdict dir) per checkpoint
+    *    lineage — Spark's batchId-idempotence contract. A fresh
+    *    checkpoint restarts batch ids at 0 and would overwrite an
+    *    earlier stream's partitions.
+    *  - Index appends run under ingest id `batchId + 1` (0 is reserved
+    *    for a base corpus) as a dynamic overwrite of that partition, so
+    *    foreachBatch's at-least-once replay rewrites the partition
+    *    instead of duplicating it, and the index is exactly-once per
+    *    checkpoint lineage. The explicit id also makes the first append
+    *    initialize an empty base on cold start, so the first real batch
+    *    lands in its own replayable partition too.
+    *  - Each batch's verdicts overwrite `verdictDir/batch_id=N`
+    *    ([[writeVerdicts]]); a replay rewrites exactly its own audit
+    *    rows.
+    *  - `compactEvery` = N folds an index's ingests into its base every
+    *    N batches ([[compactDue]]); 0 leaves compaction to the caller.
+    *  - `retainVerdictBatches` bounds the verdict audit dir
+    *    ([[pruneVerdictDirs]]); 0 leaves retention to the caller.
+    * The index carries all cross-batch state: streaming state is zero
+    * and the checkpoint holds offsets only.
     */
-  private def sink(raw: DataFrame, checkpointDir: String, trigger: Trigger)
-                  (write: (DataFrame, Long) => Unit): StreamingQuery =
-    transform(raw).writeStream
+  private def batchSink(stream: DataFrame, checkpointDir: String,
+                        trigger: Trigger)
+                       (body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
       .outputMode("append")
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch(write)
+      .foreachBatch(body)
       .start()
 
   /** T1/T3/T4/T9 — start the sink: micro-batch append to the parquet
@@ -120,7 +149,7 @@ object Pipeline {
     */
   def start(raw: DataFrame, warehousePath: String, checkpointDir: String,
             trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    sink(raw, checkpointDir, trigger)((batch, _) =>
+    batchSink(transform(raw), checkpointDir, trigger)((batch, _) =>
       Warehouse.appendTrips(batch, warehousePath))
 
   /** [[start]] with the effectively-once sink: each micro-batch lands in
@@ -136,7 +165,7 @@ object Pipeline {
                       checkpointDir: String,
                       trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
       : StreamingQuery =
-    sink(raw, checkpointDir, trigger)((batch, batchId) =>
+    batchSink(transform(raw), checkpointDir, trigger)((batch, batchId) =>
       Warehouse.appendTripsIdempotent(batch, warehousePath, batchId))
 
   /** T5 upgrade path — event-time hourly aggregation with a watermark:
@@ -223,135 +252,111 @@ object Pipeline {
   def dedupAgainstCorpus(docStream: DataFrame, corpus: DataFrame): DataFrame =
     graft.ext.Dedup.dedupAgainstSeen(docStream, corpus)
 
-  /** Streaming retrieval — the streaming twin of
-    * [[graft.ext.Retrieval.bm25Indexed]], the same batch/stream symmetry
-    * the engine shows for dedup and k-means applied to the inverted
-    * index: each micro-batch of documents is folded into the PERSISTED
-    * index ([[graft.ext.Retrieval.appendBm25Index]] — postings append
-    * into the bucketed layout, the 1-row stats merge by sum), then the
-    * standing query re-ranks against the now-current index and the
-    * top-k snapshot lands in `rankDir` (overwrite: it is a VIEW of the
-    * index, not a log). After any prefix of the stream, the snapshot is
-    * EXACTLY what the batch ranker returns over the documents ingested
-    * so far — PipelineSpec pins that over a two-batch replay.
-    *
-    * Replay safety: each micro-batch appends under ingest id
-    * `batchId + 1` (0 is reserved for a base corpus), and the append is
-    * a dynamic overwrite of that partition — foreachBatch's
-    * at-least-once replay rewrites the same partition instead of
-    * duplicating postings, so the index is exactly-once per checkpoint
-    * lineage. On cold start an EMPTY base index is initialized first so
-    * the first real batch also lands in its own replayable partition.
-    * One streaming writer per index per checkpoint lineage (Spark's
-    * standard batchId-idempotence contract): a fresh checkpoint restarts
-    * batch ids at 0 and would overwrite an earlier stream's partitions.
-    *
-    * Scale: per trigger, work is (batch postings shuffle) + (query-
-    * bucket-pruned rank) — never a corpus re-scan; the index carries all
-    * cross-batch state, so streaming state is zero and the checkpoint
-    * holds offsets only. Same new-doc_ids contract as the append.
+  /** [[batchSink]] for the index and verdict streams: an empty
+    * micro-batch is skipped, so it commits with no verdict dir, no rank
+    * snapshot and no index ingest. With `persist`, the batch is cached
+    * for the body's several passes (screen, read-back join, append) and
+    * released after it.
     */
-  def bm25IndexStream(docs: DataFrame, indexPath: String,
-                      terms: Seq[String], k: Int, rankDir: String,
-                      checkpointDir: String,
-                      trigger: Trigger = Trigger.AvailableNow())
+  private def nonEmptyBatches(stream: DataFrame, checkpointDir: String,
+                              trigger: Trigger, persist: Boolean)
+                             (body: (DataFrame, Long) => Unit)
       : StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
+    batchSink(stream, checkpointDir, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        if (!persist) body(batch, batchId)
+        else {
           val once = batch.persist()
-          try {
-            // explicit ingestId ⇒ the append self-initializes an empty
-            // base on cold start; the batch lands in its own partition
-            graft.ext.Retrieval.appendBm25Index(once, indexPath,
-              ingestId = batchId + 1)
-            graft.ext.Retrieval.bm25Indexed(once.sparkSession, indexPath,
-                terms, k)
-              .write.mode("overwrite").parquet(rankDir)
-          } finally { once.unpersist(); () }
+          try body(once, batchId) finally { once.unpersist(); () }
         }
       }
-      .start()
+    }
 
-  /** Streaming ANN ingest — [[bm25IndexStream]]'s twin for the vector
-    * index: each micro-batch of embeddings is folded into the persisted
-    * IVF index ([[graft.ext.Similarity.appendIvfIndex]] — index rows
-    * are independent, so the append is pure partitioned file adds) and
-    * the standing query vector re-ranks against the now-current index
-    * into `rankDir`. After any stream prefix the snapshot equals
-    * `annTopKIndexed` over a from-scratch index of the vectors ingested
-    * so far (PipelineSpec). Zero streaming state; the index is the
-    * state. Replay safety is [[bm25IndexStream]]'s: per-batch ingest
-    * partitions (`batchId + 1`, 0 reserved for a base corpus)
-    * dynamically overwritten, an empty base initialized on cold start,
-    * one streaming writer per checkpoint lineage.
+  /** The rank streams ([[bm25IndexStream]], [[annIndexStream]],
+    * [[pqIndexStream]]): `append` folds the whole batch into the
+    * persisted index under its ingest id, then the standing query,
+    * re-ranked by `rank` against the now-current index, overwrites
+    * `rankDir` — a VIEW of the index, not a log.
     */
-  def annIndexStream(emb: DataFrame, indexPath: String,
-                     qVec: Array[Float], qNorm: Double, k: Int,
-                     rankDir: String, checkpointDir: String,
-                     nlist: Int = 16, dim: Int = 64, nprobe: Int = 2,
-                     trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    emb.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val once = batch.persist()
-          try {
-            // explicit ingestId ⇒ the append self-initializes an empty
-            // base on cold start; the batch lands in its own partition
-            graft.ext.Similarity.appendIvfIndex(once, indexPath, nlist,
-              dim, ingestId = batchId + 1)
-            graft.ext.Similarity.annTopKIndexed(once.sparkSession,
-                indexPath, qVec, qNorm, k, nprobe)
-              .write.mode("overwrite").parquet(rankDir)
-          } finally { once.unpersist(); () }
-        }
-      }
-      .start()
+  private def rankStream(stream: DataFrame, rankDir: String,
+                         checkpointDir: String, trigger: Trigger)
+                        (append: (DataFrame, Long) => Unit)
+                        (rank: SparkSession => DataFrame): StreamingQuery =
+    nonEmptyBatches(stream, checkpointDir, trigger, persist = true) {
+      (once, batchId) =>
+        append(once, batchId + 1)
+        rank(once.sparkSession).write.mode("overwrite").parquet(rankDir)
+    }
 
-  /** Streaming PQ ingest — [[annIndexStream]]'s twin for the CODES
-    * index: each micro-batch of embeddings is encoded with the index's
-    * frozen codebook and folded into the persisted PQ index
-    * ([[graft.ext.Quantization.appendPqIndex]]); the standing query
-    * re-ranks by driver-table ADC against the now-current index into
-    * `rankDir`. Cold-start semantics are the operator's: the codebook
-    * trains on the FIRST batch and freezes — after any stream prefix
-    * the snapshot equals `pqTopKIndexed` over a from-scratch index of
-    * the vectors so far built WITH THAT codebook (PipelineSpec).
-    * Replay safety as [[annIndexStream]] (per-batch ingest partitions,
-    * `batchId + 1`, dynamic overwrite, one writer per checkpoint
-    * lineage).
+  /** The frozen-model verdict screens ([[dsirScreenStream]] and its
+    * siblings): each batch is scored against reference data the stream
+    * never mutates, the verdicts overwrite `verdictDir/batch_id=N`, and
+    * old verdict dirs are pruned. There is no cross-batch state, so the
+    * dir overwrite is the whole effect and replays are trivially
+    * idempotent.
     */
-  def pqIndexStream(emb: DataFrame, indexPath: String,
-                    qVec: Array[Float], k: Int,
-                    rankDir: String, checkpointDir: String,
-                    m: Int = 4, codebookK: Int = 16, iters: Int = 3,
-                    dim: Int = 64, nlist: Int = 16, nprobe: Int = 2,
-                    trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    emb.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val once = batch.persist()
-          try {
-            graft.ext.Quantization.appendPqIndex(once, indexPath, m,
-              codebookK, iters, dim, nlist, ingestId = batchId + 1)
-            graft.ext.Quantization.pqTopKIndexed(once.sparkSession,
-                indexPath, qVec, k, nprobe)
-              .write.mode("overwrite").parquet(rankDir)
-          } finally { once.unpersist(); () }
-        }
-      }
-      .start()
+  private def verdictScreen(stream: DataFrame, verdictDir: String,
+                            checkpointDir: String, retainVerdictBatches: Int,
+                            trigger: Trigger)
+                           (score: DataFrame => DataFrame): StreamingQuery =
+    nonEmptyBatches(stream, checkpointDir, trigger, persist = false) {
+      (batch, batchId) =>
+        writeVerdicts(score(batch), verdictDir, batchId)
+        pruneVerdictDirs(batch.sparkSession, verdictDir, batchId,
+          retainVerdictBatches)
+    }
+
+  /** The growing-index dedup streams ([[minhashDedupStream]],
+    * [[containmentDedupStream]], [[simhashDedupStream]],
+    * [[semanticDedupStream]], [[curationStream]]): `screen` verdicts the
+    * batch against the standing index and the verdicts are written;
+    * the rows flagged `admit` are read back FROM WHAT WAS WRITTEN and
+    * `append` folds exactly those rows (left-semi on `key`) into the
+    * index under the batch's ingest id, so later batches dedup against
+    * them. Ordering is durable, not cached: the verdicts land before
+    * the index mutates, so a recomputation can never observe the
+    * post-append index. Then `compact` runs on the [[compactDue]]
+    * cadence and old verdict dirs are pruned.
+    */
+  private def indexDedup(stream: DataFrame, verdictDir: String,
+                         checkpointDir: String, compactEvery: Int,
+                         retainVerdictBatches: Int, trigger: Trigger,
+                         key: String = "doc_id", admit: String = "is_novel")
+                        (screen: DataFrame => DataFrame)
+                        (append: (DataFrame, Long) => Unit)
+                        (compact: SparkSession => Unit): StreamingQuery =
+    nonEmptyBatches(stream, checkpointDir, trigger, persist = true) {
+      (once, batchId) =>
+        import org.apache.spark.sql.functions.col
+        val spark = once.sparkSession
+        val written = writeVerdicts(screen(once), verdictDir, batchId)
+        val admitted = spark.read.parquet(written)
+          .filter(col(admit)).select(key)
+        append(once.join(admitted, Seq(key), "left_semi"), batchId + 1)
+        if (compactDue(batchId, compactEvery)) compact(spark)
+        pruneVerdictDirs(spark, verdictDir, batchId, retainVerdictBatches)
+    }
+
+  /** Overwrites `verdictDir/batch_id=N` with batch N's verdicts and
+    * returns that path.
+    */
+  private def writeVerdicts(verdicts: DataFrame, verdictDir: String,
+                            batchId: Long): String = {
+    val outDir = s"$verdictDir/batch_id=$batchId"
+    verdicts.write.mode("overwrite").parquet(outDir)
+    outDir
+  }
+
+  /** In-stream compaction cadence: every `compactEvery` batches, never
+    * at batch 0; `compactEvery` = 0 never. At a 10 s trigger an index
+    * gains 8,640 ingest partitions/day, and Bm25Drill measured an 11×
+    * query decay at just 122. Folding in-stream is safe precisely
+    * because foreachBatch is the index's single writer: folded-id
+    * replays no-op by the lifecycle contract, and a crash mid-fold
+    * resumes from staging.
+    */
+  private def compactDue(batchId: Long, compactEvery: Int): Boolean =
+    compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0
 
   /** Bounded retention for a per-batch verdict audit dir: deletes
     * `verdictDir/batch_id=K` for K ≤ currentBatch − retain. The verdict
@@ -366,7 +371,7 @@ object Pipeline {
     * reader/ETL over `verdictDir` — the usual audit-log contract);
     * `retain` = 0 disables and the caller owns retention entirely.
     */
-  private def pruneVerdictDirs(spark: org.apache.spark.sql.SparkSession,
+  private def pruneVerdictDirs(spark: SparkSession,
                                verdictDir: String, currentBatch: Long,
                                retain: Int): Unit =
     if (retain > 0) {
@@ -381,28 +386,96 @@ object Pipeline {
         }
     }
 
+  /** Streaming retrieval — the streaming twin of
+    * [[graft.ext.Retrieval.bm25Indexed]], the same batch/stream symmetry
+    * the engine shows for dedup and k-means applied to the inverted
+    * index: each micro-batch of documents is folded into the PERSISTED
+    * index ([[graft.ext.Retrieval.appendBm25Index]] — postings append
+    * into the bucketed layout, the 1-row stats merge by sum), then the
+    * standing query re-ranks against the now-current index and the
+    * top-k snapshot lands in `rankDir` (overwrite: it is a VIEW of the
+    * index, not a log). After any prefix of the stream, the snapshot is
+    * EXACTLY what the batch ranker returns over the documents ingested
+    * so far — PipelineSpec pins that over a two-batch replay. Replay
+    * safety is the [[batchSink]] contract.
+    *
+    * Scale: per trigger, work is (batch postings shuffle) + (query-
+    * bucket-pruned rank) — never a corpus re-scan. Same new-doc_ids
+    * contract as the append.
+    */
+  def bm25IndexStream(docs: DataFrame, indexPath: String,
+                      terms: Seq[String], k: Int, rankDir: String,
+                      checkpointDir: String,
+                      trigger: Trigger = Trigger.AvailableNow())
+      : StreamingQuery =
+    rankStream(docs, rankDir, checkpointDir, trigger)(
+      (b, ingest) => Retrieval.appendBm25Index(b, indexPath,
+        ingestId = ingest))(
+      Retrieval.bm25Indexed(_, indexPath, terms, k))
+
+  /** Streaming ANN ingest — [[bm25IndexStream]]'s twin for the vector
+    * index: each micro-batch of embeddings is folded into the persisted
+    * IVF index ([[graft.ext.Similarity.appendIvfIndex]] — index rows
+    * are independent, so the append is pure partitioned file adds) and
+    * the standing query vector re-ranks against the now-current index
+    * into `rankDir`. After any stream prefix the snapshot equals
+    * `annTopKIndexed` over a from-scratch index of the vectors ingested
+    * so far (PipelineSpec). Replay safety is the [[batchSink]]
+    * contract.
+    */
+  def annIndexStream(emb: DataFrame, indexPath: String,
+                     qVec: Array[Float], qNorm: Double, k: Int,
+                     rankDir: String, checkpointDir: String,
+                     nlist: Int = 16, dim: Int = 64, nprobe: Int = 2,
+                     trigger: Trigger = Trigger.AvailableNow())
+      : StreamingQuery =
+    rankStream(emb, rankDir, checkpointDir, trigger)(
+      (b, ingest) => Similarity.appendIvfIndex(b, indexPath, nlist, dim,
+        ingestId = ingest))(
+      Similarity.annTopKIndexed(_, indexPath, qVec, qNorm, k, nprobe))
+
+  /** Streaming PQ ingest — [[annIndexStream]]'s twin for the CODES
+    * index: each micro-batch of embeddings is encoded with the index's
+    * frozen codebook and folded into the persisted PQ index
+    * ([[graft.ext.Quantization.appendPqIndex]]); the standing query
+    * re-ranks by driver-table ADC against the now-current index into
+    * `rankDir`. Cold-start semantics are the operator's: the codebook
+    * trains on the FIRST batch and freezes — after any stream prefix
+    * the snapshot equals `pqTopKIndexed` over a from-scratch index of
+    * the vectors so far built WITH THAT codebook (PipelineSpec).
+    * Replay safety is the [[batchSink]] contract.
+    */
+  def pqIndexStream(emb: DataFrame, indexPath: String,
+                    qVec: Array[Float], k: Int,
+                    rankDir: String, checkpointDir: String,
+                    m: Int = 4, codebookK: Int = 16, iters: Int = 3,
+                    dim: Int = 64, nlist: Int = 16, nprobe: Int = 2,
+                    trigger: Trigger = Trigger.AvailableNow())
+      : StreamingQuery =
+    rankStream(emb, rankDir, checkpointDir, trigger)(
+      (b, ingest) => Quantization.appendPqIndex(b, indexPath, m, codebookK,
+        iters, dim, nlist, ingestId = ingest))(
+      Quantization.pqTopKIndexed(_, indexPath, qVec, k, nprobe))
+
   /** Incremental semantic dedup over a vector stream — the semantic
     * twin of [[dedupStream]]/[[dedupAgainstCorpus]], and SemDeDup's
     * production deployment shape: per micro-batch, screen incoming
     * vectors against the standing corpus in the persisted IVF index
     * ([[graft.ext.Similarity.semanticNovelAgainstIndex]] — cell-pruned,
     * never batch × corpus), land the per-vector verdicts in
-    * `verdictDir/batch_id=N` (dynamic per-batch dir, overwritten on
-    * replay; audit retention bounded by `retainVerdictBatches` — see
-    * [[pruneVerdictDirs]]), and fold ONLY the novel vectors into the
-    * index so later
-    * batches dedup against them. The index is the entire cross-batch
-    * state. Ordering is durable, not cached: verdicts are WRITTEN
-    * before the index mutates, then the novel set is read back from
-    * what was written — a recomputation can never observe the
-    * post-append index. A failure replay re-screens against an index
-    * that already holds the batch's novel members, finds them as their
-    * own matches, and appends nothing — the index converges (the
+    * `verdictDir/batch_id=N`, and fold ONLY the novel vectors into the
+    * index so later batches dedup against them — the [[indexDedup]]
+    * skeleton, keyed on `vec_id`, with no compaction. The no-corpus-yet
+    * gate (cold start, and the crash window between the empty-base
+    * commit and the first append) lives INSIDE the operator: no data →
+    * the whole batch is novel. A failure replay re-screens against an
+    * index that already holds the batch's novel members, finds them as
+    * their own matches, and appends nothing — the index converges (the
     * replayed batch's verdict rows then record the self-match, which is
     * the honest audit of the replay). Within-batch duplicates are both
     * admitted — intra-batch dedup is the batch operator's job upstream
     * ([[graft.ext.Similarity.semanticDedup]]), same contract as the
-    * exact-digest stream.
+    * exact-digest stream. Replay, retention: the [[batchSink]] contract.
     */
   def semanticDedupStream(embStream: DataFrame, indexPath: String,
                           verdictDir: String, checkpointDir: String,
@@ -411,35 +484,12 @@ object Pipeline {
                           retainVerdictBatches: Int = 0,
                           trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    embStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          import org.apache.spark.sql.functions._
-          val spark = batch.sparkSession
-          val once = batch.persist()
-          try {
-            // The no-corpus-yet gate (cold start, and the crash window
-            // between the empty-base commit and the first append) lives
-            // INSIDE the operator — no data → the whole batch is novel;
-            // the append below self-initializes the base.
-            val verdicts = graft.ext.Similarity.semanticNovelAgainstIndex(
-              once, indexPath, threshold, nprobe)
-            val outDir = s"$verdictDir/batch_id=$batchId"
-            verdicts.write.mode("overwrite").parquet(outDir)
-            val novel = spark.read.parquet(outDir)
-              .filter(col("is_novel")).select("vec_id")
-            graft.ext.Similarity.appendIvfIndex(
-              once.join(novel, Seq("vec_id"), "left_semi"),
-              indexPath, nlist, dim, ingestId = batchId + 1)
-            pruneVerdictDirs(spark, verdictDir, batchId,
-              retainVerdictBatches)
-          } finally { once.unpersist(); () }
-        }
-      }
-      .start()
+    indexDedup(embStream, verdictDir, checkpointDir, compactEvery = 0,
+        retainVerdictBatches, trigger, key = "vec_id")(
+      Similarity.semanticNovelAgainstIndex(_, indexPath, threshold, nprobe))(
+      (b, ingest) => Similarity.appendIvfIndex(b, indexPath, nlist, dim,
+        ingestId = ingest))(
+      _ => ())
 
   /** Streaming syntactic near-dup screen — the MinHash member of the
     * streaming dedup family, completing [[dedupStream]] (exact,
@@ -448,25 +498,20 @@ object Pipeline {
     * micro-batch of documents is screened against the PERSISTED MinHash
     * corpus index ([[graft.ext.Dedup.minhashNovelAgainstIndex]] —
     * band-bucket candidates, stored-set exact-Jaccard verify, corpus
-    * text never re-scanned), verdicts land in `verdictDir/batch_id=N`
-    * (an audit log with bounded retention — `retainVerdictBatches`,
-    * see [[pruneVerdictDirs]]; 0 = caller-owned),
+    * text never re-scanned), verdicts land in `verdictDir/batch_id=N`,
     * and the batch's novel docs fold into the index
     * ([[graft.ext.Dedup.appendMinhashIndex]]) so later batches dedup
-    * against them too. Same replay contract as the other index streams:
-    * appends run under ingest id `batchId + 1` (0 = base corpus) as
-    * dynamic partition overwrites, so foreachBatch's at-least-once
-    * replay rewrites instead of duplicating — the INDEX converges
-    * exactly-once per checkpoint lineage, streaming state zero (the
-    * index carries all cross-batch memory). Verdicts are NOT stable
-    * across crash replays (the [[semanticDedupStream]] contract): a
-    * crash between the append and the checkpoint commit replays the
-    * batch against an index that already holds its novel docs, and the
-    * rewritten `batch_id=N` verdicts then record those docs as
-    * non-novel SELF-matches (match_id = their own doc_id) — the honest
-    * audit of the replay, but consumers wanting replay-stable verdicts
-    * must filter self/current-ingest matches downstream. Cold start:
-    * an absent index means the first batch is wholly novel and
+    * against them too — the [[indexDedup]] skeleton, under the
+    * [[batchSink]] replay contract: the INDEX converges exactly-once
+    * per checkpoint lineage. Verdicts are NOT stable across crash
+    * replays (the [[semanticDedupStream]] contract): a crash between
+    * the append and the checkpoint commit replays the batch against an
+    * index that already holds its novel docs, and the rewritten
+    * `batch_id=N` verdicts then record those docs as non-novel
+    * SELF-matches (match_id = their own doc_id) — the honest audit of
+    * the replay, but consumers wanting replay-stable verdicts must
+    * filter self/current-ingest matches downstream. Cold start: an
+    * absent index means the first batch is wholly novel and
     * self-initializes the base.
     */
   def minhashDedupStream(docStream: DataFrame, indexPath: String,
@@ -476,47 +521,11 @@ object Pipeline {
                          retainVerdictBatches: Int = 0,
                          trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          import org.apache.spark.sql.functions._
-          val spark = batch.sparkSession
-          val once = batch.persist()
-          try {
-            val verdicts = graft.ext.Dedup.minhashNovelAgainstIndex(
-              once, indexPath, threshold)
-            val outDir = s"$verdictDir/batch_id=$batchId"
-            verdicts.write.mode("overwrite").parquet(outDir)
-            val novel = spark.read.parquet(outDir)
-              .filter(col("is_novel")).select("doc_id")
-            graft.ext.Dedup.appendMinhashIndex(
-              once.join(novel, Seq("doc_id"), "left_semi"),
-              indexPath, ingestId = batchId + 1)
-            // In-stream maintenance: at a 10 s trigger an index gains
-            // 8,640 ingest partitions/day, and Bm25Drill measured an
-            // 11× query decay at just 122 (shared lifecycle skeleton).
-            // compactEvery = N folds to base every N batches — safe
-            // HERE precisely because foreachBatch is the index's single
-            // writer: folded-id replays no-op by the lifecycle
-            // contract, and a crash mid-fold resumes from staging. 0
-            // (default) = external/manual compaction.
-            if (compactEvery > 0 && batchId > 0 &&
-                batchId % compactEvery == 0) {
-              graft.ext.Dedup.compactMinhashIndex(spark, indexPath); ()
-            }
-            // Verdict-dir retention on the same in-stream-maintenance
-            // rationale as compactEvery: the INDEX stopped growing per
-            // trigger in r10; this stops the verdict AUDIT dir doing it
-            // ([[pruneVerdictDirs]] — 0 = caller-owned retention).
-            pruneVerdictDirs(spark, verdictDir, batchId,
-              retainVerdictBatches)
-          } finally { once.unpersist(); () }
-        }
-      }
-      .start()
+    indexDedup(docStream, verdictDir, checkpointDir, compactEvery,
+        retainVerdictBatches, trigger)(
+      Dedup.minhashNovelAgainstIndex(_, indexPath, threshold))(
+      (b, ingest) => Dedup.appendMinhashIndex(b, indexPath, ingestId = ingest))(
+      Dedup.compactMinhashIndex(_, indexPath))
 
   /** Streaming DSIR quality screen — the streaming twin of
     * [[graft.ext.TextAnalysis.dsirWeightsIndexed]], and the
@@ -525,15 +534,13 @@ object Pipeline {
     * model (the ≤ buckets-row histogram index —
     * [[graft.ext.TextAnalysis.buildDsirIndex]]), gets a
     * `keep = mean_log_ratio ≥ minScore` verdict, and lands in
-    * `verdictDir/batch_id=N` (bounded retention via
-    * `retainVerdictBatches`, the shared [[pruneVerdictDirs]]
-    * contract). Unlike the dedup streams the model is FROZEN — a
-    * selection model that absorbed the stream it filters would drift
-    * toward whatever arrives — so there is no index mutation, no
-    * cross-batch state at all, and replays are trivially idempotent
-    * (the per-batch dir overwrite IS the whole effect). Retraining the
-    * target model is [[graft.ext.TextAnalysis.buildDsirIndex]] offline,
-    * never in-stream.
+    * `verdictDir/batch_id=N` ([[verdictScreen]]). Unlike the dedup
+    * streams the model is FROZEN — a selection model that absorbed the
+    * stream it filters would drift toward whatever arrives — so there
+    * is no index mutation, no cross-batch state at all, and replays are
+    * trivially idempotent. Retraining the target model is
+    * [[graft.ext.TextAnalysis.buildDsirIndex]] offline, never
+    * in-stream.
     */
   def dsirScreenStream(docStream: DataFrame, indexPath: String,
                        verdictDir: String, checkpointDir: String,
@@ -541,23 +548,12 @@ object Pipeline {
                        retainVerdictBatches: Int = 0,
                        trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          import org.apache.spark.sql.functions._
-          val spark = batch.sparkSession
-          graft.ext.TextAnalysis.dsirWeightsIndexed(spark, indexPath, batch)
-            .withColumn("keep", col("mean_log_ratio") >= minScore)
-            .write.mode("overwrite")
-            .parquet(s"$verdictDir/batch_id=$batchId")
-          pruneVerdictDirs(spark, verdictDir, batchId,
-            retainVerdictBatches)
-        }
-      }
-      .start()
+    verdictScreen(docStream, verdictDir, checkpointDir,
+        retainVerdictBatches, trigger) { batch =>
+      import org.apache.spark.sql.functions.col
+      TextAnalysis.dsirWeightsIndexed(batch.sparkSession, indexPath, batch)
+        .withColumn("keep", col("mean_log_ratio") >= minScore)
+    }
 
   /** Streaming containment screen — the cross-corpus containment
     * question at ingest time: each micro-batch screens against the
@@ -566,9 +562,8 @@ object Pipeline {
     * already contained in something the corpus holds"), verdicts land
     * in `verdictDir/batch_id=N`, and the docs NOT contained
     * (is_novel) append into the index under `ingest = batchId + 1` —
-    * the [[minhashDedupStream]] skeleton: batchId-keyed idempotent
-    * replays, optional in-stream compaction, bounded verdict
-    * retention. A contained doc never enters the index (admitting it
+    * the [[indexDedup]] skeleton under the [[batchSink]] replay
+    * contract. A contained doc never enters the index (admitting it
     * would let near-copies of held content accrete); novel docs grow
     * the standing corpus so later quotes of them ARE caught.
     */
@@ -579,46 +574,24 @@ object Pipeline {
                              retainVerdictBatches: Int = 0,
                              trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          import org.apache.spark.sql.functions._
-          val spark = batch.sparkSession
-          val once = batch.persist()
-          try {
-            val verdicts = graft.ext.Dedup.containmentAgainstIndex(
-              once, indexPath, threshold)
-            val outDir = s"$verdictDir/batch_id=$batchId"
-            verdicts.write.mode("overwrite").parquet(outDir)
-            val novel = spark.read.parquet(outDir)
-              .filter(col("is_novel")).select("doc_id")
-            graft.ext.Dedup.appendContainmentIndex(
-              once.join(novel, Seq("doc_id"), "left_semi"),
-              indexPath, ingestId = batchId + 1)
-            if (compactEvery > 0 && batchId > 0 &&
-                batchId % compactEvery == 0) {
-              graft.ext.Dedup.compactContainmentIndex(spark, indexPath); ()
-            }
-            pruneVerdictDirs(spark, verdictDir, batchId,
-              retainVerdictBatches)
-          } finally { once.unpersist(); () }
-        }
-      }
-      .start()
+    indexDedup(docStream, verdictDir, checkpointDir, compactEvery,
+        retainVerdictBatches, trigger)(
+      Dedup.containmentAgainstIndex(_, indexPath, threshold))(
+      (b, ingest) => Dedup.appendContainmentIndex(b, indexPath,
+        ingestId = ingest))(
+      Dedup.compactContainmentIndex(_, indexPath))
 
   /** Streaming semantic-outlier screen — the embedding-side member of
     * the frozen-model streaming family
     * ([[graft.ext.Similarity.outliersAgainstIndex]] per micro-batch
     * against the PERSISTED centroids + per-cell cosine moments):
     * verdict rows with assignment, z-score, and the outlier flag land
-    * in `verdictDir/batch_id=N`. Like [[dsirScreenStream]] the model
-    * is FROZEN — an outlier boundary that absorbed the stream it
-    * filters would drift toward whatever garbage arrives — so there is
-    * no cross-batch state and replays are trivially idempotent;
-    * refitting is [[graft.ext.Similarity.buildOutlierIndex]] offline.
+    * in `verdictDir/batch_id=N` ([[verdictScreen]]). Like
+    * [[dsirScreenStream]] the model is FROZEN — an outlier boundary
+    * that absorbed the stream it filters would drift toward whatever
+    * garbage arrives — so there is no cross-batch state and replays are
+    * trivially idempotent; refitting is
+    * [[graft.ext.Similarity.buildOutlierIndex]] offline.
     */
   def outlierScreenStream(embStream: DataFrame, indexPath: String,
                           verdictDir: String, checkpointDir: String,
@@ -626,21 +599,9 @@ object Pipeline {
                           retainVerdictBatches: Int = 0,
                           trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    embStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          graft.ext.Similarity.outliersAgainstIndex(batch, indexPath, z)
-            .write.mode("overwrite")
-            .parquet(s"$verdictDir/batch_id=$batchId")
-          pruneVerdictDirs(spark, verdictDir, batchId,
-            retainVerdictBatches)
-        }
-      }
-      .start()
+    verdictScreen(embStream, verdictDir, checkpointDir,
+        retainVerdictBatches, trigger)(
+      Similarity.outliersAgainstIndex(_, indexPath, z))
 
   /** Streaming curation composite — the whole incremental screen
     * ([[graft.ext.CorpusPrep.screenIncremental]]: row-local quality +
@@ -651,10 +612,9 @@ object Pipeline {
     * `verdictDir/batch_id=N`, and exactly the `kept` docs are admitted
     * to the standing MinHash index under `ingest = batchId + 1` — so
     * the next trigger's novelty screen already sees them. The
-    * [[minhashDedupStream]] skeleton throughout: batchId-keyed
-    * idempotent replays (the verdict dir overwrite + the lifecycle's
-    * dynamic partition overwrite), optional in-stream compaction,
-    * bounded verdict retention. The DSIR model, the eval-gram
+    * [[indexDedup]] skeleton throughout, under the [[batchSink]]
+    * replay contract; each configured index is appended and compacted
+    * independently replay-idempotent. The DSIR model, the eval-gram
     * contamination index, and the outlier model stay FROZEN
     * ([[dsirScreenStream]]'s rationale — reference state that absorbed
     * the stream it filters would drift); only the dedup indexes grow.
@@ -687,70 +647,45 @@ object Pipeline {
                      retainVerdictBatches: Int = 0,
                      trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          import org.apache.spark.sql.functions._
-          val spark = batch.sparkSession
-          val once = batch.persist()
-          try {
-            // Outlier screen rides the stream's own `embedding` column
-            // (the doc and its vector arrive together at ingest); the
-            // model — like the eval-gram and DSIR indexes — stays
-            // frozen, so screened batches never move the boundary.
-            val emb = outlierIndexPath.map { _ =>
-              require(once.columns.contains("embedding"),
-                "curationStream: outlierIndexPath set but the stream " +
-                  "carries no `embedding` column — the outlier screen " +
-                  "scores the batch's own vectors")
-              once.select(col("doc_id").as("vec_id"), col("embedding"))
-            }
-            // sorted = false: the per-batch verdict write needs no
-            // corpus-wide presentation sort (the oracle queries keep
-            // the default; PipelineSpec compares order-insensitively).
-            val verdicts = graft.ext.CorpusPrep.screenIncremental(
-              once, minhashIndexPath, blocklist, blocklistMaxFraction,
-              nearDupThreshold, dsirIndexPath, dsirMinScore,
-              containmentIndexPath, containmentThreshold,
-              simhashIndexPath, maxHamming,
-              contamIndexPath, contamMinShared, contamSpanMinRun,
-              neardupEvalIndexPath, neardupEvalThreshold,
-              emb, outlierIndexPath, outlierZ,
-              repetitionMaxDupFrac, gopherGate, sorted = false)
-            val outDir = s"$verdictDir/batch_id=$batchId"
-            verdicts.write.mode("overwrite").parquet(outDir)
-            val kept = spark.read.parquet(outDir)
-              .filter(col("kept")).select("doc_id")
-            // Kept docs enter EVERY configured standing index under the
-            // same batchId-keyed ingest, so all screens see them next
-            // trigger; each append is independently replay-idempotent.
-            val keptDocs = once.join(kept, Seq("doc_id"), "left_semi")
-            graft.ext.Dedup.appendMinhashIndex(
-              keptDocs, minhashIndexPath, ingestId = batchId + 1)
-            containmentIndexPath.foreach(p =>
-              graft.ext.Dedup.appendContainmentIndex(keptDocs, p,
-                ingestId = batchId + 1))
-            simhashIndexPath.foreach(p =>
-              graft.ext.Dedup.appendSimhashIndex(keptDocs, p,
-                ingestId = batchId + 1))
-            if (compactEvery > 0 && batchId > 0 &&
-                batchId % compactEvery == 0) {
-              graft.ext.Dedup.compactMinhashIndex(spark, minhashIndexPath)
-              containmentIndexPath.foreach(p =>
-                graft.ext.Dedup.compactContainmentIndex(spark, p))
-              simhashIndexPath.foreach(p =>
-                graft.ext.Dedup.compactSimhashIndex(spark, p))
-              ()
-            }
-            pruneVerdictDirs(spark, verdictDir, batchId,
-              retainVerdictBatches)
-          } finally { once.unpersist(); () }
-        }
+    indexDedup(docStream, verdictDir, checkpointDir, compactEvery,
+        retainVerdictBatches, trigger, admit = "kept") { once =>
+      import org.apache.spark.sql.functions.col
+      // Outlier screen rides the stream's own `embedding` column (the
+      // doc and its vector arrive together at ingest); the model — like
+      // the eval-gram and DSIR indexes — stays frozen, so screened
+      // batches never move the boundary.
+      val emb = outlierIndexPath.map { _ =>
+        require(once.columns.contains("embedding"),
+          "curationStream: outlierIndexPath set but the stream " +
+            "carries no `embedding` column — the outlier screen " +
+            "scores the batch's own vectors")
+        once.select(col("doc_id").as("vec_id"), col("embedding"))
       }
-      .start()
+      // sorted = false: the per-batch verdict write needs no
+      // corpus-wide presentation sort (the oracle queries keep the
+      // default; PipelineSpec compares order-insensitively).
+      CorpusPrep.screenIncremental(
+        once, minhashIndexPath, blocklist, blocklistMaxFraction,
+        nearDupThreshold, dsirIndexPath, dsirMinScore,
+        containmentIndexPath, containmentThreshold,
+        simhashIndexPath, maxHamming,
+        contamIndexPath, contamMinShared, contamSpanMinRun,
+        neardupEvalIndexPath, neardupEvalThreshold,
+        emb, outlierIndexPath, outlierZ,
+        repetitionMaxDupFrac, gopherGate, sorted = false)
+    } { (keptDocs, ingest) =>
+      // Kept docs enter EVERY configured standing index under the same
+      // ingest, so all screens see them next trigger.
+      Dedup.appendMinhashIndex(keptDocs, minhashIndexPath, ingestId = ingest)
+      containmentIndexPath.foreach(
+        Dedup.appendContainmentIndex(keptDocs, _, ingestId = ingest))
+      simhashIndexPath.foreach(
+        Dedup.appendSimhashIndex(keptDocs, _, ingestId = ingest))
+    } { spark =>
+      Dedup.compactMinhashIndex(spark, minhashIndexPath)
+      containmentIndexPath.foreach(Dedup.compactContainmentIndex(spark, _))
+      simhashIndexPath.foreach(Dedup.compactSimhashIndex(spark, _))
+    }
 
   /** Streaming SimHash dedup — the Hamming-radius novelty question at
     * ingest time, completing the indexed streaming family
@@ -759,11 +694,11 @@ object Pipeline {
     * each micro-batch screens against the persisted fingerprint index
     * ([[graft.ext.Dedup.simhashNovelAgainstIndex]]), verdicts land in
     * `verdictDir/batch_id=N`, and novel docs append their 16-byte
-    * fingerprints under `ingest = batchId + 1` — the same
-    * batchId-idempotent replays, optional in-stream compaction, and
-    * bounded verdict retention. A matched doc never enters the index
-    * (near-copies of held content must not accrete); novel docs grow
-    * the standing corpus so later near-copies of THEM are caught.
+    * fingerprints under `ingest = batchId + 1` — the [[indexDedup]]
+    * skeleton under the [[batchSink]] replay contract. A matched doc
+    * never enters the index (near-copies of held content must not
+    * accrete); novel docs grow the standing corpus so later near-copies
+    * of THEM are caught.
     */
   def simhashDedupStream(docStream: DataFrame, indexPath: String,
                          verdictDir: String, checkpointDir: String,
@@ -772,35 +707,11 @@ object Pipeline {
                          retainVerdictBatches: Int = 0,
                          trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          import org.apache.spark.sql.functions._
-          val spark = batch.sparkSession
-          val once = batch.persist()
-          try {
-            val verdicts = graft.ext.Dedup.simhashNovelAgainstIndex(
-              once, indexPath, maxHamming)
-            val outDir = s"$verdictDir/batch_id=$batchId"
-            verdicts.write.mode("overwrite").parquet(outDir)
-            val novel = spark.read.parquet(outDir)
-              .filter(col("is_novel")).select("doc_id")
-            graft.ext.Dedup.appendSimhashIndex(
-              once.join(novel, Seq("doc_id"), "left_semi"),
-              indexPath, ingestId = batchId + 1)
-            if (compactEvery > 0 && batchId > 0 &&
-                batchId % compactEvery == 0) {
-              graft.ext.Dedup.compactSimhashIndex(spark, indexPath); ()
-            }
-            pruneVerdictDirs(spark, verdictDir, batchId,
-              retainVerdictBatches)
-          } finally { once.unpersist(); () }
-        }
-      }
-      .start()
+    indexDedup(docStream, verdictDir, checkpointDir, compactEvery,
+        retainVerdictBatches, trigger)(
+      Dedup.simhashNovelAgainstIndex(_, indexPath, maxHamming))(
+      (b, ingest) => Dedup.appendSimhashIndex(b, indexPath, ingestId = ingest))(
+      Dedup.compactSimhashIndex(_, indexPath))
 
   /** Streaming line dedup — [[graft.ext.TextAnalysis.dedupLines]]'s
     * ingest-time twin, completing the line family's scan + index +
@@ -817,8 +728,8 @@ object Pipeline {
     * replay sequential [[graft.ext.TextAnalysis.dedupLines]] over the
     * concatenated history exactly (LineOpsSpec pins the equality).
     *
-    * Crash-replay here must be STRONGER than the siblings'
-    * batchId-idempotent appends: a replayed SimHash screen that sees
+    * Crash-replay here must be STRONGER than the [[batchSink]]
+    * contract the siblings rely on: a replayed SimHash screen that sees
     * the crashed attempt's own fingerprints merely flips an audit flag
     * to a filterable self-match, but a replayed line screen that sees
     * the batch's own hashes would rewrite every doc down to its blank
@@ -826,14 +737,15 @@ object Pipeline {
     * close the window, in trigger order: (1) [[graft.ext.TextAnalysis
     * .dropLineIngest]] deletes any `ingest = batchId + 1` partition a
     * crashed attempt left (uncommitted data no reader ever saw); (2)
-    * compaction runs BEFORE the append — after the hygiene delete, a
-    * fold can only ever see committed batches, so it can never smuggle
-    * this batch's hashes into the base; (3) the screen additionally
-    * excludes `ingest = batchId + 1` outright (belt to (1)'s
-    * suspenders). Replays are therefore byte-identical at every crash
-    * point (LineOpsSpec pins screen-after-append ≡ screen-before-append
-    * under the exclusion). Optional in-stream compaction and bounded
-    * verdict retention as in the sibling dedup streams.
+    * compaction runs BEFORE the screen and append — after the hygiene
+    * delete, a fold can only ever see committed batches, so it can
+    * never smuggle this batch's hashes into the base; (3) the screen
+    * additionally excludes `ingest = batchId + 1` outright (belt to
+    * (1)'s suspenders). Replays are therefore byte-identical at every
+    * crash point (LineOpsSpec pins screen-after-append ≡
+    * screen-before-append under the exclusion). That order is why this
+    * stream is not an [[indexDedup]]: it shares only the builder, the
+    * verdict path, the compaction cadence and retention.
     */
   def lineDedupStream(docStream: DataFrame, indexPath: String,
                       verdictDir: String, checkpointDir: String,
@@ -841,57 +753,42 @@ object Pipeline {
                       retainVerdictBatches: Int = 0,
                       trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val once = batch.persist()
-          try {
-            // Checkpoint↔index pairing guard: the hygiene delete below
-            // treats `ingest = batchId + 1` as uncommitted crash
-            // leftover, which is only true when THIS checkpoint's batch
-            // counter produced the index's ingests. A reset checkpoint
-            // over a progressed index would let batch 0 delete (and the
-            // screen exclude) committed data — fail loudly instead.
-            // (Residual boundary: an old run that committed ONLY batch 0
-            // is indistinguishable from a crashed attempt; the
-            // checkpoint/index pairing is a hard contract.)
-            val linesDir = new org.apache.hadoop.fs.Path(s"$indexPath/lines")
-            val lfs = linesDir.getFileSystem(
-              spark.sparkContext.hadoopConfiguration)
-            val maxSeen = (graft.ext.IndexStamp.ingestIds(lfs, linesDir) ++
-              graft.ext.IndexStamp.compactedIds(lfs,
-                new org.apache.hadoop.fs.Path(indexPath)))
-              .foldLeft(-1L)(math.max)
-            require(maxSeen <= batchId + 1,
-              s"lineDedupStream: index at $indexPath holds ingest " +
-                s"$maxSeen but this stream's batch counter is at " +
-                s"$batchId — the checkpoint does not pair with this " +
-                "index (was it reset?); refusing the hygiene delete " +
-                "that would destroy committed index data")
-            // Crash-leftover hygiene + compact BEFORE screen and append
-            // (see scaladoc: measures (1) and (2)).
-            graft.ext.TextAnalysis.dropLineIngest(spark, indexPath,
-              batchId + 1)
-            if (compactEvery > 0 && batchId > 0 &&
-                batchId % compactEvery == 0) {
-              graft.ext.TextAnalysis.compactLineIndex(spark, indexPath); ()
-            }
-            graft.ext.TextAnalysis.dedupLinesAgainstIndex(once, indexPath,
-                excludeIngest = Some(batchId + 1))
-              .write.mode("overwrite")
-              .parquet(s"$verdictDir/batch_id=$batchId")
-            graft.ext.TextAnalysis.appendLineIndex(once, indexPath,
-              ingestId = batchId + 1)
-            pruneVerdictDirs(spark, verdictDir, batchId,
-              retainVerdictBatches)
-          } finally { once.unpersist(); () }
-        }
-      }
-      .start()
+    nonEmptyBatches(docStream, checkpointDir, trigger, persist = true) {
+      (once, batchId) =>
+        val spark = once.sparkSession
+        val ingest = batchId + 1
+        // Checkpoint↔index pairing guard: the hygiene delete below
+        // treats `ingest = batchId + 1` as uncommitted crash leftover,
+        // which is only true when THIS checkpoint's batch counter
+        // produced the index's ingests. A reset checkpoint over a
+        // progressed index would let batch 0 delete (and the screen
+        // exclude) committed data — fail loudly instead. (Residual
+        // boundary: an old run that committed ONLY batch 0 is
+        // indistinguishable from a crashed attempt; the
+        // checkpoint/index pairing is a hard contract.)
+        val linesDir = new org.apache.hadoop.fs.Path(s"$indexPath/lines")
+        val lfs = linesDir.getFileSystem(
+          spark.sparkContext.hadoopConfiguration)
+        val maxSeen = (graft.ext.IndexStamp.ingestIds(lfs, linesDir) ++
+          graft.ext.IndexStamp.compactedIds(lfs,
+            new org.apache.hadoop.fs.Path(indexPath)))
+          .foldLeft(-1L)(math.max)
+        require(maxSeen <= ingest,
+          s"lineDedupStream: index at $indexPath holds ingest " +
+            s"$maxSeen but this stream's batch counter is at " +
+            s"$batchId — the checkpoint does not pair with this " +
+            "index (was it reset?); refusing the hygiene delete " +
+            "that would destroy committed index data")
+        // Crash-leftover hygiene + compact BEFORE screen and append
+        // (see scaladoc: measures (1) and (2)).
+        TextAnalysis.dropLineIngest(spark, indexPath, ingest)
+        if (compactDue(batchId, compactEvery))
+          TextAnalysis.compactLineIndex(spark, indexPath)
+        writeVerdicts(TextAnalysis.dedupLinesAgainstIndex(once, indexPath,
+          excludeIngest = Some(ingest)), verdictDir, batchId)
+        TextAnalysis.appendLineIndex(once, indexPath, ingestId = ingest)
+        pruneVerdictDirs(spark, verdictDir, batchId, retainVerdictBatches)
+    }
 
   /** Streaming blocklist gate — the streaming twin of
     * [[graft.ext.TextAnalysis.blocklistGate]], completing the row-local
@@ -899,12 +796,11 @@ object Pipeline {
     * each micro-batch gets per-doc token counts, blocked fraction, and
     * a `keep` verdict against a FIXED blocklist (a plan literal inside
     * one codegen'd filter lambda — no state, no join, no shuffle), and
-    * lands in `verdictDir/batch_id=N` with the shared bounded-retention
-    * contract. Like the DSIR screen the reference data is frozen: a
-    * blocklist is policy, never derived from the stream it filters, so
-    * replays are trivially idempotent (the per-batch dir overwrite IS
-    * the whole effect). PipelineSpec pins batch equivalence — the
-    * stream adds delivery, not semantics.
+    * lands in `verdictDir/batch_id=N` ([[verdictScreen]]). Like the
+    * DSIR screen the reference data is frozen: a blocklist is policy,
+    * never derived from the stream it filters, so replays are trivially
+    * idempotent. PipelineSpec pins batch equivalence — the stream adds
+    * delivery, not semantics.
     */
   def blocklistScreenStream(docStream: DataFrame, blocklist: Seq[String],
                             verdictDir: String, checkpointDir: String,
@@ -912,34 +808,22 @@ object Pipeline {
                             retainVerdictBatches: Int = 0,
                             trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          graft.ext.TextAnalysis.blocklistGate(batch, blocklist, maxFraction)
-            .write.mode("overwrite")
-            .parquet(s"$verdictDir/batch_id=$batchId")
-          pruneVerdictDirs(spark, verdictDir, batchId,
-            retainVerdictBatches)
-        }
-      }
-      .start()
+    verdictScreen(docStream, verdictDir, checkpointDir,
+        retainVerdictBatches, trigger)(
+      TextAnalysis.blocklistGate(_, blocklist, maxFraction))
 
   /** Streaming contamination screen — the standalone twin of the
     * composite's stage ([[graft.ext.Contamination
     * .contaminationAgainstIndex]]): each micro-batch is verdicted
     * against the PERSISTED eval-gram index, verdicts land in
-    * `verdictDir/batch_id=N`. The [[dsirScreenStream]] discipline: the
-    * eval suite is reference data, FROZEN with respect to the stream
-    * it filters (new benchmarks arrive via [[graft.ext.Contamination
-    * .appendEvalIndex]], an offline act), so the screen is stateless
-    * and replays are trivially idempotent — the per-batch dir
-    * overwrite is the whole effect. Stop-gram pruning rides the stored
-    * eval-side df cap, so a doc's verdict never depends on its
-    * trigger-mates. PipelineSpec pins batch ≡ stream.
+    * `verdictDir/batch_id=N` ([[verdictScreen]]). The
+    * [[dsirScreenStream]] discipline: the eval suite is reference data,
+    * FROZEN with respect to the stream it filters (new benchmarks
+    * arrive via [[graft.ext.Contamination.appendEvalIndex]], an offline
+    * act), so the screen is stateless and replays are trivially
+    * idempotent. Stop-gram pruning rides the stored eval-side df cap,
+    * so a doc's verdict never depends on its trigger-mates.
+    * PipelineSpec pins batch ≡ stream.
     *
     * UPGRADE NOTE (r15): the screen fails CLOSED — a missing eval
     * index throws inside foreachBatch instead of verdicting all-clean
@@ -955,33 +839,21 @@ object Pipeline {
                                 retainVerdictBatches: Int = 0,
                                 trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          graft.ext.Contamination.contaminationAgainstIndex(
-              batch, indexPath, minShared, sorted = false)
-            .write.mode("overwrite")
-            .parquet(s"$verdictDir/batch_id=$batchId")
-          pruneVerdictDirs(spark, verdictDir, batchId,
-            retainVerdictBatches)
-        }
-      }
-      .start()
+    verdictScreen(docStream, verdictDir, checkpointDir,
+        retainVerdictBatches, trigger)(
+      Contamination.contaminationAgainstIndex(_, indexPath, minShared,
+        sorted = false))
 
   /** Streaming SPAN-contamination screen — [[contaminationScreenStream]]
     * with the consecutive-overlap rule ([[graft.ext.Contamination
     * .spanContaminationAgainstIndex]]): each micro-batch's docs are
     * verdicted by their longest contiguous token run shared with the
-    * frozen eval suite. Stateless, replay-idempotent (per-batch dir
-    * overwrite), the eval index frozen with respect to the stream it
-    * filters — the family discipline throughout. PipelineSpec pins
-    * batch ≡ stream. Fails closed on a missing index like the whole
-    * family: build/ensure the eval index BEFORE starting the query
-    * (see [[contaminationScreenStream]]'s upgrade note).
+    * frozen eval suite. Stateless, replay-idempotent
+    * ([[verdictScreen]]), the eval index frozen with respect to the
+    * stream it filters — the family discipline throughout. PipelineSpec
+    * pins batch ≡ stream. Fails closed on a missing index like the
+    * whole family: build/ensure the eval index BEFORE starting the
+    * query (see [[contaminationScreenStream]]'s upgrade note).
     */
   def spanContaminationScreenStream(docStream: DataFrame, indexPath: String,
                                     verdictDir: String, checkpointDir: String,
@@ -989,31 +861,19 @@ object Pipeline {
                                     retainVerdictBatches: Int = 0,
                                     trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          graft.ext.Contamination.spanContaminationAgainstIndex(
-              batch, indexPath, minRunTokens, sorted = false)
-            .write.mode("overwrite")
-            .parquet(s"$verdictDir/batch_id=$batchId")
-          pruneVerdictDirs(spark, verdictDir, batchId,
-            retainVerdictBatches)
-        }
-      }
-      .start()
+    verdictScreen(docStream, verdictDir, checkpointDir,
+        retainVerdictBatches, trigger)(
+      Contamination.spanContaminationAgainstIndex(_, indexPath,
+        minRunTokens, sorted = false))
 
   /** Streaming FUZZY-contamination screen — [[contaminationScreenStream]]
     * with the near-dup rule ([[graft.ext.Contamination
     * .neardupContaminationAgainstIndex]]): each micro-batch's docs are
     * verdicted by MinHash Jaccard against the FROZEN eval-suite MinHash
     * index, catching the paraphrased benchmark copy both gram rules
-    * miss. Stateless, replay-idempotent (per-batch dir overwrite), the
-    * eval index frozen with respect to the stream it filters — the
-    * family discipline throughout; fails closed on a missing index
+    * miss. Stateless, replay-idempotent ([[verdictScreen]]), the eval
+    * index frozen with respect to the stream it filters — the family
+    * discipline throughout; fails closed on a missing index
     * (build/ensure [[graft.ext.Dedup.buildMinhashIndex]] over the eval
     * suite BEFORE starting the query — see
     * [[contaminationScreenStream]]'s upgrade note). Per-trigger cost:
@@ -1030,22 +890,10 @@ object Pipeline {
                                        trigger: Trigger =
                                          Trigger.AvailableNow())
       : StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          graft.ext.Contamination.neardupContaminationAgainstIndex(
-              batch, indexPath, threshold, sorted = false)
-            .write.mode("overwrite")
-            .parquet(s"$verdictDir/batch_id=$batchId")
-          pruneVerdictDirs(spark, verdictDir, batchId,
-            retainVerdictBatches)
-        }
-      }
-      .start()
+    verdictScreen(docStream, verdictDir, checkpointDir,
+        retainVerdictBatches, trigger)(
+      Contamination.neardupContaminationAgainstIndex(_, indexPath,
+        threshold, sorted = false))
 
   /** Streaming k-means scoring — the streaming twin of
     * [[graft.ext.Similarity.kmeansClusters]]: incoming embeddings are
@@ -1061,7 +909,6 @@ object Pipeline {
   def scoreEmbeddings(embStream: DataFrame,
                       cs: Seq[Seq[Float]]): DataFrame = {
     import org.apache.spark.sql.functions._
-    import graft.ext.Similarity
     val centLit = typedLit(cs)
     embStream.select(col("vec_id"),
       Similarity.cellFor(col("embedding"), cs).as("cell"),

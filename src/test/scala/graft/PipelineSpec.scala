@@ -1335,4 +1335,127 @@ class PipelineSpec extends AnyFunSuite {
       .map(_.getLong(0)).sorted
     assert(indexed.toSeq === Seq(0L, 1L, 11L, 20L))
   }
+
+  test("an empty micro-batch commits through every index and verdict stream and writes nothing") {
+    // Each stream starts from the index state its own test above uses
+    // (under `idx` in the stream's dir), then runs one empty batch: the
+    // batch must commit without a `batch_id=` verdict dir, a rank
+    // snapshot or any change to the index.
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Encoder
+    import graft.ext.{Contamination, Dedup, Similarity, TextAnalysis}
+    val now = Trigger.ProcessingTime("0 seconds")
+    def text(tag: String, n: Int) = (1 to n).map(i => s"$tag$i").mkString(" ")
+    def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    val qVec = Array(1f, 0f, 0f, 0f)
+    def emb(id: Long): Array[Float] = {
+      val r = new scala.util.Random(id)
+      Array.tabulate(64)(j => (if (j == 0) 10f else 0f) +
+        (r.nextFloat() * 2 - 1) * 0.01f)
+    }
+    val noIndex = (_: String) => ()
+    // (stream, carries vectors?, index state, start(stream, dir))
+    val streams = Seq[(String, Boolean, String => Unit,
+        (DataFrame, String) => StreamingQuery)](
+      ("bm25IndexStream", false, noIndex, (s, d) =>
+        Pipeline.bm25IndexStream(s, s"$d/idx", Seq("cat", "fish"), 10,
+          s"$d/rank", s"$d/ckpt", now)),
+      ("annIndexStream", true, noIndex, (s, d) =>
+        Pipeline.annIndexStream(s, s"$d/idx", qVec, 1.0, 5, s"$d/rank",
+          s"$d/ckpt", nlist = 4, dim = 4, trigger = now)),
+      ("pqIndexStream", true, noIndex, (s, d) =>
+        Pipeline.pqIndexStream(s, s"$d/idx", qVec, 5, s"$d/rank", s"$d/ckpt",
+          m = 2, codebookK = 4, iters = 2, dim = 4, nlist = 4, trigger = now)),
+      ("semanticDedupStream", true, noIndex, (s, d) =>
+        Pipeline.semanticDedupStream(s, s"$d/idx", s"$d/verdicts",
+          s"$d/ckpt", nlist = 4, dim = 4, nprobe = 4,
+          retainVerdictBatches = 2, trigger = now)),
+      ("minhashDedupStream", false, noIndex, (s, d) =>
+        Pipeline.minhashDedupStream(s, s"$d/idx", s"$d/verdicts", s"$d/ckpt",
+          trigger = now)),
+      ("containmentDedupStream", false, noIndex, (s, d) =>
+        Pipeline.containmentDedupStream(s, s"$d/idx", s"$d/verdicts",
+          s"$d/ckpt", compactEvery = 2, trigger = now)),
+      ("simhashDedupStream", false, noIndex, (s, d) =>
+        Pipeline.simhashDedupStream(s, s"$d/idx", s"$d/verdicts",
+          s"$d/ckpt", compactEvery = 2, trigger = now)),
+      ("curationStream", false, d => {
+          val seed = docs((0L, text("heldtext", 30)))
+          Dedup.buildMinhashIndex(seed, s"$d/idx")
+          Dedup.buildContainmentIndex(seed, s"$d/idx-contain")
+          Dedup.buildSimhashIndex(seed, s"$d/idx-simhash")
+        }, (s, d) =>
+        Pipeline.curationStream(s, s"$d/idx", s"$d/verdicts", s"$d/ckpt",
+          blocklist = Seq("badword"),
+          containmentIndexPath = Some(s"$d/idx-contain"),
+          simhashIndexPath = Some(s"$d/idx-simhash"),
+          compactEvery = 2, trigger = now)),
+      ("lineDedupStream", false, noIndex, (s, d) =>
+        Pipeline.lineDedupStream(s, s"$d/idx", s"$d/verdicts", s"$d/ckpt",
+          compactEvery = 2, trigger = now)),
+      ("dsirScreenStream", false, d =>
+        TextAnalysis.buildDsirIndex(docs(
+          (0L, "spark shuffle join spark shuffle join"),
+          (1L, "spark join agg shuffle broadcast exchange")), s"$d/idx"),
+        (s, d) => Pipeline.dsirScreenStream(s, s"$d/idx", s"$d/verdicts",
+          s"$d/ckpt", retainVerdictBatches = 2, trigger = now)),
+      ("outlierScreenStream", true, d =>
+        Similarity.buildOutlierIndex((0L until 200L)
+          .map(i => (i, 0, emb(i).toSeq)).toDF("vec_id", "label", "embedding"),
+          s"$d/idx"),
+        (s, d) => Pipeline.outlierScreenStream(s, s"$d/idx", s"$d/verdicts",
+          s"$d/ckpt", trigger = now)),
+      ("blocklistScreenStream", false, noIndex, (s, d) =>
+        Pipeline.blocklistScreenStream(s, Seq("bad", "worse"),
+          s"$d/verdicts", s"$d/ckpt", maxFraction = 0.25,
+          retainVerdictBatches = 2, trigger = now)),
+      ("contaminationScreenStream", false, d =>
+        Contamination.buildEvalIndex(docs(
+          (1L, "alpha beta gamma delta epsilon zeta eta theta")), s"$d/idx"),
+        (s, d) => Pipeline.contaminationScreenStream(s, s"$d/idx",
+          s"$d/verdicts", s"$d/ckpt", trigger = now)),
+      ("spanContaminationScreenStream", false, d =>
+        Contamination.buildEvalIndex(docs(
+          (1L, "alpha beta gamma delta epsilon zeta eta theta")), s"$d/idx"),
+        (s, d) => Pipeline.spanContaminationScreenStream(s, s"$d/idx",
+          s"$d/verdicts", s"$d/ckpt", minRunTokens = 8, trigger = now)),
+      ("neardupContaminationScreenStream", false, d =>
+        Dedup.buildMinhashIndex(docs((1L,
+          (1 to 60).map(i => s"benchtok$i").mkString(" "))), s"$d/idx"),
+        (s, d) => Pipeline.neardupContaminationScreenStream(s, s"$d/idx",
+          s"$d/verdicts", s"$d/ckpt", trigger = now)))
+    assert(streams.size == 15)
+    def emptyBatch[A: Encoder](cols: Seq[String],
+                               start: DataFrame => StreamingQuery) = {
+      val source = MemoryStream[A](implicitly[Encoder[A]], spark.sqlContext)
+      val query = start(source.toDF().toDF(cols: _*))
+      try {
+        source.addData()
+        query.processAllAvailable()
+        query.recentProgress.toSeq
+      } finally query.stop()
+    }
+    // Everything the stream owns except its checkpoint.
+    def written(dir: String) = {
+      val root = java.nio.file.Paths.get(dir)
+      Files.walk(root).iterator().asScala.map(p => root.relativize(p).toString)
+        .filterNot(_.startsWith("ckpt")).toSeq.sorted
+    }
+    for ((name, vectors, index, start) <- streams) {
+      val dir = Files.createTempDirectory(s"empty-$name").toString
+      index(dir)
+      val before = written(dir)
+      val progress =
+        if (vectors)
+          emptyBatch[(Long, Int, Seq[Float])](
+            Seq("vec_id", "label", "embedding"), start(_, dir))
+        else emptyBatch[(Long, String)](Seq("doc_id", "text"), start(_, dir))
+      assert(progress.exists(p => p.batchId == 0 && p.numInputRows == 0) &&
+        new java.io.File(s"$dir/ckpt/commits/0").exists, s"$name: not committed")
+      val after = written(dir)
+      assert(!after.exists(_.contains("batch_id=")), s"$name: $after")
+      assert(!after.exists(_.startsWith("rank")), s"$name: $after")
+      assert(after == before, name)
+    }
+  }
 }

@@ -183,7 +183,7 @@ class QuantizationSpec extends AnyFunSuite {
       .toString + "/idx"
     Quantization.buildPqIndex(clustered, dir, trained, dim = 8, nlist = 8)
     val qVec = clustered.filter(col("vec_id") === 0L)
-      .select("embedding").head.getSeq[Float](0).toArray
+      .select("embedding").head().getSeq[Float](0).toArray
     val indexed = Quantization.pqRerankIndexedAuto(spark, dir, clustered,
       qVec, k = 10, nprobe = 8).collect().toSeq
     val inframe = Quantization.pqRerankAuto(clustered, trained,
@@ -200,7 +200,7 @@ class QuantizationSpec extends AnyFunSuite {
       .toString + "/idx"
     Quantization.buildPqIndex(clustered, dir, trained, dim = 8, nlist = 8)
     val qVec = clustered.filter(col("vec_id") === 0L)
-      .select("embedding").head.getSeq[Float](0).toArray
+      .select("embedding").head().getSeq[Float](0).toArray
     def rows() = Quantization.pqTopKIndexed(spark, dir, qVec, k = 10,
       nprobe = 8).collect().map(_.toSeq).toSeq
     val direct = rows()
@@ -257,7 +257,7 @@ class QuantizationSpec extends AnyFunSuite {
       .toString + "/idx"
     Quantization.buildPqIndex(clustered, dir, trained, dim = 8, nlist = 8)
     val qVec = clustered.filter(col("vec_id") === 0L)
-      .select("embedding").head.getSeq[Float](0).toArray
+      .select("embedding").head().getSeq[Float](0).toArray
     val indexed = Quantization.pqRerankIndexed(spark, dir, clustered, qVec,
       k = 10, kCand = 30, nprobe = 8).collect().toSeq
     val inframe = Quantization.pqRerank(clustered, trained, queryId = 0L,
@@ -276,7 +276,7 @@ class QuantizationSpec extends AnyFunSuite {
     // The codebook round-trips the side table exactly.
     assert(Quantization.loadBooks(spark, dir) == trained)
     val qVec = clustered.filter(col("vec_id") === 0L)
-      .select("embedding").head.getSeq[Float](0).toArray
+      .select("embedding").head().getSeq[Float](0).toArray
     val indexed = Quantization.pqTopKIndexed(spark, dir, qVec, k = 10,
       nprobe = 3)
     val inframe = Quantization.pqTopKIvf(clustered, trained, queryId = 0L,
@@ -339,7 +339,7 @@ class QuantizationSpec extends AnyFunSuite {
     Quantization.appendPqIndex(rest, inc, ingestId = 1L)
     assert(rows(inc) == rows(full))
     val qVec = clustered.filter(col("vec_id") === 0L)
-      .select("embedding").head.getSeq[Float](0).toArray
+      .select("embedding").head().getSeq[Float](0).toArray
     assert(Quantization.pqTopKIndexed(spark, inc, qVec, k = 10, nprobe = 3)
         .collect().toSeq ===
       Quantization.pqTopKIndexed(spark, full, qVec, k = 10, nprobe = 3)

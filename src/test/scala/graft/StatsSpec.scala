@@ -131,7 +131,7 @@ class StatsSpec extends AnyFunSuite {
     // with the exact global distinct within HLL error.
     val globalExact = docs
       .select(explode(split(trim(col("text")), "\\s+")).as("t"))
-      .agg(countDistinct("t")).head.getLong(0)
+      .agg(countDistinct("t")).head().getLong(0)
     assert(math.abs(out("ALL") - globalExact) / globalExact < 0.05)
   }
 
@@ -154,7 +154,7 @@ class StatsSpec extends AnyFunSuite {
     exactPer.foreach { case (lang, n) => assert(checked(lang)._2 === n) }
     val globalExact = docs
       .select(explode(split(trim(col("text")), "\\s+")).as("t"))
-      .agg(countDistinct("t")).head.getLong(0)
+      .agg(countDistinct("t")).head().getLong(0)
     assert(checked("ALL")._2 === globalExact)
     // The ≤2% estimate flag holds everywhere on this corpus.
     checked.foreach { case (lang, (_, _, ok)) => assert(ok, lang) }
