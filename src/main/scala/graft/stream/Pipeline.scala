@@ -8,7 +8,7 @@ import graft.ext.{Contamination, CorpusPrep, Dedup, Quantization, Retrieval,
   Similarity, TextAnalysis}
 import graft.ingest.Json
 import graft.model.Schemas
-import graft.warehouse.Warehouse
+import graft.warehouse.{Warehouse, WarehouseSink}
 
 /** Keyed state carried across micro-batches by
   * [[Pipeline.vendorRunningTotals]].
@@ -103,13 +103,13 @@ object Pipeline {
           sum(col("fare_amount")).as("fare_sum")))
   }
 
-  /** The one `foreachBatch` builder every sink in this object starts
-    * through: `stream` is handed to `body` once per micro-batch with
-    * its batch id, and offsets are checkpointed under `checkpointDir`.
-    * The warehouse sinks ([[start]], [[startIdempotent]]) pass
-    * [[transform]] straight in, one job per trigger: an empty
-    * micro-batch needs no skip there, because a partitioned write of
-    * zero rows creates no data files.
+  /** The one `foreachBatch` builder every sink in this object but
+    * [[startIdempotent]] starts through: `stream` is handed to `body`
+    * once per micro-batch with its batch id, and offsets are
+    * checkpointed under `checkpointDir`. The plain warehouse sink
+    * ([[start]]) passes [[transform]] straight in, one job per trigger:
+    * an empty micro-batch needs no skip there, because a partitioned
+    * write of zero rows creates no data files.
     *
     * The index and verdict streams reach it through [[nonEmptyBatches]]
     * and share one replay contract:
@@ -153,20 +153,29 @@ object Pipeline {
       Warehouse.appendTrips(batch, warehousePath))
 
   /** [[start]] with the effectively-once sink: each micro-batch lands in
-    * its own `batch_id=` directory via dynamic overwrite
-    * ([[graft.warehouse.Warehouse.appendTripsIdempotent]]), so replays
-    * after failure overwrite instead of duplicating — the T4 upgrade path
-    * SURVEY §2.6 names. The batch id is in the path, not in the plan, so
-    * a steady trigger reuses the write's generated code; with the
-    * session's `file:` filesystem ([[graft.functions.GraftExtensions]])
-    * it forks no process either (PipelineSpec pins both).
+    * its own `batch_id=` directory, and a replay after failure replaces
+    * the dates it carries instead of duplicating them — the T4 upgrade
+    * path SURVEY §2.6 names. The stream writes through
+    * [[graft.warehouse.WarehouseSink]] inside its own micro-batch plan,
+    * not through [[batchSink]]: one job per trigger, whose tasks read
+    * the Hadoop job conf from one broadcast instead of each
+    * deserializing a copy, and the same commit
+    * [[graft.warehouse.Warehouse.appendTripsIdempotent]] runs. The batch
+    * id is in the path, not in the plan, so a steady trigger reuses the
+    * write's generated code; with the session's `file:` filesystem
+    * ([[graft.functions.GraftExtensions]]) it forks no process either
+    * (PipelineSpec pins both).
     */
   def startIdempotent(raw: DataFrame, warehousePath: String,
                       checkpointDir: String,
                       trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
       : StreamingQuery =
-    batchSink(transform(raw), checkpointDir, trigger)((batch, batchId) =>
-      Warehouse.appendTripsIdempotent(batch, warehousePath, batchId))
+    Warehouse.withPickupDate(transform(raw)).writeStream
+      .format(classOf[WarehouseSink].getName)
+      .outputMode("append")
+      .trigger(trigger)
+      .option("checkpointLocation", checkpointDir)
+      .start(warehousePath)
 
   /** T5 upgrade path — event-time hourly aggregation with a watermark:
     * the streaming form of [[graft.agg.Analytics.hourlyStatistics]]. State
@@ -256,19 +265,19 @@ object Pipeline {
     * micro-batch is skipped, so it commits with no verdict dir, no rank
     * snapshot and no index ingest. With `persist`, the batch is cached
     * for the body's several passes (screen, read-back join, append) and
-    * released after it.
+    * released after it; the emptiness probe then reads the cache too,
+    * so each input row is computed once.
     */
   private def nonEmptyBatches(stream: DataFrame, checkpointDir: String,
                               trigger: Trigger, persist: Boolean)
                              (body: (DataFrame, Long) => Unit)
       : StreamingQuery =
     batchSink(stream, checkpointDir, trigger) { (batch, batchId) =>
-      if (!batch.isEmpty) {
-        if (!persist) body(batch, batchId)
-        else {
-          val once = batch.persist()
-          try body(once, batchId) finally { once.unpersist(); () }
-        }
+      if (!persist) { if (!batch.isEmpty) body(batch, batchId) }
+      else {
+        val once = batch.persist()
+        try if (!once.isEmpty) body(once, batchId)
+        finally { once.unpersist(); () }
       }
     }
 

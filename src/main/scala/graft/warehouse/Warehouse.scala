@@ -21,11 +21,14 @@ object Warehouse {
     * date-partitioned. `pickup_date` is derived here so callers write the
     * 12-column contract of [[graft.model.Schemas.warehouseTrips]].
     */
-  def appendTrips(df: DataFrame, path: String): Unit = df
-    .withColumn("pickup_date", to_date(col("pickup_datetime")))
+  def appendTrips(df: DataFrame, path: String): Unit = withPickupDate(df)
     .write.mode("append")
     .partitionBy("pickup_date")
     .parquet(path)
+
+  /** The warehouse partition key, derived from `pickup_datetime`. */
+  private[graft] def withPickupDate(df: DataFrame): DataFrame =
+    df.withColumn(WarehouseSink.PartitionColumn, to_date(col("pickup_datetime")))
 
   /** S4-replacement — analytic reads come straight off parquet; partition
     * pruning on `pickup_date` replaces the pickup_datetime index.
@@ -34,19 +37,19 @@ object Warehouse {
     spark.read.parquet(path)
 
   /** T4 upgrade path — effectively-once sink: the batch lands in its own
-    * `batch_id=` partition with dynamic partition overwrite, so a
-    * replayed micro-batch (at-least-once upstream, a foreachBatch retry
-    * after failure) OVERWRITES its previous attempt instead of appending
-    * duplicates. Readers see exactly-once data without any coordination;
-    * the reference's non-idempotent JDBC append (spark_consumer.py:106)
-    * cannot make that claim.
+    * `batch_id=` directory, and a replayed batch id (at-least-once
+    * upstream, a retry after failure) REPLACES its previous attempt's
+    * dates instead of appending duplicates. Readers see exactly-once
+    * data without any coordination; the reference's non-idempotent JDBC
+    * append (spark_consumer.py:106) cannot make that claim.
     *
-    * The batch id goes into the output path, not into the rows: the
-    * write partitions by `pickup_date` under `path/batch_id=N`, so
-    * readers of `path` discover both keys. A `lit(batchId)` column would
-    * be inlined by codegen and compile fresh classes every micro-batch;
-    * this plan is the same for every batch and its code is reused. A
-    * replay of batch N replaces only the dates it carries.
+    * The write goes through [[WarehouseSink]], the same writer and
+    * commit [[graft.stream.Pipeline.startIdempotent]]'s micro-batches
+    * use: `path/batch_id=N/pickup_date=D/part-*.parquet`, readers of
+    * `path` discover both keys, and a replay of batch N replaces only
+    * the dates it carries. The batch id goes into the output path, not
+    * into the rows: a `lit(batchId)` column would be inlined by codegen
+    * and compile fresh classes every micro-batch.
     *
     * Lifecycle: the `batch_id=` partitions ARE the replay protection
     * and must be preserved while the stream can still replay those ids;
@@ -57,12 +60,11 @@ object Warehouse {
     * only partition key (PipelineSpec pins rows-intact + one file per
     * date).
     */
-  def appendTripsIdempotent(df: DataFrame, path: String, batchId: Long): Unit = df
-    .withColumn("pickup_date", to_date(col("pickup_datetime")))
-    .write.mode("overwrite")
-    .option("partitionOverwriteMode", "dynamic")
-    .partitionBy("pickup_date")
-    .parquet(s"$path/batch_id=$batchId")
+  def appendTripsIdempotent(df: DataFrame, path: String, batchId: Long): Unit =
+    withPickupDate(df).write.format(classOf[WarehouseSink].getName)
+      .option(WarehouseSink.BatchIdOption, batchId)
+      .mode("append")
+      .save(path)
 
   /** S5 as the reference actually wired it — JDBC append — for
     * deployments where a live database replaces the parquet warehouse.

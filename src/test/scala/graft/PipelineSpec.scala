@@ -305,6 +305,108 @@ class PipelineSpec extends AnyFunSuite {
       (3, "2015-01-15", 13.0), (3, "2015-01-16", 30.0)))
   }
 
+  test("the warehouse sink's writer factory carries no Hadoop conf to its tasks") {
+    // V1's per-task write description holds the whole job conf, which
+    // every task deserializes; the sink's factory holds a broadcast handle.
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.connector.catalog.SupportsWrite
+    import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import graft.warehouse.WarehouseSink
+    val trips = Warehouse.withPickupDate(Pipeline.transform(goodRows.toDF("value")))
+    val dir = Files.createTempDirectory("graft-sink-factory").toString
+    val table = new WarehouseSink()
+      .getTable(trips.schema, Array.empty, Map("path" -> dir).asJava)
+      .asInstanceOf[SupportsWrite]
+    val write = table.newWriteBuilder(new LogicalWriteInfo {
+      override def options(): CaseInsensitiveStringMap = new CaseInsensitiveStringMap(
+        Map(WarehouseSink.BatchIdOption -> "0").asJava)
+      override def queryId(): String = "factory-size"
+      override def schema(): org.apache.spark.sql.types.StructType = trips.schema
+    }).build().toBatch
+    val factory = write.createBatchWriterFactory(new PhysicalWriteInfo {
+      override def numPartitions(): Int = 4
+    })
+    try {
+      val ser = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+      val factoryBytes = ser.serialize(factory).limit()
+      val confBytes = ser.serialize(new org.apache.spark.util.SerializableConfiguration(
+        spark.sessionState.newHadoopConf())).limit()
+      assert(factoryBytes < 16 * 1024 && confBytes > 16 * 1024,
+        s"writer factory $factoryBytes B, session Hadoop conf $confBytes B")
+    } finally write.abort(Array.empty)
+  }
+
+  test("idempotent sink crash after its commit, before the commit log: the replay equals an uninterrupted run") {
+    import scala.jdk.CollectionConverters._
+    // One input file per micro-batch, in modification-time order.
+    val in = Files.createTempDirectory("graft-crash-in")
+    Seq(goodRows ++ badRows, goodRows.map(_.replace("2015-01-15", "2015-01-17")),
+        goodRows).zipWithIndex.foreach { case (rows, i) =>
+      val f = in.resolve(s"batch$i.jsonl")
+      Files.write(f, rows.mkString("\n").getBytes)
+      f.toFile.setLastModified(1000000L * (i + 1))
+    }
+    def run(warehouse: String, checkpoint: String): Seq[Long] = {
+      val query = Pipeline.startIdempotent(
+        Pipeline.fileTextSource(spark, in.toString, maxFilesPerTrigger = 1),
+        warehouse, checkpoint, Trigger.ProcessingTime("0 seconds"))
+      try {
+        query.processAllAvailable()
+        query.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+      } finally query.stop()
+    }
+    val tmp = Files.createTempDirectory("graft-crash").toString
+    val (clean, warehouse) = (s"$tmp/clean", s"$tmp/wh")
+    assert(run(clean, s"$tmp/clean-ckpt") == Seq(0L, 1L, 2L))
+    assert(run(warehouse, s"$tmp/ckpt") == Seq(0L, 1L, 2L))
+    // The crash: batch 2's sink commit landed, its commit-log entry did not.
+    Seq("2", ".2.crc").foreach(f =>
+      Files.deleteIfExists(java.nio.file.Paths.get(tmp, "ckpt", "commits", f)))
+    // What a crashed write leaves behind: a staged file no commit named.
+    val orphan = java.nio.file.Paths.get(warehouse, "_staging", "orphan",
+      "pickup_date=2015-01-15", "part-00000-orphan.snappy.parquet")
+    Files.createDirectories(orphan.getParent)
+    Files.copy(Files.list(java.nio.file.Paths.get(warehouse, "batch_id=2",
+      "pickup_date=2015-01-15")).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).next(), orphan)
+    assert(run(warehouse, s"$tmp/ckpt") == Seq(2L)) // batch 2 replays, alone
+
+    val (replayed, uninterrupted) = (spark.read.parquet(warehouse), spark.read.parquet(clean))
+    assert(replayed.count() == uninterrupted.count() && replayed.count() == 6L)
+    assert(replayed.exceptAll(uninterrupted).isEmpty &&
+      uninterrupted.exceptAll(replayed).isEmpty)
+    def batchIds(df: DataFrame) =
+      df.select("batch_id").distinct().collect().map(_.getInt(0)).sorted.toSeq
+    assert(batchIds(replayed) == Seq(0, 1, 2) && batchIds(uninterrupted) == Seq(0, 1, 2))
+    assert(!replayed.inputFiles.exists(_.contains("_staging")), replayed.inputFiles.toSeq)
+    // The replay's own staging is gone; only the planted orphan is left.
+    assert(Files.list(java.nio.file.Paths.get(warehouse, "_staging")).iterator().asScala
+      .map(_.getFileName.toString).toSeq == Seq("orphan"))
+  }
+
+  test("a persisting index stream computes each input row once, its emptiness probe included") {
+    // The non-empty probe reads the persisted batch, so the rows it
+    // touches are not computed a second time for the body.
+    import org.apache.spark.sql.functions.udf
+    val tmp = Files.createTempDirectory("graft-probe-once").toString
+    val evaluated = spark.sparkContext.longAccumulator("rows_evaluated")
+    val counted = udf { (text: String) => evaluated.add(1L); text }.asNondeterministic()
+    val source = MemoryStream[(Long, String)](
+      implicitly[org.apache.spark.sql.Encoder[(Long, String)]], spark.sqlContext)
+    val docs = source.toDF().toDF("doc_id", "text")
+      .withColumn("text", counted(col("text")))
+    val query = Pipeline.bm25IndexStream(docs, s"$tmp/idx", Seq("cat"), 10,
+      s"$tmp/rank", s"$tmp/ckpt", Trigger.ProcessingTime("0 seconds"))
+    val rows = Seq((1L, "cat dog"), (2L, "cat cat cat dog"), (3L, "fish cat"))
+    try {
+      source.addData(rows: _*)
+      query.processAllAvailable()
+    } finally query.stop()
+    assert(spark.read.parquet(s"$tmp/rank").count() == 3L) // the body ran
+    assert(evaluated.value == rows.size.toLong)
+  }
+
   test("incremental corpus dedup runs the batch operator stream-static") {
     import spark.implicits._
     val corpus = Seq((0L, "seen doc one"), (1L, "seen doc two"))
