@@ -71,12 +71,12 @@ private case class SessionState(trips: Long, revenue: Double,
   * The transform DAG is a pure `DataFrame => DataFrame`, so the identical
   * plan runs in batch tests, against `MemoryStream`, or against a Kafka
   * source — Spark's unified API. Semantics preserved: 10 s processing-time
-  * trigger (T1), checkpointed offsets (T3), at-least-once `foreachBatch`
-  * append (T4), empty-batch skip (spark_consumer.py:87-88) — an empty
-  * batch writes no data files, because the warehouse write is partitioned.
-  * Deliberately NOT preserved: the reference's `count()`-then-write double
-  * execution (spark_consumer.py:86,106) — each batch runs once, as the
-  * write job (SURVEY §4).
+  * trigger (T1), checkpointed offsets (T3), the micro-batch append (T4,
+  * upgraded to effectively-once: [[startIdempotent]]), empty-batch skip
+  * (spark_consumer.py:87-88) — an empty or all-invalid batch writes no
+  * `batch_id=` dir. Deliberately NOT preserved: the reference's
+  * `count()`-then-write double execution (spark_consumer.py:86,106) —
+  * each batch runs once, as the write job (SURVEY §4).
   */
 object Pipeline {
 
@@ -103,61 +103,13 @@ object Pipeline {
           sum(col("fare_amount")).as("fare_sum")))
   }
 
-  /** The one `foreachBatch` builder every sink in this object but
-    * [[startIdempotent]] starts through: `stream` is handed to `body`
-    * once per micro-batch with its batch id, and offsets are
-    * checkpointed under `checkpointDir`. The plain warehouse sink
-    * ([[start]]) passes [[transform]] straight in, one job per trigger:
-    * an empty micro-batch needs no skip there, because a partitioned
-    * write of zero rows creates no data files.
-    *
-    * The index and verdict streams reach it through [[nonEmptyBatches]]
-    * and share one replay contract:
-    *  - One streaming writer per index (and verdict dir) per checkpoint
-    *    lineage — Spark's batchId-idempotence contract. A fresh
-    *    checkpoint restarts batch ids at 0 and would overwrite an
-    *    earlier stream's partitions.
-    *  - Index appends run under ingest id `batchId + 1` (0 is reserved
-    *    for a base corpus) as a dynamic overwrite of that partition, so
-    *    foreachBatch's at-least-once replay rewrites the partition
-    *    instead of duplicating it, and the index is exactly-once per
-    *    checkpoint lineage. The explicit id also makes the first append
-    *    initialize an empty base on cold start, so the first real batch
-    *    lands in its own replayable partition too.
-    *  - Each batch's verdicts overwrite `verdictDir/batch_id=N`
-    *    ([[writeVerdicts]]); a replay rewrites exactly its own audit
-    *    rows.
-    *  - `compactEvery` = N folds an index's ingests into its base every
-    *    N batches ([[compactDue]]); 0 leaves compaction to the caller.
-    *  - `retainVerdictBatches` bounds the verdict audit dir
-    *    ([[pruneVerdictDirs]]); 0 leaves retention to the caller.
-    * The index carries all cross-batch state: streaming state is zero
-    * and the checkpoint holds offsets only.
-    */
-  private def batchSink(stream: DataFrame, checkpointDir: String,
-                        trigger: Trigger)
-                       (body: (DataFrame, Long) => Unit): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(body)
-      .start()
-
-  /** T1/T3/T4/T9 — start the sink: micro-batch append to the parquet
-    * warehouse via `foreachBatch`.
-    */
-  def start(raw: DataFrame, warehousePath: String, checkpointDir: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    batchSink(transform(raw), checkpointDir, trigger)((batch, _) =>
-      Warehouse.appendTrips(batch, warehousePath))
-
-  /** [[start]] with the effectively-once sink: each micro-batch lands in
-    * its own `batch_id=` directory, and a replay after failure replaces
-    * the dates it carries instead of duplicating them — the T4 upgrade
-    * path SURVEY §2.6 names. The stream writes through
+  /** T1/T3/T4/T9 — start the sink: each micro-batch of [[transform]]
+    * lands in its own `batch_id=` directory, and a replay after failure
+    * replaces the dates it carries instead of duplicating them — the
+    * effectively-once upgrade of the reference's at-least-once append
+    * that SURVEY §2.6 names. The stream writes through
     * [[graft.warehouse.WarehouseSink]] inside its own micro-batch plan,
-    * not through [[batchSink]]: one job per trigger, whose tasks read
+    * not through a `foreachBatch`: one job per trigger, whose tasks read
     * the Hadoop job conf from one broadcast instead of each
     * deserializing a copy, and the same commit
     * [[graft.warehouse.Warehouse.appendTripsIdempotent]] runs. The batch
@@ -261,25 +213,54 @@ object Pipeline {
   def dedupAgainstCorpus(docStream: DataFrame, corpus: DataFrame): DataFrame =
     graft.ext.Dedup.dedupAgainstSeen(docStream, corpus)
 
-  /** [[batchSink]] for the index and verdict streams: an empty
-    * micro-batch is skipped, so it commits with no verdict dir, no rank
-    * snapshot and no index ingest. With `persist`, the batch is cached
-    * for the body's several passes (screen, read-back join, append) and
-    * released after it; the emptiness probe then reads the cache too,
-    * so each input row is computed once.
+  /** The one `foreachBatch` builder of the index and verdict streams:
+    * `stream` is handed to `body` once per non-empty micro-batch with its
+    * batch id, and offsets are checkpointed under `checkpointDir`. An
+    * empty micro-batch is skipped, so it commits with no verdict dir, no
+    * rank snapshot and no index ingest. With `persist`, the batch is
+    * cached for the body's several passes (screen, read-back join,
+    * append) and released after it; the emptiness probe then reads the
+    * cache too, so each input row is computed once.
+    *
+    * Every stream on it shares one replay contract:
+    *  - One streaming writer per index (and verdict dir) per checkpoint
+    *    lineage — Spark's batchId-idempotence contract. A fresh
+    *    checkpoint restarts batch ids at 0 and would overwrite an
+    *    earlier stream's partitions.
+    *  - Index appends run under ingest id `batchId + 1` (0 is reserved
+    *    for a base corpus) as a dynamic overwrite of that partition, so
+    *    foreachBatch's at-least-once replay rewrites the partition
+    *    instead of duplicating it, and the index is exactly-once per
+    *    checkpoint lineage. The explicit id also makes the first append
+    *    initialize an empty base on cold start, so the first real batch
+    *    lands in its own replayable partition too.
+    *  - Each batch's verdicts overwrite `verdictDir/batch_id=N`
+    *    ([[writeVerdicts]]); a replay rewrites exactly its own audit
+    *    rows.
+    *  - `compactEvery` = N folds an index's ingests into its base every
+    *    N batches ([[compactDue]]); 0 leaves compaction to the caller.
+    *  - `retainVerdictBatches` bounds the verdict audit dir
+    *    ([[pruneVerdictDirs]]); 0 leaves retention to the caller.
+    * The index carries all cross-batch state: streaming state is zero
+    * and the checkpoint holds offsets only.
     */
   private def nonEmptyBatches(stream: DataFrame, checkpointDir: String,
                               trigger: Trigger, persist: Boolean)
                              (body: (DataFrame, Long) => Unit)
       : StreamingQuery =
-    batchSink(stream, checkpointDir, trigger) { (batch, batchId) =>
-      if (!persist) { if (!batch.isEmpty) body(batch, batchId) }
-      else {
-        val once = batch.persist()
-        try if (!once.isEmpty) body(once, batchId)
-        finally { once.unpersist(); () }
+    stream.writeStream
+      .outputMode("append")
+      .trigger(trigger)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!persist) { if (!batch.isEmpty) body(batch, batchId) }
+        else {
+          val once = batch.persist()
+          try if (!once.isEmpty) body(once, batchId)
+          finally { once.unpersist(); () }
+        }
       }
-    }
+      .start()
 
   /** The rank streams ([[bm25IndexStream]], [[annIndexStream]],
     * [[pqIndexStream]]): `append` folds the whole batch into the
@@ -406,7 +387,7 @@ object Pipeline {
     * index, not a log). After any prefix of the stream, the snapshot is
     * EXACTLY what the batch ranker returns over the documents ingested
     * so far — PipelineSpec pins that over a two-batch replay. Replay
-    * safety is the [[batchSink]] contract.
+    * safety is the [[nonEmptyBatches]] contract.
     *
     * Scale: per trigger, work is (batch postings shuffle) + (query-
     * bucket-pruned rank) — never a corpus re-scan. Same new-doc_ids
@@ -429,7 +410,7 @@ object Pipeline {
     * the standing query vector re-ranks against the now-current index
     * into `rankDir`. After any stream prefix the snapshot equals
     * `annTopKIndexed` over a from-scratch index of the vectors ingested
-    * so far (PipelineSpec). Replay safety is the [[batchSink]]
+    * so far (PipelineSpec). Replay safety is the [[nonEmptyBatches]]
     * contract.
     */
   def annIndexStream(emb: DataFrame, indexPath: String,
@@ -452,7 +433,7 @@ object Pipeline {
     * trains on the FIRST batch and freezes — after any stream prefix
     * the snapshot equals `pqTopKIndexed` over a from-scratch index of
     * the vectors so far built WITH THAT codebook (PipelineSpec).
-    * Replay safety is the [[batchSink]] contract.
+    * Replay safety is the [[nonEmptyBatches]] contract.
     */
   def pqIndexStream(emb: DataFrame, indexPath: String,
                     qVec: Array[Float], k: Int,
@@ -484,7 +465,7 @@ object Pipeline {
     * the honest audit of the replay). Within-batch duplicates are both
     * admitted — intra-batch dedup is the batch operator's job upstream
     * ([[graft.ext.Similarity.semanticDedup]]), same contract as the
-    * exact-digest stream. Replay, retention: the [[batchSink]] contract.
+    * exact-digest stream. Replay, retention: the [[nonEmptyBatches]] contract.
     */
   def semanticDedupStream(embStream: DataFrame, indexPath: String,
                           verdictDir: String, checkpointDir: String,
@@ -511,7 +492,7 @@ object Pipeline {
     * and the batch's novel docs fold into the index
     * ([[graft.ext.Dedup.appendMinhashIndex]]) so later batches dedup
     * against them too — the [[indexDedup]] skeleton, under the
-    * [[batchSink]] replay contract: the INDEX converges exactly-once
+    * [[nonEmptyBatches]] replay contract: the INDEX converges exactly-once
     * per checkpoint lineage. Verdicts are NOT stable across crash
     * replays (the [[semanticDedupStream]] contract): a crash between
     * the append and the checkpoint commit replays the batch against an
@@ -571,7 +552,7 @@ object Pipeline {
     * already contained in something the corpus holds"), verdicts land
     * in `verdictDir/batch_id=N`, and the docs NOT contained
     * (is_novel) append into the index under `ingest = batchId + 1` —
-    * the [[indexDedup]] skeleton under the [[batchSink]] replay
+    * the [[indexDedup]] skeleton under the [[nonEmptyBatches]] replay
     * contract. A contained doc never enters the index (admitting it
     * would let near-copies of held content accrete); novel docs grow
     * the standing corpus so later quotes of them ARE caught.
@@ -621,7 +602,7 @@ object Pipeline {
     * `verdictDir/batch_id=N`, and exactly the `kept` docs are admitted
     * to the standing MinHash index under `ingest = batchId + 1` — so
     * the next trigger's novelty screen already sees them. The
-    * [[indexDedup]] skeleton throughout, under the [[batchSink]]
+    * [[indexDedup]] skeleton throughout, under the [[nonEmptyBatches]]
     * replay contract; each configured index is appended and compacted
     * independently replay-idempotent. The DSIR model, the eval-gram
     * contamination index, and the outlier model stay FROZEN
@@ -704,7 +685,7 @@ object Pipeline {
     * ([[graft.ext.Dedup.simhashNovelAgainstIndex]]), verdicts land in
     * `verdictDir/batch_id=N`, and novel docs append their 16-byte
     * fingerprints under `ingest = batchId + 1` — the [[indexDedup]]
-    * skeleton under the [[batchSink]] replay contract. A matched doc
+    * skeleton under the [[nonEmptyBatches]] replay contract. A matched doc
     * never enters the index (near-copies of held content must not
     * accrete); novel docs grow the standing corpus so later near-copies
     * of THEM are caught.
@@ -737,7 +718,7 @@ object Pipeline {
     * replay sequential [[graft.ext.TextAnalysis.dedupLines]] over the
     * concatenated history exactly (LineOpsSpec pins the equality).
     *
-    * Crash-replay here must be STRONGER than the [[batchSink]]
+    * Crash-replay here must be STRONGER than the [[nonEmptyBatches]]
     * contract the siblings rely on: a replayed SimHash screen that sees
     * the crashed attempt's own fingerprints merely flips an audit flag
     * to a filterable self-match, but a replayed line screen that sees

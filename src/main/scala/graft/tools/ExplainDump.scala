@@ -2,9 +2,12 @@ package graft.tools
 
 import graft.SparkEntry
 
-/** Plan inspection helper: prints the formatted physical plan of selected
-  * queries (or all) so scan pushdown, join strategies and codegen spans
-  * can be reviewed. Not part of the driver contract.
+/** Plan inspection helper: runs selected queries (or all) and prints each
+  * one's formatted physical plan, so scan pushdown, join strategies and
+  * codegen spans can be reviewed. The query is collected first (collect,
+  * not count, so THIS QueryExecution runs): its adaptive node then prints
+  * the final plan, where runtime exchange reuse and join re-planning are
+  * visible, above the initial plan. Not part of the driver contract.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -14,9 +17,12 @@ object ExplainDump {
     val spark = ToolSession.local(4)
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      try println(SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
+      try {
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        df.collect()
+        println(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+      } catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
     }
     spark.stop()
   }

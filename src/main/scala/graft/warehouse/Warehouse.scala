@@ -6,37 +6,32 @@ import org.apache.spark.sql.functions._
 /** Parquet warehouse — replaces the reference's PostgreSQL layer
   * (reference: database_handler.py:65-195 DDL + :197-268 batch inserts).
   *
+  * Trip rows have one writer, [[WarehouseSink]], reached from a batch
+  * through [[appendTripsIdempotent]] and from a stream through
+  * [[graft.stream.Pipeline.startIdempotent]]. Appends are inherently
+  * batched (S7) — one file per task and date, no per-row round trips.
+  *
   * The reference's three B-tree indexes (pickup_datetime, vendor_id,
   * pickup_hour — database_handler.py:167-180) become **storage layout**:
-  * the trips table is partitioned by pickup date, so the dashboard's
-  * BETWEEN queries prune whole partitions, and parquet row-group min/max
-  * stats + predicate pushdown serve vendor/hour selections. Appends are
-  * inherently batched (S7) — one file per task, no per-row round trips.
+  * the trips table is partitioned by pickup date under each batch id, and
+  * [[compact]] folds the batches into a table partitioned by date alone,
+  * so the dashboard's BETWEEN queries prune whole partitions, and
+  * parquet row-group min/max stats + predicate pushdown serve
+  * vendor/hour selections. Analytic reads (S4) come straight off
+  * parquet.
   */
 object Warehouse {
 
   val TripsTable = "taxi_trips"
 
-  /** S5/S7 — append a micro-batch (or batch) of enriched trips,
-    * date-partitioned. `pickup_date` is derived here so callers write the
-    * 12-column contract of [[graft.model.Schemas.warehouseTrips]].
+  /** The warehouse partition key, derived from `pickup_datetime`, so
+    * callers write the 12-column contract of
+    * [[graft.model.Schemas.warehouseTrips]].
     */
-  def appendTrips(df: DataFrame, path: String): Unit = withPickupDate(df)
-    .write.mode("append")
-    .partitionBy("pickup_date")
-    .parquet(path)
-
-  /** The warehouse partition key, derived from `pickup_datetime`. */
   private[graft] def withPickupDate(df: DataFrame): DataFrame =
     df.withColumn(WarehouseSink.PartitionColumn, to_date(col("pickup_datetime")))
 
-  /** S4-replacement — analytic reads come straight off parquet; partition
-    * pruning on `pickup_date` replaces the pickup_datetime index.
-    */
-  def readTrips(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** T4 upgrade path — effectively-once sink: the batch lands in its own
+  /** S5/S7/T4 — effectively-once append: the batch lands in its own
     * `batch_id=` directory, and a replayed batch id (at-least-once
     * upstream, a retry after failure) REPLACES its previous attempt's
     * dates instead of appending duplicates. Readers see exactly-once

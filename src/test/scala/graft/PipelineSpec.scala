@@ -37,7 +37,7 @@ class PipelineSpec extends AnyFunSuite {
       implicitly[org.apache.spark.sql.Encoder[String]], spark.sqlContext)
     source.addData(goodRows ++ badRows: _*)
 
-    val query = Pipeline.start(source.toDF(), warehouse, checkpoint,
+    val query = Pipeline.startIdempotent(source.toDF(), warehouse, checkpoint,
       Trigger.ProcessingTime("1 second"))
     try query.processAllAvailable()
     finally query.stop()
@@ -51,25 +51,9 @@ class PipelineSpec extends AnyFunSuite {
     val cols = batch.columns.map(org.apache.spark.sql.functions.col).toSeq
     assert(streamed.select(cols: _*).orderBy("vendor_id").collect().toSeq ==
       batch.orderBy("vendor_id").collect().toSeq)
-    // Warehouse layout: date-partitioned (the reference's index analog).
-    assert(streamed.columns.contains("pickup_date"))
-  }
-
-  test("idempotent streaming sink partitions by batch_id and matches start()") {
-    val warehouse = Files.createTempDirectory("graft-wh-idem").toString
-    val checkpoint = Files.createTempDirectory("graft-ckpt-idem").toString
-    val source = MemoryStream[String](
-      implicitly[org.apache.spark.sql.Encoder[String]], spark.sqlContext)
-    source.addData(goodRows ++ badRows: _*)
-    val query = Pipeline.startIdempotent(source.toDF(), warehouse, checkpoint,
-      Trigger.ProcessingTime("1 second"))
-    try query.processAllAvailable()
-    finally query.stop()
-    val streamed = spark.read.parquet(warehouse)
-    assert(streamed.count() == 2) // same survivors as start()
-    // Layout carries the replay key: batch_id partition + pickup_date.
-    assert(streamed.columns.contains("batch_id"))
-    assert(streamed.columns.contains("pickup_date"))
+    // Warehouse layout: the replay key (batch_id) over the date partition
+    // (the reference's index analog), and nothing else beyond the rows.
+    assert(streamed.columns.toSeq == batch.columns.toSeq ++ Seq("batch_id", "pickup_date"))
   }
 
   test("file text source streams JSONL through the shared DAG") {
@@ -79,7 +63,7 @@ class PipelineSpec extends AnyFunSuite {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(inDir, "batch1.jsonl"),
       (goodRows ++ badRows).mkString("\n").getBytes)
-    val query = Pipeline.start(
+    val query = Pipeline.startIdempotent(
       Pipeline.fileTextSource(spark, inDir, maxFilesPerTrigger = 1),
       warehouse, checkpoint, Trigger.ProcessingTime("1 second"))
     try {
@@ -92,24 +76,6 @@ class PipelineSpec extends AnyFunSuite {
       query.processAllAvailable()
       assert(spark.read.parquet(warehouse).count() == 4)
     } finally query.stop()
-  }
-
-  test("compaction: one file per partition, identical rows") {
-    val src = Files.createTempDirectory("graft-compact-src").toString
-    val dest = Files.createTempDirectory("graft-compact-dest").toString
-    val batch = Seq((1, "2015-01-15 10:00:00", 10.0), (2, "2015-01-16 11:00:00", 5.0))
-      .toDF("vendor_id", "p", "fare_amount")
-      .withColumn("pickup_datetime", to_timestamp(col("p"))).drop("p")
-    // Three appends → ≥3 files per date partition (the small-file problem).
-    (1 to 3).foreach(_ => Warehouse.appendTrips(batch, src))
-    def dataFiles(dir: String) = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(p => p.toString.endsWith(".parquet")).count()
-    assert(dataFiles(src) >= 6)
-    Warehouse.compact(spark, src, dest, "pickup_date")
-    assert(dataFiles(dest) == 2) // one per date partition
-    val a = spark.read.parquet(src).orderBy("vendor_id", "fare_amount")
-    val b = spark.read.parquet(dest).orderBy("vendor_id", "fare_amount")
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 
   test("idempotent batch-id warehouse compacts to one file per date, rows intact") {
@@ -153,7 +119,7 @@ class PipelineSpec extends AnyFunSuite {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(inDir, "a.jsonl"),
       (goodRows ++ badRows).mkString("\n").getBytes)
-    val query = Pipeline.start(
+    val query = Pipeline.startIdempotent(
       Pipeline.fileTextSource(spark, inDir, maxFilesPerTrigger = 1),
       warehouse, checkpoint, Trigger.AvailableNow())
     assert(query.awaitTermination(60000), "query did not self-terminate")
@@ -165,49 +131,46 @@ class PipelineSpec extends AnyFunSuite {
     val checkpoint = Files.createTempDirectory("graft-ckpt2").toString
     val source = MemoryStream[String](
       implicitly[org.apache.spark.sql.Encoder[String]], spark.sqlContext)
-    val query = Pipeline.start(source.toDF(), warehouse, checkpoint,
+    val query = Pipeline.startIdempotent(source.toDF(), warehouse, checkpoint,
       Trigger.ProcessingTime("1 second"))
     try query.processAllAvailable()
     finally query.stop()
-    // No batch ever had data → appendTrips never ran → no parquet output.
+    // No batch ever had data → the sink never committed → no parquet output.
     assert(!Files.list(java.nio.file.Paths.get(warehouse)).iterator().hasNext ||
       spark.read.parquet(warehouse).isEmpty)
   }
 
   test("an all-invalid micro-batch commits with no data files, then the next batch lands") {
-    // Neither sink probes the batch for emptiness: a partitioned write of
-    // zero rows creates no data files, which keeps the reference's
-    // empty-batch skip (spark_consumer.py:87-88) without a second job.
+    // The sink does not probe the batch for emptiness: it commits only
+    // the dates its rows carry, so a batch with no valid row writes no
+    // `batch_id=` dir, which keeps the reference's empty-batch skip
+    // (spark_consumer.py:87-88) without a second job.
     def dataFiles(dir: String) = Files.walk(java.nio.file.Paths.get(dir))
       .filter(p => p.toString.endsWith(".parquet")).count()
-    val sinks = Seq[(String, (DataFrame, String, String) => StreamingQuery)](
-      "start" -> ((raw, wh, ckpt) =>
-        Pipeline.start(raw, wh, ckpt, Trigger.ProcessingTime("0 seconds"))),
-      "startIdempotent" -> ((raw, wh, ckpt) =>
-        Pipeline.startIdempotent(raw, wh, ckpt, Trigger.ProcessingTime("0 seconds"))))
     val batch = Pipeline.transform(goodRows.toDF("value"))
-    for ((name, sink) <- sinks) {
-      val warehouse = Files.createTempDirectory(s"graft-wh-$name").toString
-      val checkpoint = Files.createTempDirectory(s"graft-ckpt-$name").toString
-      val source = MemoryStream[String](
-        implicitly[org.apache.spark.sql.Encoder[String]], spark.sqlContext)
-      val query = sink(source.toDF(), warehouse, checkpoint)
-      def ranBatches = query.recentProgress.filter(_.numInputRows > 0)
-        .map(_.batchId).toSeq
-      try {
-        source.addData(badRows: _*) // malformed + zero-duration only
-        query.processAllAvailable()
-        assert(ranBatches == Seq(0L), name)
-        assert(dataFiles(warehouse) == 0L, name)
-        source.addData(goodRows: _*)
-        query.processAllAvailable()
-        assert(ranBatches == Seq(0L, 1L), name)
-      } finally query.stop()
-      val landed = spark.read.parquet(warehouse)
-        .select(batch.columns.map(col).toSeq: _*)
-      assert(landed.orderBy("vendor_id").collect().toSeq ==
-        batch.orderBy("vendor_id").collect().toSeq, name)
-    }
+    val warehouse = Files.createTempDirectory("graft-wh-invalid").toString
+    val checkpoint = Files.createTempDirectory("graft-ckpt-invalid").toString
+    val source = MemoryStream[String](
+      implicitly[org.apache.spark.sql.Encoder[String]], spark.sqlContext)
+    val query = Pipeline.startIdempotent(source.toDF(), warehouse, checkpoint,
+      Trigger.ProcessingTime("0 seconds"))
+    def ranBatches = query.recentProgress.filter(_.numInputRows > 0)
+      .map(_.batchId).toSeq
+    try {
+      source.addData(badRows: _*) // malformed + zero-duration only
+      query.processAllAvailable()
+      assert(ranBatches == Seq(0L))
+      assert(dataFiles(warehouse) == 0L)
+      assert(!Files.exists(java.nio.file.Paths.get(warehouse, "batch_id=0")))
+      source.addData(goodRows: _*)
+      query.processAllAvailable()
+      assert(ranBatches == Seq(0L, 1L))
+    } finally query.stop()
+    val landed = spark.read.parquet(warehouse)
+    assert(landed.select("batch_id").distinct().collect().map(_.getInt(0)).toSeq == Seq(1))
+    assert(landed.select(batch.columns.map(col).toSeq: _*)
+      .orderBy("vendor_id").collect().toSeq ==
+      batch.orderBy("vendor_id").collect().toSeq)
   }
 
   test("transform parses each message once: the validity filter sits above the parse") {
@@ -233,6 +196,10 @@ class PipelineSpec extends AnyFunSuite {
     // engine's `file:` filesystem (no chmod/readlink forks), and the
     // write plan carries no per-batch literal, so once the first
     // triggers have compiled it, later triggers reuse the generated code.
+    // Only this query's forks count: its stream thread (planning, sink
+    // commit, checkpoint) and the executor's task threads. A GC in the
+    // window can run an earlier test's stopped-session cleaner, which
+    // forks `rm -rf` from a thread of its own.
     import scala.jdk.CollectionConverters._
     val warehouse = Files.createTempDirectory("graft-wh-steady").toString
     val checkpoint = Files.createTempDirectory("graft-ckpt-steady").toString
@@ -255,8 +222,11 @@ class PipelineSpec extends AnyFunSuite {
       jfr.stop()
       val compiles = org.apache.spark.graftbridge.CodegenCount.compiles - compiles0
       jfr.dump(dump)
+      val streamThread = s"stream execution thread for [id = ${query.id}, runId = ${query.runId}]"
+      def ours(e: jdk.jfr.consumer.RecordedEvent) = Option(e.getThread).map(_.getJavaName)
+        .forall(t => t == streamThread || t.startsWith("Executor task launch worker"))
       val spawned = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
-        .map(_.getString("command")).toSeq
+        .filter(ours).map(_.getString("command")).toSeq
       assert(query.recentProgress.count(_.numInputRows > 0) == 5)
       val byCommand = spawned.groupBy(_.takeWhile(_ != ' ')).view.mapValues(_.size).toMap
       assert((spawned.size, compiles) == (0, 0L),
