@@ -12,28 +12,8 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // Clamp telemetry surface (r11 verdict item 5): every capped
     // candidate join exposes dropped_buckets / dropped_rows / max_bucket
-    // via Dataset.observe, but without a listener those metrics die with
-    // the query. Collect them here, keyed by OBSERVATION name (stable
-    // per operator — `Dedup.capBandBuckets` observeName, `itemPairs`'s
-    // basket clamp), because QueryExecutionListener delivery is async
-    // and per-bench-query attribution by a mutable var would be racy.
-    // Last-write-wins per name is right: cold and warm passes observe
-    // the same data, and a real drop fires in both.
-    val observedMetrics =
-      new java.util.concurrent.ConcurrentHashMap[String, Map[String, Any]]()
-    spark.listenerManager.register(
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit =
-          qe.observedMetrics.foreach { case (name, row) =>
-            observedMetrics.put(name,
-              row.schema.fieldNames.zip(row.toSeq).toMap); ()
-          }
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            exception: Exception): Unit = ()
-      })
+    // via Dataset.observe; collect them for the JSON line.
+    val observedMetrics = ObservedMetrics.attach(spark)
     // Warm the session (codegen compiler, parquet footer reader, shuffle
     // machinery) so JVM init isn't attributed to whichever query happens
     // to run first. Best-effort: a warmup failure must never kill the
@@ -285,23 +265,16 @@ object Bench {
       m.map { case (k, v) => "\"" + k + "\":" +
           String.format(java.util.Locale.ROOT, "%.2f", Double.box(v)) }
         .mkString("{", ",", "}")
-    // Drain the async listener bus (QueryExecutionListener delivery is
-    // best-effort ordered, not synchronous) before reading the observed
-    // metrics — deterministically, via the mechanism Spark's own tests
-    // use (waitUntilEmpty), so a loaded host can't slip a late delivery
-    // past the snapshot and make clamp_dropped read clean when it
+    // Drain the async listener bus before reading the observed metrics,
+    // so a late delivery cannot make clamp_dropped read clean when it
     // isn't. The sleep stays only as a fallback if the bus fails to
     // drain inside 30 s (then flagged: the snapshot may be incomplete).
-    if (!org.apache.spark.graftbridge.ListenerDrain.drain(
-        spark.sparkContext, 30000L)) {
+    if (!observedMetrics.drain()) {
       System.err.println("[bench] listener bus failed to drain in 30 s — " +
         "observed_metrics may be incomplete")
       Thread.sleep(1000)
     }
-    val obsSnapshot = {
-      import scala.jdk.CollectionConverters._
-      observedMetrics.asScala.toSeq.sortBy(_._1)
-    }
+    val obsSnapshot = observedMetrics.snapshot
     def obsValueJson(v: Any): String = v match {
       case null => "null"
       case n: Long => n.toString

@@ -21,25 +21,23 @@ import org.apache.spark.sql.functions._
   * remove on its own — the numbers a curation report needs); only `kept`
   * uses the staged logic.
   *
-  * Note on passes: near-dup clustering and the contamination screen both
-  * consume the corpus' [[Dedup.hashedShingles]] stream. `shareShingles`
-  * picks between re-running the compiled, scan-bound hash pass per
-  * consumer (false) and `localCheckpoint`ing one pass to feed both
-  * (true). The A/B (tools/PrepDrill, table in SCALE.md) put the share
-  * ahead at every measured size warm (sf0.1 4705-doc corpus 3.7→3.3 s,
-  * 400k-doc synthetic 17.2→9.8 s) and at-or-ahead cold (9.1→4.0 s;
-  * synthetic within noise), so it is the default: the checkpoint holds
-  * only (doc_id, h) — 16 bytes × shingle count, spillable — and
-  * replaces a full corpus re-read + re-tokenize + re-hash. On a cluster,
-  * swap for reliable `checkpoint()` to also survive executor loss.
+  * Note on passes: every shingle consumer — near-dup clustering, the
+  * contamination, span and fuzzy screens, containment, repetition —
+  * rides ONE `localCheckpoint`ed [[Dedup.hashedShingles]] pass. The
+  * round-13 A/B against re-running the compiled, scan-bound hash pass
+  * per consumer put the share ahead at every measured size warm (sf0.1
+  * 4705-doc corpus 3.7→3.3 s, 400k-doc synthetic 17.2→9.8 s) and
+  * at-or-ahead cold (9.1→4.0 s; synthetic within noise; SCALE.md): the
+  * checkpoint holds only (doc_id, h) — 16 bytes × shingle count,
+  * spillable — and replaces a full corpus re-read + re-tokenize +
+  * re-hash. On a cluster, swap for reliable `checkpoint()` to also
+  * survive executor loss.
   */
 object CorpusPrep {
 
   /** @param docs     corpus with (doc_id, text)
     * @param evalDocs held-out eval set with (doc_id, text) — contamination
     *                 reference; pass an empty frame to skip
-    * @param shareShingles materialize one shingle pass for the near-dup
-    *                 and contamination consumers (see object scaladoc)
     * @param blocklist stage-1 row-local blocklist screen
     *                 ([[TextAnalysis.blocklistGate]]): docs whose
     *                 blocked-token fraction exceeds
@@ -150,7 +148,6 @@ object CorpusPrep {
   def prepare(docs: DataFrame, evalDocs: DataFrame,
               nearDupThreshold: Double = 0.5,
               contaminationMinShared: Int = 5,
-              shareShingles: Boolean = true,
               blocklist: Seq[String] = Seq.empty,
               blocklistMaxFraction: Double = 0.0,
               containmentThreshold: Option[Double] = None,
@@ -189,16 +186,15 @@ object CorpusPrep {
     // the per-partition floor must cover that multiplied scheduling
     // cost ([[Parallelism.CompositeBytesPerTask]]).
     val docsWide = Parallelism.widen(docs, Parallelism.CompositeBytesPerTask)
-    val sharedShingles =
-      if (shareShingles) {
-        // Composite floor here too: this stream is checkpointed and
-        // re-consumed by up to six screen families' jobs, the same
-        // multiplied-scheduling argument as the text checkpoint.
-        val base = Dedup.hashedShingles(docsWide, 3,
-          widenPerTaskBytes = Parallelism.CompositeBytesPerTask)
-        Some((if (keepPos) base else base.select("doc_id", "h"))
-          .localCheckpoint(eager = false))
-      } else None
+    val sharedShingles = {
+      // Composite floor here too: this stream is checkpointed and
+      // re-consumed by up to six screen families' jobs, the same
+      // multiplied-scheduling argument as the text checkpoint.
+      val base = Dedup.hashedShingles(docsWide, 3,
+        widenPerTaskBytes = Parallelism.CompositeBytesPerTask)
+      (if (keepPos) base else base.select("doc_id", "h"))
+        .localCheckpoint(eager = false)
+    }
     // ONE corpus set AGGREGATE shared by the set consumers (r19,
     // [[screenIncremental]]'s one-set-aggregate contract on the batch
     // path): when the repetition veto and/or the fuzzy contamination
@@ -213,9 +209,8 @@ object CorpusPrep {
     // already exist for another consumer (minhashNearDupPairs' sets
     // seam documents the same rule).
     val sharedSets =
-      if (sharedShingles.isDefined &&
-          (repetitionMaxDupFrac.isDefined || contamNeardupThreshold.isDefined))
-        sharedShingles.map(_.select(col("doc_id"), col("h"))
+      if (repetitionMaxDupFrac.isDefined || contamNeardupThreshold.isDefined)
+        Some(sharedShingles.select(col("doc_id"), col("h"))
           .groupBy("doc_id")
           .agg(collect_set(col("h")).as("shset"),
             count(lit(1)).as("n_grams"))
@@ -251,7 +246,7 @@ object CorpusPrep {
       .localCheckpoint(eager = false)
     val contaminated = Contamination
       .ngramOverlap(evalDocs, docs, minShared = contaminationMinShared,
-        trainShingles = sharedShingles, trainShinglesN = Some(3))
+        trainShingles = Some(sharedShingles), trainShinglesN = Some(3))
       .select(col("train_id").as("doc_id")).distinct()
       .withColumn("is_contaminated", lit(true))
     // Embedding-side verdict (flagged rows only — a tiny frame).
@@ -264,28 +259,21 @@ object CorpusPrep {
     // (hashed counts equal string-gram counts modulo negligible 64-bit
     // collisions, the contamination family's oracle argument), so the
     // veto costs no extra corpus pass.
-    val repetition = repetitionMaxDupFrac.map { _ =>
-      // Row-local over the shared set aggregate when it exists
-      // (size(shset) IS the distinct count; long/long division both
-      // ways, so the rounded fraction is bit-identical); the dedicated
-      // aggregate remains the shareShingles = false fallback.
-      sharedSets
-        .map(_.select(col("doc_id"),
-          round(lit(1.0) -
-            size(col("shset")).cast("long") / col("n_grams"), 4)
-            .as("dup_3gram_frac")))
-        .getOrElse(
-          sharedShingles.getOrElse(Dedup.hashedShingles(docs, 3))
-            .groupBy("doc_id")
-            .agg(round(lit(1.0) - countDistinct(col("h")) / count(lit(1)), 4)
-              .as("dup_3gram_frac")))
-    }
+    // Row-local over the shared set aggregate, which exists whenever
+    // the veto is on: size(shset) IS the distinct count, and the
+    // long/long division rounds to the fraction a countDistinct
+    // aggregate would.
+    val repetition = repetitionMaxDupFrac.flatMap(_ => sharedSets)
+      .map(_.select(col("doc_id"),
+        round(lit(1.0) -
+          size(col("shset")).cast("long") / col("n_grams"), 4)
+          .as("dup_3gram_frac")))
     // Span-contamination verdict — hit docs only (match-sized, like the
     // contamination flag list); rides the shared positional checkpoint.
     val spanRuns = contamSpanMinRun.map { r =>
       Contamination.spanOverlapRaw(evalDocs, docs, n = 3,
-          minRunTokens = r, trainShingles = sharedShingles,
-          trainShinglesN = sharedShingles.map(_ => 3))
+          minRunTokens = r, trainShingles = Some(sharedShingles),
+          trainShinglesN = Some(3))
         .select(col("doc_id"), col("max_run_tokens"))
     }
     // Fuzzy contamination verdict — hit docs only (match-sized): the
@@ -299,7 +287,8 @@ object CorpusPrep {
     // falls back to the merge plan for eval sets past broadcast size.
     val neardupHits = contamNeardupThreshold.map { t =>
       Dedup.minhashDupIds(docs, evalDocs, threshold = t,
-          observeName = "prep_neardup_clamp", newShingles = sharedShingles,
+          observeName = "prep_neardup_clamp",
+          newShingles = Some(sharedShingles),
           broadcastCorpus = contamNeardupBroadcastEval,
           newSetsFrame = sharedSets)
         .withColumn("__eval_neardup", lit(true))
@@ -311,10 +300,10 @@ object CorpusPrep {
       Dedup.containmentPairsRaw(docs, threshold = t, shingleSize = 3,
           window = 4, maxBucket = Dedup.DefaultMaxBucket,
           observeName = "prep_containment_clamp",
-          shingles = sharedShingles, shinglesN = sharedShingles.map(_ => 3))
+          shingles = Some(sharedShingles), shinglesN = Some(3))
         .select(col("doc_a").as("src"), col("doc_b").as("dst")))
     val clusters = Dedup.nearDupClusters(docs, threshold = nearDupThreshold,
-        shingles = sharedShingles, extraEdges = containEdges,
+        shingles = Some(sharedShingles), extraEdges = containEdges,
         digests = Some(stage1.select(col("doc_id"),
           col("content_digest").as("__dg"))),
         sets = sharedSets)
@@ -446,8 +435,8 @@ object CorpusPrep {
     // train_prep_dsir within noise), but reuse is a best-effort
     // optimizer property while the checkpoint is a contract — at
     // 100 TB a silently-duplicated curation pass is the bigger risk.
-    // Same localCheckpoint-vs-recompute trade as prepare's own
-    // shareShingles.
+    // Same localCheckpoint-vs-recompute trade as prepare's own shared
+    // shingle pass.
     // sorted = false: prepare's presentation orderBy is for the verdict
     // CONSUMER; here the frame is filtered to an id list and
     // checkpointed, and a checkpoint MATERIALIZES its physical plan —

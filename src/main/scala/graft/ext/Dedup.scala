@@ -1887,7 +1887,8 @@ object Dedup {
     * corpus-linear expensive stage — runs ONCE. Exchange reuse cannot
     * save it here the way it does for the banded form (the sides'
     * keys differ: plain vs bit-flipped), so the checkpoint is the
-    * single-pass mechanism (the CorpusPrep.shareShingles precedent);
+    * single-pass mechanism (CorpusPrep.prepare's shared shingle pass
+    * is the precedent);
     * PlanGuardSpec pins the shape. On a cluster, swap for reliable
     * `checkpoint()` to also survive executor loss.
     */

@@ -62,7 +62,7 @@ private[graft] object IndexCache {
   // `recacheByPath` on EVERY write under the table root — and the
   // streaming composites append to the index each trigger, so a
   // DataFrame-persist mirror thrashed (unpersist + table-sized re-read
-  // per fold; measured in the round-16 dropcache drill). The RDD keeps
+  // per fold; measured in round 16, SCALE.md). The RDD keeps
   // the parquet-scan lineage (evicted blocks recompute from the files)
   // while being invisible to the CacheManager. `df` rewraps the RDD
   // per call via [[org.apache.spark.sql.GraftRddFrame]].
@@ -134,28 +134,6 @@ private[graft] object IndexCache {
       val stale = cached.exists { case (name, p) =>
         live.get(name).forall(_ != p.fp) // changed OR removed
       }
-      // Refresh observability (`spark.graft.indexCacheDebug = true`):
-      // which partition invalidated the entry, or how many new
-      // partitions refresh incrementally — the signal that separates
-      // "mirror serves across triggers" from "mirror thrashes on every
-      // fold" in a drill's output.
-      if (spark.conf.getOption("spark.graft.indexCacheDebug")
-            .exists(_.toBoolean)) {
-        if (stale) {
-          val why = cached.collect {
-            case (name, p) if live.get(name).forall(_ != p.fp) =>
-              if (live.contains(name)) s"$name CHANGED" else s"$name REMOVED"
-          }
-          println(s"[indexcache] $dir INVALIDATED: ${why.mkString(", ")}")
-        } else {
-          val fresh = live.keySet -- cached.keySet
-          if (fresh.nonEmpty)
-            println(s"[indexcache] $dir incremental: +${fresh.size} " +
-              s"partition(s) ${fresh.toSeq.sorted.mkString(",")}")
-          else if (cached.nonEmpty)
-            println(s"[indexcache] $dir HIT (${cached.size} partitions)")
-        }
-      }
       val base = if (stale) {
         cached.values.foreach(unpersistQuietly)
         Map.empty[String, Part]
@@ -166,10 +144,11 @@ private[graft] object IndexCache {
           // so cached and direct reads are column-identical.
           val df = spark.read.option("basePath", dir)
             .parquet(s"$dir/$name")
-          // Named so the block-manager inventory (CacheDrill's storage
-          // report, the Spark UI storage tab) attributes mirror blocks
-          // to their index partition — the RDD mirror is CacheManager-
-          // invisible, so this name is its only surface observability.
+          // Named so the block-manager inventory (`getPersistentRDDs`,
+          // the Spark UI storage tab) attributes mirror blocks to their
+          // index partition — the RDD mirror is CacheManager-invisible,
+          // so this name is its only surface observability (ExtSpec
+          // pins the refresh behaviour by it).
           Part(fp,
             org.apache.spark.sql.GraftRddFrame.toRowRdd(df)
               .setName(s"graft-index-mirror:$dir/$name")

@@ -1239,9 +1239,10 @@ object TextAnalysis {
         "would be null; pass a non-empty target")
     val tf = tfHist.withColumn("nt", sum(col("ct")).over(all))
     // ONE candidate-corpus feature pass, shared by the histogram and the
-    // scoring join (16 bytes/feature local checkpoint — the CorpusPrep
-    // shareShingles precedent): without it the uni+bi stream evaluates
-    // twice, i.e. 4 candidate-corpus scans where 2 suffice.
+    // scoring join (16 bytes/feature local checkpoint — the precedent is
+    // CorpusPrep.prepare's shared shingle pass): without it the uni+bi
+    // stream evaluates twice, i.e. 4 candidate-corpus scans where 2
+    // suffice.
     val docFeats = feats(docs).localCheckpoint(eager = false)
     val sf = docFeats.groupBy("f").agg(count(lit(1)).as("cs"))
       .withColumn("ns", sum(col("cs")).over(all))

@@ -4,8 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ext.Dedup
 
-/** Containment scale drill (`runMain graft.tools.ContainDrill [docs]`,
-  * default 200k — 400× the sf0.01 documents table): plants
+/** Containment scale drill (`contain [docs]`, default 200k — 400× the sf0.01 documents table): plants
   * quoted-span inclusions at volume and a corpus-wide hot boilerplate
   * span, then measures what the operator docs claim:
   *
@@ -21,27 +20,17 @@ import graft.ext.Dedup
   *    correctly: a 16-of-76-token overlap cannot reach a 0.5
   *    containment threshold, so no true pair is lost to the drop.
   *
-  * Not part of the driver contract; numbers recorded in SCALE.md.
+  * Numbers recorded in SCALE.md.
   */
-object ContainDrill {
-  def main(args: Array[String]): Unit = {
-    val rows = if (args.nonEmpty) args(0).toLong else 200000L
-    val spark = ToolSession.local(32)
-
-    val observed =
-      new java.util.concurrent.ConcurrentHashMap[String, Map[String, Any]]()
-    spark.listenerManager.register(
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(f: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            d: Long): Unit =
-          qe.observedMetrics.foreach { case (n, row) =>
-            observed.put(n, row.schema.fieldNames.zip(row.toSeq).toMap); ()
-          }
-        override def onFailure(f: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            e: Exception): Unit = ()
-      })
+private[tools] object ContainDrill extends DrillDef("contain", Seq("30000")) {
+  def run(r: DrillRun, args: Seq[String]): Unit = {
+    val rows = args.lift(0).fold(200000L)(_.toLong)
+    val spark = r.spark
+    def clampOf(name: String): (String, Long) = {
+      val m = r.observed(name).getOrElse(Map.empty)
+      (m.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(", "),
+        m.get("dropped_buckets").collect { case l: Long => l }.getOrElse(0L))
+    }
 
     // Token streams keyed by (seed, salt, position) over a huge space →
     // cross-doc shingle collisions are negligible except where planted.
@@ -69,27 +58,21 @@ object ContainDrill {
             .otherwise(lit(""))).as("text"))
       .localCheckpoint()
 
-    val t0 = System.nanoTime()
-    val pairs = Dedup.containmentPairs(docs, threshold = 0.5)
-      .select("doc_a", "doc_b", "a_in_b").collect()
-    val sec = (System.nanoTime() - t0) / 1e9
-    // deterministic listener drain (the Bench discipline)
-    org.apache.spark.graftbridge.ListenerDrain.drain(
-      spark.sparkContext, 30000L)
+    val pairs = r.phase(s"containmentPairs over $rows docs") {
+      Dedup.containmentPairs(docs, threshold = 0.5)
+        .select("doc_a", "doc_b", "a_in_b").collect()
+    }
 
     val planted = (1L until rows by 100L).filter(_ + 1 < rows)
       .map(i => (i, i + 1)).toSet
-    val found = pairs.map(r => (r.getLong(0), r.getLong(1))).toSet
+    val found = pairs.map(p => (p.getLong(0), p.getLong(1))).toSet
     val hit = planted.count(found)
     val recall = hit.toDouble / planted.size
-    val clamp = Option(observed.get("containment_fp_clamp"))
-      .map(_.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
-        .mkString(", ")).getOrElse("?")
-    println(f"containmentPairs over $rows%d docs: ${sec}%.1f s, " +
-      f"${pairs.length}%d pairs, planted recall $recall%.4f " +
+    val (clamp, dropped) = clampOf("containment_fp_clamp")
+    println(f"containmentPairs: ${pairs.length}%d pairs, planted recall $recall%.4f " +
       f"($hit/${planted.size}); clamp: $clamp")
     val aInB = pairs.collect {
-      case r if planted((r.getLong(0), r.getLong(1))) => r.getDouble(2) }
+      case p if planted((p.getLong(0), p.getLong(1))) => p.getDouble(2) }
     if (aInB.nonEmpty)
       println(f"planted a_in_b: min ${aInB.min}%.3f mean " +
         f"${aInB.sum / aInB.length}%.3f")
@@ -97,9 +80,6 @@ object ContainDrill {
       f"planted containment recall $recall%.4f below 0.98")
     // the hot-span buckets must actually have been clamped — the drill
     // is meaningless (and would not have finished) otherwise
-    val dropped = Option(observed.get("containment_fp_clamp"))
-      .flatMap(_.get("dropped_buckets")).collect { case l: Long => l }
-      .getOrElse(0L)
     assert(dropped > 0, "expected the boilerplate fingerprint buckets " +
       s"to exceed the cap; observed: $clamp")
 
@@ -116,35 +96,26 @@ object ContainDrill {
       .select(col("id").as("doc_id"),
         concat_ws(" ", toks(col("id"), 5L, 60)).as("text"))
     val batch = passages.unionByName(fresh).localCheckpoint()
-    val idxPath = java.nio.file.Files
-      .createTempDirectory("contain-drill-idx").toString
-    val tb = System.nanoTime()
-    graft.ext.Dedup.buildContainmentIndex(standing, idxPath)
-    val buildSec = (System.nanoTime() - tb) / 1e9
-    val ts = System.nanoTime()
-    val verdicts = graft.ext.Dedup
-      .containmentAgainstIndex(batch, idxPath, threshold = 0.5)
-      .collect()
-    val screenSec = (System.nanoTime() - ts) / 1e9
-    org.apache.spark.graftbridge.ListenerDrain.drain(
-      spark.sparkContext, 30000L)
-    val byId = verdicts.map(r => r.getLong(0) ->
-      (r.getBoolean(1), Option(r.get(3)).map(_.asInstanceOf[Long]))).toMap
+    val idxPath = r.dir("idx")
+    r.phase("buildContainmentIndex (standing corpus)") {
+      Dedup.buildContainmentIndex(standing, idxPath)
+    }
+    val verdicts = r.phase(s"containmentAgainstIndex (${batch.count()} docs)") {
+      Dedup.containmentAgainstIndex(batch, idxPath, threshold = 0.5).collect()
+    }
+    val byId = verdicts.map(v => v.getLong(0) ->
+      (v.getBoolean(1), Option(v.get(3)).map(_.asInstanceOf[Long]))).toMap
     val passageIds = (1L until rows by 100L).filter(_ + 1 < rows)
     val contained = passageIds.count(id => !byId(id)._1)
     val matchedRight = passageIds.count(id => byId(id)._2.contains(id + 1))
     val novelFresh = (rows until rows + freshN).count(id => byId(id)._1)
-    val idxClamp = Option(observed.get("containment_idx_clamp"))
-      .map(_.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
-        .mkString(", ")).getOrElse("?")
-    println(f"containmentAgainstIndex: build ${buildSec}%.1f s, screen " +
-      f"${batch.count()}%d docs in ${screenSec}%.1f s; contained recall " +
+    val (idxClamp, _) = clampOf("containment_idx_clamp")
+    println(f"containmentAgainstIndex: contained recall " +
       f"${contained.toDouble / passageIds.size}%.4f " +
       f"($contained/${passageIds.size}, exact match $matchedRight), " +
       f"fresh novel $novelFresh/$freshN; clamp: $idxClamp")
     assert(contained.toDouble / passageIds.size >= 0.98,
       "indexed containment recall below 0.98")
     assert(novelFresh == freshN, "fresh docs must all be novel")
-    spark.stop()
   }
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.ext.{Contamination, Dedup}
 
-/** Fuzzy-decontamination scale drill (`runMain graft.tools.DecontamDrill
-  * [docs] [bcast|merge|scan-bcast|scan-merge]`, default 2M / bcast —
+/** Fuzzy-decontamination scale drill (`decontam [docs]
+  * [bcast|merge|scan-bcast|scan-merge]`, default 2M / bcast —
   * 4000× the sf0.01 documents table): measures the indexed fuzzy
   * contamination screen
   * ([[graft.ext.Contamination.neardupContaminationAgainstIndex]]) at
@@ -36,24 +36,22 @@ import graft.ext.{Contamination, Dedup}
   * ≥ 0.999 AND zero false flags (clean docs draw tokens from a 1e9
   * space — cross-doc collisions are negligible).
   *
-  * Per-pass telemetry: wall seconds, device read GB and (shuffle +
-  * index) write GB from /proc/self/io — the counters that caught the
-  * r16 sets-table shuffle bug. Not part of the driver contract;
-  * numbers recorded in SCALE.md.
+  * The screen's phase line carries device read GB and (shuffle +
+  * index) write GB — the counters that caught the r16 sets-table
+  * shuffle bug. Numbers recorded in SCALE.md.
   */
-object DecontamDrill {
-  def main(args: Array[String]): Unit = {
-    val rows = if (args.nonEmpty) args(0).toLong else 2000000L
-    val mode = if (args.length > 1) args(1) else "bcast"
+private[tools] object DecontamDrill
+    extends DrillDef("decontam", Seq("2000", "bcast")) {
+  def run(r: DrillRun, args: Seq[String]): Unit = {
+    val rows = args.lift(0).fold(2000000L)(_.toLong)
+    val mode = args.lift(1).getOrElse("bcast")
     // Loud on a typo'd mode: a silent fallback would label the printed
     // timing line (the SCALE.md record) with a plan that did not run.
     require(Set("bcast", "merge", "scan-bcast", "scan-merge")(mode),
       s"mode '$mode' not one of bcast|merge|scan-bcast|scan-merge")
     val scanForm = mode.startsWith("scan-")
     val useBroadcast = mode == "bcast" || mode == "scan-bcast"
-    val spark = ToolSession.local(32)
-
-    def io(field: String): Long = ToolSession.ioBytes(field)
+    val spark = r.spark
 
     def toks(seed: org.apache.spark.sql.Column, salt: Long, n: Int) =
       transform(sequence(lit(0), lit(n - 1)), i =>
@@ -74,17 +72,12 @@ object DecontamDrill {
           .otherwise(concat_ws(" ", toks(col("id"), 4L, 60))).as("text"))
       .localCheckpoint()
 
-    val idx = java.nio.file.Files
-      .createTempDirectory("decontam-drill").toString + "/mhidx"
-    if (!scanForm) {
-      val tb = System.nanoTime()
+    val idx = r.dir("mhidx")
+    if (!scanForm) r.phase(s"eval index build ($evalN docs)") {
       Dedup.buildMinhashIndex(evals, idx)
-      println(f"[drill] eval index build (${evalN}%d docs): " +
-        f"${(System.nanoTime() - tb) / 1e9}%.1f s")
     }
 
-    val (r0, w0, t0) = (io("read_bytes"), io("write_bytes"), System.nanoTime())
-    val flagged =
+    val flagged = r.phase(s"$mode screen over $rows docs") {
       (if (scanForm)
         Dedup.minhashDupIds(batch, evals,
           observeName = "decontam_drill_clamp",
@@ -95,21 +88,16 @@ object DecontamDrill {
           .filter(col("is_contaminated"))
           .select("doc_id"))
       .collect().map(_.getLong(0)).toSet
-    val sec = (System.nanoTime() - t0) / 1e9
-    val (readGb, writeGb) =
-      ((io("read_bytes") - r0) / 1e9, (io("write_bytes") - w0) / 1e9)
+    }
 
     val planted = (10000L until (10000L + rows)).filter(_ % 500 == 7).toSet
     val hit = planted.count(flagged)
     val falsePos = (flagged -- planted).size
     val recall = hit.toDouble / planted.size
-    println(f"[drill] $mode%s screen over " +
-      f"$rows%d docs: $sec%.1f s, read $readGb%.2f GB, write $writeGb%.2f GB; " +
-      f"flagged ${flagged.size}%d, planted recall $recall%.4f " +
+    println(f"$mode%s: flagged ${flagged.size}%d, planted recall $recall%.4f " +
       f"($hit/${planted.size}), false flags $falsePos%d")
     assert(recall >= 0.999,
       f"planted near-dup recall $recall%.4f below 0.999")
     assert(falsePos == 0, s"$falsePos clean docs falsely flagged")
-    spark.stop()
   }
 }

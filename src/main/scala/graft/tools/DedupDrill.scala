@@ -6,18 +6,19 @@ import graft.ext.Dedup
 
 /** Dedup scale drill: runs the LLM-pipeline dedup operators over a
   * synthetic corpus orders of magnitude past the testdata documents
-  * table (`runMain graft.tools.DedupDrill [docs]`, default 2M — 4000×
-  * the sf0.01 corpus). Content derives deterministically from the doc
+  * table (`dedup [docs] [skewDocs]`, default 2M / 200k — 4000× the
+  * sf0.01 corpus). Content derives deterministically from the doc
   * id (30 tokens over a 5k vocab); 5% of docs are exact duplicates
   * (every 20th doc repeats the content of the doc 7 below it), so the
   * expected duplicate count is known and asserted, not just timed.
   * Demonstrates the dedup family's cost tracks the scan/shuffle of
-  * hashes — not pairs — at volume. Not part of the driver contract.
+  * hashes — not pairs — at volume.
   */
-object DedupDrill {
-  def main(args: Array[String]): Unit = {
-    val rows = if (args.nonEmpty) args(0).toLong else 2000000L
-    val spark = ToolSession.local(32)
+private[tools] object DedupDrill
+    extends DrillDef("dedup", Seq("2000", "20100")) {
+  def run(r: DrillRun, args: Seq[String]): Unit = {
+    val rows = args.lift(0).fold(2000000L)(_.toLong)
+    val spark = r.spark
     val docs = spark.range(rows).select(
         col("id").as("doc_id"),
         when(col("id") % 20 === 7, col("id") - 7).otherwise(col("id"))
@@ -29,32 +30,25 @@ object DedupDrill {
           .as("text"))
       .localCheckpoint() // materialize once; drills measure the operators
 
-    def time(label: String)(f: => Long): Long = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"$label%-32s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($n)")
-      n
-    }
-
     val expectedDups = rows / 20 // every id ≡ 7 (mod 20) repeats id-7
-    val dups = time("exact dedup (digest hash-agg)") {
+    val dups = r.phase("exact dedup (digest hash-agg)") {
       Dedup.exactStats(docs).head().getAs[Long]("duplicate_docs")
     }
     assert(dups == expectedDups, s"expected $expectedDups dups, got $dups")
-    time("minhash signatures") {
+    r.phase("minhash signatures") {
       Dedup.minhashSignatures(docs).count()
     }
-    val pairs = time("minhash near-dup pairs (join-back)") {
+    val pairs = r.phase("minhash near-dup pairs (join-back)") {
       Dedup.minhashNearDupPairs(docs, threshold = 0.9).count()
     }
     assert(pairs >= expectedDups,
       s"LSH must surface every exact-dup pair: $pairs < $expectedDups")
-    val pairsFused = time("minhash near-dup pairs (fused)") {
+    val pairsFused = r.phase("minhash near-dup pairs (fused)") {
       Dedup.minhashNearDupPairsFused(docs, threshold = 0.9).count()
     }
     assert(pairsFused == pairs,
       s"fused form must find the same pairs: $pairsFused != $pairs")
-    time("incremental dedup (new 1% vs rest)") {
+    r.phase("incremental dedup (new 1% vs rest)") {
       val cut = rows - rows / 100
       Dedup.dedupAgainstSeen(
         docs.filter(col("doc_id") >= cut),
@@ -83,16 +77,15 @@ object DedupDrill {
           .as("text"))
       .localCheckpoint()
     val expectedNovel = batchN - batchN / 2 // the fresh (odd-id) half
-    val novelRecompute = time("minhash novel (recompute corpus side)") {
+    val novelRecompute = r.phase("minhash novel (recompute corpus side)") {
       Dedup.minhashNovel(batch, docs, threshold = 0.9).count()
     }
-    val idxPath = java.nio.file.Files
-      .createTempDirectory("dedup-drill-idx").toString + "/idx"
-    time("minhash index build (full corpus)") {
+    val idxPath = r.dir("minhash")
+    r.phase("minhash index build (full corpus)") {
       Dedup.buildMinhashIndex(docs, idxPath)
       spark.read.parquet(s"$idxPath/sets").count()
     }
-    val novelIndexed = time("minhash novel (persisted index)") {
+    val novelIndexed = r.phase("minhash novel (persisted index)") {
       Dedup.minhashNovelAgainstIndex(batch, idxPath, threshold = 0.9)
         .filter(col("is_novel")).count()
     }
@@ -103,16 +96,17 @@ object DedupDrill {
         s"of $batchN, expected $expectedNovel")
     // Small-file decay and compaction (the Bm25Drill story on this
     // index): a stream feeding the index creates one ingest partition
-    // per trigger; measure the screen after 20 small appends, compact,
-    // re-measure — the fold must restore query cost AND verdicts
-    // exactly.
+    // per trigger; measure the screen after 20 small appends (one per
+    // 1,000 docs below 20k), compact, re-measure — the fold must restore
+    // query cost AND verdicts exactly.
     def fileCount(p: String): Long = {
       def walk(f: java.io.File): Long =
         if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(walk).sum
         else if (f.getName.endsWith(".parquet")) 1L else 0L
       walk(new java.io.File(p))
     }
-    (1 to 20).foreach { i =>
+    val appends = (rows / 1000).max(1L).min(20L).toInt
+    (1 to appends).foreach { i =>
       // tiny per-trigger batches of fresh docs (ids past the drill space)
       val b = spark.range(10L * rows + i * 100L, 10L * rows + i * 100L + 100L)
         .select(col("id").as("doc_id"),
@@ -122,14 +116,14 @@ object DedupDrill {
             .as("text"))
       Dedup.appendMinhashIndex(b, idxPath, ingestId = i)
     }
-    println(f"after 20 appends: ${fileCount(idxPath)}%d parquet files")
-    val vPre = time("screen after 20 appends") {
+    println(f"after $appends%d appends: ${fileCount(idxPath)}%d parquet files")
+    val vPre = r.phase(s"screen after $appends appends") {
       Dedup.minhashNovelAgainstIndex(batch, idxPath, threshold = 0.9)
         .filter(col("is_novel")).count()
     }
     assert(Dedup.compactMinhashIndex(spark, idxPath))
     println(f"after compaction:  ${fileCount(idxPath)}%d parquet files")
-    val vPost = time("screen after compaction") {
+    val vPost = r.phase("screen after compaction") {
       Dedup.minhashNovelAgainstIndex(batch, idxPath, threshold = 0.9)
         .filter(col("is_novel")).count()
     }
@@ -153,7 +147,7 @@ object DedupDrill {
     // (1−0.93⁴)⁸ ≈ 1.5e-5 (an earlier 0.81-J plant lost the expected
     // ~1.2% of pairs to banding, not to the cap).
     // -------------------------------------------------------------------
-    val skewRows = if (args.length > 1) args(1).toLong else 200000L
+    val skewRows = args.lift(1).fold(200000L)(_.toLong)
     def skewCorpus(n: Long) = {
       def toks(seed: org.apache.spark.sql.Column, from: Int, to: Int) =
         transform(sequence(lit(from), lit(to)),
@@ -169,10 +163,10 @@ object DedupDrill {
     }
     val smallN = math.min(skewRows, 50000L)
     val small = skewCorpus(smallN)
-    val uncappedPairs = time(f"skew $smallN%d: pairs UNCAPPED") {
+    val uncappedPairs = r.phase(f"skew $smallN%d: pairs UNCAPPED") {
       Dedup.minhashNearDupPairs(small, maxBucket = 0).count()
     }
-    val cappedSmall = time(f"skew $smallN%d: pairs capped@1000") {
+    val cappedSmall = r.phase(f"skew $smallN%d: pairs capped@1000") {
       Dedup.minhashNearDupPairs(small).count()
     }
     val cluster = (smallN + 16) / 20 // ids ≡ 3 (mod 20)
@@ -181,14 +175,16 @@ object DedupDrill {
     assert(uncappedPairs - cappedSmall >= cluster * (cluster - 1) / 2,
       "uncapped run must contain the full boilerplate pair space")
     val skew = if (skewRows == smallN) small else skewCorpus(skewRows)
-    val cappedFull = time(f"skew $skewRows%d: pairs capped@1000") {
-      Dedup.minhashNearDupPairs(skew).count()
-    }
+    val cappedFull =
+      if (skewRows == smallN) cappedSmall
+      else r.phase(f"skew $skewRows%d: pairs capped@1000") {
+        Dedup.minhashNearDupPairs(skew).count()
+      }
     println(f"  capped pair count at full skew scale: $cappedFull%d")
     // Recall pin: EVERY planted cold-bucket near-dup pair survives the
     // cap (the boilerplate cluster's internal pairs are the documented
     // loss — they are exact dups, the exact-dedup pre-pass' job).
-    val planted = time("skew recall: planted pairs found") {
+    val planted = r.phase("skew recall: planted pairs found") {
       val found = Dedup.minhashNearDupPairs(skew)
         .filter(col("doc_b") % 1000 === 9 && col("doc_a") === col("doc_b") - 4)
         .count()
@@ -203,7 +199,7 @@ object DedupDrill {
     // collapse it to ONE survivor (star diameter 2 → CC converges in a
     // couple of iterations — no pair blowup anywhere).
     val boilerDocs = (skewRows + 16) / 20
-    time("skew clusters capped (star edges)") {
+    r.phase("skew clusters capped (star edges)") {
       val nonKeep = Dedup.nearDupClusters(skew).filter(!col("keep")).count()
       assert(nonKeep >= boilerDocs - 1 + skewRows / 1000,
         s"template cluster dissolved: only $nonKeep non-survivors, " +
@@ -225,26 +221,25 @@ object DedupDrill {
     // this scale), so the copies' catch is asserted and the novel
     // count reported.
     // -------------------------------------------------------------------
-    val shPath = java.nio.file.Files
-      .createTempDirectory("dedup-drill-simhash").toString + "/idx"
-    time("simhash index build (full corpus)") {
+    val shPath = r.dir("simhash")
+    r.phase("simhash index build (full corpus)") {
       Dedup.buildSimhashIndex(docs, shPath)
       spark.read.parquet(s"$shPath/fps").count()
     }
-    val shNovelR3 = time("simhash novel r3 (broadcast probe)") {
+    val shNovelR3 = r.phase("simhash novel r3 (broadcast probe)") {
       Dedup.simhashNovelAgainstIndex(batch, shPath, maxHamming = 3)
         .filter(col("is_novel")).count()
     }
     assert(shNovelR3 == expectedNovel,
       s"radius-3 screen: $shNovelR3 novel of $batchN, expected " +
         s"$expectedNovel (copies Hamming 0, fresh beyond chance radius)")
-    val shNovelR3m = time("simhash novel r3 (merge plan)") {
+    val shNovelR3m = r.phase("simhash novel r3 (merge plan)") {
       Dedup.simhashNovelAgainstIndex(batch, shPath, maxHamming = 3,
         broadcastBatch = false).filter(col("is_novel")).count()
     }
     assert(shNovelR3m == shNovelR3,
       s"join plans must agree: $shNovelR3m != $shNovelR3")
-    val shCaughtR7 = time("simhash novel r7 (MIH probe)") {
+    val shCaughtR7 = r.phase("simhash novel r7 (MIH probe)") {
       Dedup.simhashNovelAgainstIndex(batch, shPath, maxHamming = 7)
         .filter(!col("is_novel") && col("best_hamming") === 0).count()
     }
@@ -252,6 +247,5 @@ object DedupDrill {
       s"radius-7 must catch every planted copy at distance 0: " +
         s"$shCaughtR7 < ${batchN / 2}")
     println(f"  simhash r7 caught-at-0: $shCaughtR7%d of ${batchN / 2}%d planted copies")
-    spark.stop()
   }
 }

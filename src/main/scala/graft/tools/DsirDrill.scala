@@ -4,21 +4,19 @@ import org.apache.spark.sql.functions._
 
 import graft.ext.TextAnalysis
 
-/** DSIR scale drill (`runMain graft.tools.DsirDrill [docs]`, default
-  * 2M): builds the persisted target model from a 50k-doc in-domain
+/** DSIR scale drill (`dsir [docs]`, default 2M): builds the persisted target model from a 50k-doc in-domain
   * slice (its own vocabulary partition), scores the full mixed corpus
   * against it, and measures the two claims the operator docs make —
   * the model stays `buckets`-row-bounded regardless of corpus size,
   * and the scores SEPARATE in-domain from out-of-domain docs (the
   * selection property; asserted on group means, not just timed). 10%
   * of corpus docs draw from the target vocabulary, 90% from a general
-  * vocabulary 50× larger. Not part of the driver contract; numbers in
-  * SCALE.md.
+  * vocabulary 50× larger. Numbers in SCALE.md.
   */
-object DsirDrill {
-  def main(args: Array[String]): Unit = {
-    val rows = if (args.nonEmpty) args(0).toLong else 2000000L
-    val spark = ToolSession.local(32)
+private[tools] object DsirDrill extends DrillDef("dsir", Seq("2000")) {
+  def run(r: DrillRun, args: Seq[String]): Unit = {
+    val rows = args.lift(0).fold(2000000L)(_.toLong)
+    val spark = r.spark
 
     def textOf(seed: org.apache.spark.sql.Column,
                vocabPrefix: String, vocabSize: Long) =
@@ -36,32 +34,24 @@ object DsirDrill {
         (col("id") + 10 * rows).as("doc_id"),
         textOf(col("id") + 3 * rows, "sp", 1000L).as("text"))
       .localCheckpoint()
-
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"$label%-44s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
     // Bucket count is the RESOLUTION knob: at 1024 buckets the 50k
     // general unigrams fold onto buckets carrying target mass, which
     // dampens the ratio (collisions are the model's quantization
     // noise); widening the table sharpens separation at the cost of a
     // proportionally larger — still tiny — model. Measure both.
     val separations = Seq(1024, 65536).map { buckets =>
-      val idx = java.nio.file.Files.createTempDirectory("dsir-drill")
-        .toString + "/idx"
-      time(f"buildDsirIndex (50k-doc target, $buckets%d buckets)") {
+      val idx = r.dir(s"dsir-$buckets")
+      r.phase(f"buildDsirIndex (50k-doc target, $buckets%d buckets)") {
         TextAnalysis.buildDsirIndex(target, idx, buckets)
       }
       val modelRows = spark.read.parquet(idx).count()
       assert(modelRows <= buckets)
-      val means = time(f"dsirWeightsIndexed over $rows%d docs") {
+      val means = r.phase(f"dsirWeightsIndexed over $rows%d docs") {
         TextAnalysis.dsirWeightsIndexed(spark, idx, docs)
           .groupBy((col("doc_id") % 10 === 0).as("in_domain"))
           .agg(avg(col("mean_log_ratio")).as("m"), count(lit(1)).as("n"))
-          .collect().map(r => r.getBoolean(0) -> (r.getDouble(1),
-            r.getLong(2))).toMap
+          .collect().map(m => m.getBoolean(0) -> (m.getDouble(1),
+            m.getLong(2))).toMap
       }
       val ((inM, inN), (outM, outN)) = (means(true), means(false))
       println(f"buckets=$buckets%d model_rows=$modelRows%d " +
@@ -76,6 +66,5 @@ object DsirDrill {
     // wider table → sharper separation (the resolution claim, measured)
     assert(separations(1)._2 > separations(0)._2,
       s"expected 64k buckets to separate more than 1024: $separations")
-    spark.stop()
   }
 }

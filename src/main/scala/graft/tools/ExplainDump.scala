@@ -14,7 +14,7 @@ object ExplainDump {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = ToolSession.local(4)
+    val spark = ToolSession.local()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.ext.TextAnalysis
 
 /** Gopher-battery scale drill
-  * (`runMain graft.tools.GopherDrill [docs]`, default 2M docs — 4000×
+  * (`gopher [docs]`, default 2M docs — 4000×
   * the sf0.01 doc count). Unplanted docs are unique random-vocab text
   * (30 × ~19-char tokens); four planted families each trip EXACTLY ONE
   * of the three gates, so every expected count is exact and
@@ -30,17 +30,15 @@ import graft.ext.TextAnalysis
   * Thresholds: word window [20, 150], maxMeanLen 25 (the drill vocab's
   * ~19-char tokens sit over the published web-text 10), minStopwords 0
   * (no English function words in the vocab); all other bounds
-  * published. Each battery is timed with the r16 steal/device-read
-  * convention. The point at 100 TB: all three are scan-bound zero-
-  * hash-exchange projections (PlanGuardSpec pins the plans), so drill
-  * wall-time ≈ generate + fold cost, with 0.00 GB device reads off the
-  * checkpointed corpus. Not part of the driver contract.
+  * published. Each battery is one phase. The point at 100 TB: all
+  * three are scan-bound zero-hash-exchange projections (PlanGuardSpec
+  * pins the plans), so drill wall-time ≈ generate + fold cost, with
+  * 0.00 GB device reads off the checkpointed corpus.
   */
-object GopherDrill {
-  def main(args: Array[String]): Unit = {
-    val n = if (args.nonEmpty) args(0).toLong else 2000000L
+private[tools] object GopherDrill extends DrillDef("gopher", Seq("2000")) {
+  def run(r: DrillRun, args: Seq[String]): Unit = {
+    val n = args.lift(0).fold(2000000L)(_.toLong)
     require(n >= 5, "need the planted residues populated")
-    val spark = ToolSession.local(16)
 
     val doc = col("doc_id")
     val base = ToolSession.drillTokens(doc, 30)
@@ -54,7 +52,7 @@ object GopherDrill {
           lit(Seq.fill(8)("##").mkString(" "))))
       .when(doc % 1000 === 4, ToolSession.drillTokens(doc, 200))
       .otherwise(base)
-    val docs = spark.range(n).select(col("id").as("doc_id"))
+    val docs = r.spark.range(n).select(col("id").as("doc_id"))
       .select(doc, text.as("text"))
       .localCheckpoint()
 
@@ -62,22 +60,9 @@ object GopherDrill {
     def fam(k: Long): Long = if (n > k) (n - 1 - k) / 1000 + 1 else 0L
     val (nA, nB, nC, nD) = (fam(1), fam(2), fam(3), fam(4))
 
-    def phase(label: String)(f: => Long): Long = {
-      val (io0, st0) = (ToolSession.ioBytes("read_bytes"),
-        ToolSession.statJiffies._2)
-      val t0 = System.nanoTime()
-      val r = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      val gb = (ToolSession.ioBytes("read_bytes") - io0) / 1e9
-      val steal = (ToolSession.statJiffies._2 - st0) / 100.0
-      println(f"[gopher-drill] $label%-22s $sec%8.1f s  " +
-        f"device_read $gb%6.2f GB  steal $steal%6.2f CPU-s  failed $r%d")
-      r
-    }
-
     val cfg = TextAnalysis.GopherGateConfig(minWords = 20, maxWords = 150,
       maxMeanLen = 25.0, minStopwords = 0)
-    val qFail = phase("quality battery") {
+    val qFail = r.phase("quality battery") {
       TextAnalysis.gopherQualityStats(docs, minWords = cfg.minWords,
           maxWords = cfg.maxWords, maxMeanLen = cfg.maxMeanLen,
           minStopwords = cfg.minStopwords)
@@ -85,20 +70,19 @@ object GopherDrill {
     }
     assert(qFail == nC + nD, s"quality gate: $qFail != ${nC + nD}")
 
-    val gFail = phase("n-gram battery") {
+    val gFail = r.phase("n-gram battery") {
       TextAnalysis.gopherNgramStats(docs)
         .filter(!col("gopher_ngram_ok")).count()
     }
     assert(gFail == nA, s"ngram gate: $gFail != $nA")
 
-    val lFail = phase("line battery") {
+    val lFail = r.phase("line battery") {
       TextAnalysis.lineRepetitionStats(docs)
         .filter(!col("gopher_ok")).count()
     }
     assert(lFail == nB, s"line gate: $lFail != $nB")
 
-    println(s"[gopher-drill] OK: n=$n families A=$nA B=$nB C=$nC D=$nD " +
+    println(s"OK: n=$n families A=$nA B=$nB C=$nC D=$nD " +
       "— each battery failed exactly its own plants")
-    spark.stop()
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.ext.{Sampling, TextAnalysis}
 
 /** Line-granular curation + sharded-shuffle scale drill
-  * (`runMain graft.tools.LineOpsDrill [docs]`, default 2M docs × 10
+  * (`lineops [docs]`, default 2M docs × 10
   * lines = 20M lines — 40 000× the sf0.01 line volume). Unplanted lines
   * are unique BY CONSTRUCTION (the first token embeds (doc, line)), so
   * every expected count below is exact, not statistical. Three planted
@@ -25,13 +25,12 @@ import graft.ext.{Sampling, TextAnalysis}
   * unique filler. Asserts exact removed totals AND exactly one kept
   * copy per planted key; times filterLines (scan-bound row-local pass)
   * and shuffleShards (one exchange + per-shard sort, balance asserted)
-  * on the same corpus. Steal/device-read telemetry per phase (the r16
-  * convention). Not part of the driver contract.
+  * on the same corpus.
   */
-object LineOpsDrill {
-  def main(args: Array[String]): Unit = {
-    val n = if (args.nonEmpty) args(0).toLong else 2000000L
-    val spark = ToolSession.local(16)
+private[tools] object LineOpsDrill extends DrillDef("lineops", Seq("2000")) {
+  def run(r: DrillRun, args: Seq[String]): Unit = {
+    val n = args.lift(0).fold(2000000L)(_.toLong)
+    val spark = r.spark
 
     val doc = col("doc_id")
     def uniq(j: Int) =
@@ -48,18 +47,6 @@ object LineOpsDrill {
         uniq(8), lit("")).as("text"))
       .localCheckpoint()
 
-    def phase[T](label: String)(f: => T): T = {
-      val (io0, st0) = (ToolSession.ioBytes("read_bytes"),
-        ToolSession.statJiffies._2)
-      val t0 = System.nanoTime()
-      val r = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      val gb = (ToolSession.ioBytes("read_bytes") - io0) / 1e9
-      val steal = (ToolSession.statJiffies._2 - st0) / 100.0
-      println(f"$label%-36s $sec%8.2f s  read $gb%6.2f GB  steal $steal%6.2f CPU-s")
-      r
-    }
-
     // Exact per-family plant arithmetic for ANY n ≥ 2, in closed form
     // (no divisibility assumptions, no O(n) driver walk): hot4 = docs
     // carrying the boilerplate plant (doc 0 always qualifies, so
@@ -74,17 +61,17 @@ object LineOpsDrill {
     val expectedRemoved = (n - 1) + (hot4 - 1) + (c997 - grp997)
 
     val out = TextAnalysis.dedupLines(docs)
-    val (removed, textLen) = phase(s"dedupLines ($n docs, ${n * 10} lines)") {
-      val r = out.agg(sum("lines_removed"), sum(length(col("clean_text"))))
-        .head()
-      (r.getLong(0), r.getLong(1))
+    val (removed, textLen) = r.phase(s"dedupLines ($n docs, ${n * 10} lines)") {
+      val sums = out.agg(sum("lines_removed"),
+        sum(length(col("clean_text")))).head()
+      (sums.getLong(0), sums.getLong(1))
     }
     assert(removed == expectedRemoved,
       s"expected $expectedRemoved removed lines, got $removed")
     assert(textLen > 0)
 
     // Exactly one survivor per planted normalized key, blanks intact.
-    phase("verify planted survivors") {
+    r.phase("verify planted survivors") {
       val kept = TextAnalysis.dedupLines(docs)
         .select(explode(split(col("clean_text"), "\n")).as("line"))
         .select(lower(trim(col("line"))).as("k"))
@@ -92,7 +79,7 @@ object LineOpsDrill {
           "normal case line", "hotline alpha beta gamma delta") ||
           col("k").startsWith("dupline grp "))
         .groupBy("k").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+        .map(c => c.getString(0) -> c.getLong(1)).toMap
       assert(counts("normal case line") == 1L, counts)
       assert(counts("hotline alpha beta gamma delta") == 1L, counts)
       val grp = counts.view.filterKeys(_.startsWith("dupline grp ")).toMap
@@ -102,14 +89,14 @@ object LineOpsDrill {
       counts.size
     }
 
-    phase("filterLines (row-local, scan-bound)") {
-      val r = TextAnalysis.filterLines(docs, minWords = 3,
+    r.phase("filterLines (row-local, scan-bound)") {
+      val res = TextAnalysis.filterLines(docs, minWords = 3,
           blocklist = Seq("hotline"))
         .agg(sum("lines_kept"), sum("lines_dropped")).head()
       // Drops: the blank line (all docs) and the hotline blocklist
       // plants — every other line (incl. the 3-word "dupline grp <k>"
       // plants) clears the word floor.
-      val dropped = r.getLong(1)
+      val dropped = res.getLong(1)
       assert(dropped == n + hot4,
         s"expected ${n + hot4} dropped, got $dropped")
       dropped
@@ -119,14 +106,13 @@ object LineOpsDrill {
     // per-trigger-sized batch screened against them — half verbatim
     // copies of corpus docs (every non-blank line held → 9 removed
     // each), half entirely fresh (0 removed). Exact, not statistical.
-    val idxPath = java.nio.file.Files
-      .createTempDirectory("lineops-idx").toString
-    phase(s"buildLineIndex ($n docs at rest)") {
+    val idxPath = r.dir("lines")
+    r.phase(s"buildLineIndex ($n docs at rest)") {
       TextAnalysis.buildLineIndex(docs, idxPath)
       spark.read.parquet(s"$idxPath/lines").count()
     }
     val nCopy = math.min(n, 10000L)
-    phase(s"dedupLinesAgainstIndex (${nCopy + 10000} batch)") {
+    r.phase(s"dedupLinesAgainstIndex (${nCopy + 10000} batch)") {
       val copies = docs.filter(doc < nCopy)
         .select((doc + n * 10).as("doc_id"), col("text"))
       val fresh = spark.range(10000)
@@ -134,21 +120,22 @@ object LineOpsDrill {
         .select(col("doc_id"), concat_ws("\n",
           (0 to 9).map(j => concat(lit(s"f${j}x"), col("doc_id"),
             lit(s" fresh alpha beta gamma line $j"))): _*).as("text"))
-      val r = TextAnalysis.dedupLinesAgainstIndex(
+      val removed = TextAnalysis.dedupLinesAgainstIndex(
           copies.unionAll(fresh), idxPath)
         .agg(sum("lines_removed")).head().getLong(0)
-      assert(r == 9L * nCopy, s"expected ${9L * nCopy} removed, got $r")
-      r
+      assert(removed == 9L * nCopy,
+        s"expected ${9L * nCopy} removed, got $removed")
+      removed
     }
 
-    phase("shuffleShards (256 shards)") {
+    r.phase("shuffleShards (256 shards)") {
       val s = Sampling.shuffleShards(docs.select("doc_id"), col("doc_id"),
         numShards = 256, seed = "drill")
       val sizes = s.groupBy("shard").agg(count(lit(1)).as("c"),
           max("pos").as("mx")).collect()
       assert(sizes.length == 256)
       // pos is dense 1..c within every shard; digest buckets balance.
-      assert(sizes.forall(r => r.getLong(2) == r.getLong(1)))
+      assert(sizes.forall(row => row.getLong(2) == row.getLong(1)))
       val cs = sizes.map(_.getLong(1))
       // Binomial balance: every shard within ±5σ of the n/256 mean.
       val mean = n.toDouble / 256
@@ -157,6 +144,5 @@ object LineOpsDrill {
         s"shard imbalance: min ${cs.min} max ${cs.max} mean $mean")
       cs.sum
     }
-    spark.stop()
   }
 }

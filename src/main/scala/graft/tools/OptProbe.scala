@@ -9,15 +9,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * answer to "where do the seconds go". Not part of the driver contract.
   *
   * Usage: runMain graft.tools.OptProbe <name> [<name> ...]
-  * (`SPARK_GRAFT_SF_DIR` and `SPARK_GRAFT_CPUS` as for Bench.)
+  * (`SPARK_GRAFT_SF_DIR` as for Bench; cores from `SPARK_GRAFT_CPUS`,
+  * [[ToolSession.local]].)
   */
 object OptProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     sys.props("graft.verify.exact") = "false"
-    val spark = graft.GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession.local()
     // Same table warm + index warm as Bench so the probe measures
     // steady-state cost, not first-decode init.
     Seq("region", "nation", "customer", "supplier", "part", "orders",

@@ -33,7 +33,7 @@ object OracleFixture {
     val n = if (args.length > 0) args(0).toInt else 5000
     val dir = if (args.length > 1) args(1) else "/tmp/graft-oracle-fixture"
     val out = s"$dir/out"
-    val spark = ToolSession.local(8)
+    val spark = ToolSession.local()
     val anchors = graft.ext.Similarity.centroids(10, 64, 99L)
     val anchorLit = typedLit(anchors.map(_.toSeq))
     spark.range(n.toLong).select(col("id").as("vec_id"),

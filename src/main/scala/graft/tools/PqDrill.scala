@@ -11,14 +11,14 @@ import graft.ext.{Quantization, Similarity}
   * ratio (claimed ~16× before bit-packing: 64 float dims → 4 ints) and
   * the repeated-query cost of pruned ADC vs pruned raw-vector scoring.
   * Also asserts the indexed ADC rows equal the in-frame IVF×PQ
-  * composition (the QuantizationSpec equality, at volume). Not part of
-  * the driver contract; numbers recorded in SCALE.md.
+  * composition (the QuantizationSpec equality, at volume). Numbers
+  * recorded in SCALE.md.
   */
-object PqDrill {
-  def main(args: Array[String]): Unit = {
-    val rows = if (args.nonEmpty) args(0).toLong else 2000000L
+private[tools] object PqDrill extends DrillDef("pq", Seq("2000")) {
+  def run(r: DrillRun, args: Seq[String]): Unit = {
+    val rows = args.lift(0).fold(2000000L)(_.toLong)
     val dim = 64
-    val spark = ToolSession.local(32)
+    val spark = r.spark
     val emb = spark.range(rows).select(
         col("id").as("vec_id"),
         (col("id") % 5).cast("int").as("label"),
@@ -26,30 +26,21 @@ object PqDrill {
           i => ((pmod(xxhash64(col("id") * 131 + i), lit(2000000)) -
             1000000L) / 1000000.0).cast("float")).as("embedding"))
       .localCheckpoint()
-
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"$label%-40s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
     def dirBytes(p: String): Long = {
       val fs = new org.apache.hadoop.fs.Path(p)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength
     }
 
-    val ivfPath = java.nio.file.Files.createTempDirectory("pq-drill-ivf")
-      .toString + "/idx"
-    val pqPath = java.nio.file.Files.createTempDirectory("pq-drill-pq")
-      .toString + "/idx"
-    val books = time("pqTrain (m=4, k=16, 3 rounds)") {
+    val ivfPath = r.dir("ivf")
+    val pqPath = r.dir("pq")
+    val books = r.phase("pqTrain (m=4, k=16, 3 rounds)") {
       Quantization.pqTrain(emb, m = 4, k = 16, iters = 3, dim = dim)
     }
-    time("build raw IVF index (embeddings at rest)") {
+    r.phase("build raw IVF index (embeddings at rest)") {
       Similarity.buildIvfIndex(emb, ivfPath, nlist = 64, dim = dim)
     }
-    time("build PQ index (codes at rest)") {
+    r.phase("build PQ index (codes at rest)") {
       Quantization.buildPqIndex(emb, pqPath, books, dim = dim, nlist = 64)
     }
     val rawB = dirBytes(ivfPath)
@@ -57,20 +48,20 @@ object PqDrill {
     println(f"at rest: raw ${rawB / 1e6}%.0f MB, pq ${pqB / 1e6}%.0f MB, ratio ${rawB.toDouble / pqB}%.1f x")
 
     val (qv, qn) = Similarity.lookupVec(spark, ivfPath, 42L)
-    val raw = time("indexed raw top-10 (pruned, warm 2nd)") {
+    val raw = r.phase("indexed raw top-10 (pruned, warm 2nd)") {
       Similarity.annTopKIndexed(spark, ivfPath, qv, qn, k = 10,
         nprobe = 4).collect()
       Similarity.annTopKIndexed(spark, ivfPath, qv, qn, k = 10,
         nprobe = 4).collect()
     }
-    val adc = time("indexed ADC top-10 (pruned, warm 2nd)") {
+    val adc = r.phase("indexed ADC top-10 (pruned, warm 2nd)") {
       Quantization.pqTopKIndexed(spark, pqPath, qv, k = 10, nprobe = 4)
         .collect()
       Quantization.pqTopKIndexed(spark, pqPath, qv, k = 10, nprobe = 4)
         .collect()
     }
     assert(raw.length == 10 && adc.length == 10)
-    val inframe = time("in-frame IVF x PQ (full corpus re-encode)") {
+    val inframe = r.phase("in-frame IVF x PQ (full corpus re-encode)") {
       Quantization.pqTopKIvf(emb, books, queryId = 42L, k = 10, dim = dim,
         nlist = 64, nprobe = 4).collect()
     }
@@ -78,10 +69,10 @@ object PqDrill {
       "indexed ADC must equal the in-frame composition at volume")
     // Two-stage retrieval at volume. COST on the big corpus: the
     // rerank's second stage must price candidates, not corpus.
-    time("exact cosine top-10 (full raw corpus scan)") {
+    r.phase("exact cosine top-10 (full raw corpus scan)") {
       Similarity.cosineTopK(emb, queryId = 42L, k = 10).collect()
     }
-    val rerank = time("pqRerank top-10 (codes pass + 100-row rerank)") {
+    val rerank = r.phase("pqRerank top-10 (codes pass + 100-row rerank)") {
       Quantization.pqRerank(emb, books, queryId = 42L, k = 11,
         kCand = 100, dim = dim).collect().map(_.getLong(0)).toSet
     }
@@ -115,15 +106,15 @@ object PqDrill {
             (pmod(xxhash64(col("id") * 64 + j), lit(1000)) - 500) /
               lit(5000.0)).cast("float")).as("embedding"))
       .localCheckpoint()
-    val cbooks = time(f"pqTrain on $cn%d clustered vectors") {
+    val cbooks = r.phase(f"pqTrain on $cn%d clustered vectors") {
       Quantization.pqTrain(clustered, m = 4, k = 16, iters = 3, dim = dim)
     }
     val kSmall = 100
     val kBig = (2L * cn / 50L).toInt // 2× the per-cluster tie class
-    val rSmall = time(f"two-stage recall@10 (clustered, kCand=$kSmall%d)") {
+    val rSmall = r.phase(f"two-stage recall@10 (clustered, kCand=$kSmall%d)") {
       recallAt10(clustered, cbooks, kSmall)
     }
-    val rBig = time(f"two-stage recall@10 (clustered, kCand=$kBig%d)") {
+    val rBig = r.phase(f"two-stage recall@10 (clustered, kCand=$kBig%d)") {
       recallAt10(clustered, cbooks, kBig)
     }
     println(f"two-stage recall@10: clustered $rSmall%.2f@$kSmall%d / " +
@@ -134,20 +125,9 @@ object PqDrill {
     // AUTO shortlist (r12): the tie-class-complete threshold must reach
     // the same recall with NO hand-tuned kCand — the sizing law
     // executed by the operator instead of applied by the caller. The
-    // observation listener surfaces the size it chose.
-    val autoObs = new java.util.concurrent.atomic.AtomicReference[String]("?")
-    spark.listenerManager.register(
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(f: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            d: Long): Unit =
-          qe.observedMetrics.get("pq_drill_auto").foreach { row =>
-            autoObs.set(s"kcand_effective=${row.getAs[Long]("kcand_effective")}")
-          }
-        override def onFailure(f: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            e: Exception): Unit = ()
-      })
+    // observed metric surfaces the size it chose.
+    def autoObs = r.observed("pq_drill_auto")
+      .fold("?")(m => s"kcand_effective=${m("kcand_effective")}")
     def recallAuto(corpus: org.apache.spark.sql.DataFrame,
                    bks: Seq[Seq[Seq[Float]]]): Double = {
       val exact = Similarity.cosineTopK(corpus, 42L, 10).collect()
@@ -157,12 +137,11 @@ object PqDrill {
         .collect().map(_.getLong(0)).toSet - 42L
       rr.count(exact) / 10.0
     }
-    val rAuto = time("two-stage recall@10 (clustered, AUTO shortlist)") {
+    val rAuto = r.phase("two-stage recall@10 (clustered, AUTO shortlist)") {
       recallAuto(clustered, cbooks)
     }
-    Thread.sleep(500) // listener delivery is async
     println(f"auto-shortlist recall@10: clustered $rAuto%.2f " +
-      s"(${autoObs.get()}) — no kCand argument")
+      s"($autoObs) — no kCand argument")
     assert(rAuto >= 0.9,
       f"auto shortlist must recall the exact top-k: $rAuto%.2f")
     // The negative control stays honest under auto sizing: isotropic
@@ -170,9 +149,7 @@ object PqDrill {
     // shortlist and recall stays ~0 — auto sizing fixes tie-class
     // truncation, it cannot add signal 16-bit codes don't carry.
     val rAutoUniform = recallAuto(emb, books)
-    Thread.sleep(500)
     println(f"auto-shortlist recall@10: uniform $rAutoUniform%.2f " +
-      s"(${autoObs.get()}) — isotropic negative control")
-    spark.stop()
+      s"($autoObs) — isotropic negative control")
   }
 }

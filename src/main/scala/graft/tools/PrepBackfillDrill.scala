@@ -3,17 +3,15 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 /** Backfill-scale proof for the BATCH curation composite at the
-  * corpus_prep_v5 config (`runMain graft.tools.PrepBackfillDrill
-  * [batchDocs]`, default 2M): every screen on — quality, blocklist,
+  * corpus_prep_v5 config (`prepbackfill [batchDocs]`, default 2M): every screen on — quality, blocklist,
   * exact dedup, LSH near-dup clustering widened with containment
   * edges, all THREE contamination rules (scattered-count,
   * contiguous-span, fuzzy near-dup), the semantic-outlier screen, the
   * repetition veto, and (r18 ext-2) the full Gopher doc-quality
-  * battery — over a parquet-backed corpus-sized batch,
-  * with planted truth per family and the r16 I/O-counter convention
-  * (/proc/self/io read_bytes AND write_bytes deltas around the run:
-  * the write counter is where a hidden second corpus pass or a
-  * corpus-sized shuffle of the fuzzy veto would show up).
+  * battery — over a parquet-backed corpus-sized batch, with planted
+  * truth per family. The run's phase line carries the device read AND
+  * write bytes: the write counter is where a hidden second corpus pass
+  * or a corpus-sized shuffle of the fuzzy veto would show up.
   *
   * Plants (1% each; every family caught by EXACTLY the screens its
   * design names):
@@ -45,22 +43,18 @@ import org.apache.spark.sql.functions._
   * Heap: the 2M run holds the positional shingle checkpoint (~2.3 GB)
   * plus the composite's window/aggregate state — the default sbt
   * -Xmx4g starves execution memory (measured: UNABLE_TO_ACQUIRE at
-  * stage 30). Run with SBT_OPTS raising -Xmx to ≥ 16g; a cluster
+  * stage 30). Run with SBT_OPTS raising -Xmx to ≥ 16g, and with
+  * SPARK_GRAFT_CPUS at 16 or fewer: the composite's per-task hash
+  * state (collect_set aggregates, positional windows) divides the
+  * execution pool by the task count, and 32-way concurrency starved it
+  * at 2M docs (measured UNABLE_TO_ACQUIRE even at 48g). A cluster
   * deployment has executor memory for this by construction.
-  * Not part of the driver contract.
   */
-object PrepBackfillDrill {
-  def main(args: Array[String]): Unit = {
-    val batchN = if (args.nonEmpty) args(0).toLong else 2000000L
-    // Fewer, fatter tasks by default: the composite's per-task hash
-    // state (collect_set aggregates, positional windows) divides the
-    // execution pool by the task count, and 32-way concurrency starves
-    // it at this batch size (measured UNABLE_TO_ACQUIRE even at 48g).
-    val cores = if (args.length > 1) args(1).toInt else 16
-    val spark = ToolSession.local(cores)
-
-    def ioBytes(field: String): Long = ToolSession.ioBytes(field)
-    def statJiffies: (Long, Long) = ToolSession.statJiffies
+private[tools] object PrepBackfillDrill
+    extends DrillDef("prepbackfill", Seq("2000")) {
+  def run(r: DrillRun, args: Seq[String]): Unit = {
+    val batchN = args.lift(0).fold(2000000L)(_.toLong)
+    val spark = r.spark
     def tokensN(seed: org.apache.spark.sql.Column, n: Int) =
       ToolSession.drillTokens(seed, n)
 
@@ -87,9 +81,7 @@ object PrepBackfillDrill {
     val planted =
       blocked + 2 * twinPairs + contam + fuzzy + stutter + gopherSpam
     val fresh = batchN - planted - outliers
-    val tmp = java.nio.file.Files
-      .createTempDirectory("prep-backfill").toString
-    val batchDir = s"$tmp/batch"
+    val batchDir = r.dir("batch")
     val base = 100000000L
     spark.range(base, base + batchN)
       .select(col("id").as("doc_id"), (col("id") - base).as("k"))
@@ -148,31 +140,23 @@ object PrepBackfillDrill {
         iters = 4, z = 4.0)
       .select(col("vec_id")).collect().map(_.getLong(0) - base).toSet
 
-    val (r0, w0) = (ioBytes("read_bytes"), ioBytes("write_bytes"))
-    val (iw0, st0) = statJiffies
-    val t1 = System.nanoTime()
-    val out = graft.ext.CorpusPrep.prepare(
-      batch.select("doc_id", "text"), evalDocs,
-      blocklist = Seq("plantbad"),
-      containmentThreshold = Some(0.5),
-      embeddings = Some(emb),
-      outlierZ = 4.0,
-      repetitionMaxDupFrac = Some(0.2),
-      contamSpanMinRun = Some(8),
-      contamNeardupThreshold = Some(0.5),
-      gopherGate = Some(graft.ext.TextAnalysis.GopherGateConfig(
-        minWords = 5, maxWords = 1000000L, maxMeanLen = 40.0,
-        minStopwords = 0)),
-      sorted = false)
-    val rep = graft.ext.CorpusPrep.report(out).head()
-    val wall = (System.nanoTime() - t1) / 1e9
-    val rGb = (ioBytes("read_bytes") - r0) / 1e9
-    val wGb = (ioBytes("write_bytes") - w0) / 1e9
-    val (iw1, st1) = statJiffies
-    println(f"prepare+report ($batchN%d-doc backfill, corpus_prep_v5 " +
-      f"config): $wall%.1f s (read $rGb%.2f GB, write $wGb%.2f GB, " +
-      f"iowait ${(iw1 - iw0) / 100.0}%.1f cpu-s, " +
-      f"steal ${(st1 - st0) / 100.0}%.1f cpu-s)")
+    val rep = r.phase(s"prepare+report ($batchN-doc backfill, " +
+        "corpus_prep_v5 config)") {
+      val out = graft.ext.CorpusPrep.prepare(
+        batch.select("doc_id", "text"), evalDocs,
+        blocklist = Seq("plantbad"),
+        containmentThreshold = Some(0.5),
+        embeddings = Some(emb),
+        outlierZ = 4.0,
+        repetitionMaxDupFrac = Some(0.2),
+        contamSpanMinRun = Some(8),
+        contamNeardupThreshold = Some(0.5),
+        gopherGate = Some(graft.ext.TextAnalysis.GopherGateConfig(
+          minWords = 5, maxWords = 1000000L, maxMeanLen = 40.0,
+          minStopwords = 0)),
+        sorted = false)
+      graft.ext.CorpusPrep.report(out).head()
+    }
     println(rep.toString)
 
     def n(name: String): Long = rep.getAs[Long](name)
@@ -219,6 +203,5 @@ object PrepBackfillDrill {
     println(s"plant asserts OK (eleven families exact; outliers " +
       s"composite≡standalone at ${flaggedK.size} flagged, " +
       s"$garbageKept garbage docs legitimately under the in-frame cut)")
-    spark.stop()
   }
 }

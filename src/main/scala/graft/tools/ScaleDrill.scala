@@ -4,45 +4,37 @@ import org.apache.spark.sql.functions._
 
 /** Scale drill: runs the reference-analytics shapes over a
   * TripGenSource corpus far larger than the biggest testdata SF
-  * (`runMain graft.tools.ScaleDrill [rows]`, default 20M — ~33× the
-  * sf0.1 lineitem). Demonstrates that the aggregation layer's cost
-  * scales with the scan, not with plan overhead, and that the custom
-  * DSv2 source feeds the engine at volume. Not part of the driver
-  * contract.
+  * (`scale [rows]`, default 20M — ~33× the sf0.1 lineitem).
+  * Demonstrates that the aggregation layer's cost scales with the scan,
+  * not with plan overhead, and that the custom DSv2 source feeds the
+  * engine at volume.
   */
-object ScaleDrill {
-  def main(args: Array[String]): Unit = {
-    val rows = if (args.nonEmpty) args(0).toLong else 20000000L
-    val spark = ToolSession.local(32)
-    def gen = spark.read.format("graft.sources.TripGenSource")
+private[tools] object ScaleDrill extends DrillDef("scale", Seq("20000")) {
+  def run(r: DrillRun, args: Seq[String]): Unit = {
+    val rows = args.lift(0).fold(20000000L)(_.toLong)
+    def gen = r.spark.read.format("graft.sources.TripGenSource")
       .option("rows", rows.toString).option("partitions", "64").load()
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"$label%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($n rows)")
-    }
-    time("scan count")(gen.count())
-    time("global trip statistics") {
+    r.phase("scan count")(gen.count())
+    r.phase("global trip statistics") {
       gen.agg(count(lit(1)), avg("fare_amount"),
         graft.agg.Analytics.dsum(col("fare_amount"))).count()
     }
-    time("vendor comparison") {
+    r.phase("vendor comparison") {
       gen.groupBy("vendor_id")
         .agg(count(lit(1)), graft.agg.Analytics.dsum(col("fare_amount")))
         .count()
     }
-    time("hourly stats") {
+    r.phase("hourly stats") {
       gen.groupBy(date_format(col("pickup_ts"), "yyyy-MM-dd"),
           hour(col("pickup_ts")))
         .agg(count(lit(1)), graft.agg.Analytics.dsum(col("fare_amount")))
         .count()
     }
-    time("top-100 fares") {
+    r.phase("top-100 fares") {
       gen.orderBy(col("fare_amount").desc, col("id")).limit(100).count()
     }
-    time("pushdown range (1% of ids)") {
+    r.phase("pushdown range (1% of ids)") {
       gen.filter(col("id") >= rows - rows / 100).count()
     }
-    spark.stop()
   }
 }

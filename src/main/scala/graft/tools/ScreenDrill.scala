@@ -2,16 +2,16 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-/** Streaming-curation scale drill (`runMain graft.tools.ScreenDrill
-  * [standingDocs] [triggers] [batchSize] [full|fullcache] [dropcache]`,
-  * default 200k / 6 / 1000): builds the standing MinHash index once,
-  * then drives
+/** Streaming-curation scale drill (`screen [standingDocs] [triggers]
+  * [batchSize] [full|fullcache]`, default 200k / 6 / 1000): builds the
+  * standing MinHash index once, then drives
   * [[graft.stream.Pipeline.curationStream]] through repeated triggers
   * of planted batches — per trigger: 10% byte-identical copies of
   * standing docs (must be caught by the novelty screen), 5%
   * blocklisted (must fail the gate), 5% intra-batch twin pairs (one
   * survivor each), the rest fresh (must be kept). Asserts the verdict
-  * counts per trigger and prints per-trigger wall — the number that
+  * counts per trigger and prints each trigger's phase line (wall, GC,
+  * device read/write, steal) — the number that
   * matters at 100 TB is that trigger cost tracks the BATCH, not the
   * standing corpus, and stays flat as the index absorbs survivors.
   *
@@ -30,49 +30,19 @@ import org.apache.spark.sql.functions._
   * embeddings (ONLY the outlier screen can catch them), and 5%
   * copy-paste-stutter docs (unique phrase repeated 20×; ONLY the
   * repetition veto can catch them) — asserted per trigger.
-  * Not part of the driver contract.
+  * `fullcache` is `full` with the cross-trigger index cache on.
   */
-object ScreenDrill {
-  def main(args: Array[String]): Unit = {
-    val standingN = if (args.length > 0) args(0).toLong else 200000L
-    val triggers = if (args.length > 1) args(1).toInt else 6
-    val batchN = if (args.length > 2) args(2).toInt else 1000
-    val full = args.length > 3 && args(3).startsWith("full")
-    // `dropcache` (args(4)): sync + drop the OS page cache before every
-    // trigger — the IndexCache A/B's missing half. On local NVMe the
-    // page cache serves the per-trigger index re-read almost for free
-    // (the r14 negative result); dropping it models the cache's actual
-    // win condition — an index whose re-read is NOT free (object
-    // store, cold tier, memory-pressured host) — without leaving the
-    // measured I/O path. Best-effort: requires root.
-    val dropCache = args.length > 4 && args(4) == "dropcache"
-    def dropPageCache(): Unit = if (dropCache) {
-      val rc = new ProcessBuilder("sh", "-c",
-        "sync; echo 3 > /proc/sys/vm/drop_caches").start().waitFor()
-      if (rc != 0) println(s"[drill] drop_caches failed rc=$rc")
-    }
-    // Per-trigger GC attribution (r15 verdict: the 20M trigger spread
-    // was ATTRIBUTED to GC on the big single-JVM heap but not
-    // measured): total stop-the-world collection time across all
-    // collectors, deltaed around each trigger.
-    def gcMillis: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime.max(0L)).sum
-    }
-    // Per-trigger STORAGE reads (ToolSession.ioBytes — actual device
-    // I/O, not page-cache hits) and host (iowait, steal) jiffies
-    // (ToolSession.statJiffies): with GC, these decompose a slow
-    // trigger into its real cause. The r16 20M run REFUTED the r15 GC
-    // attribution (96 s trigger, 0.11 s GC) — the remaining suspects
-    // are cold index re-reads (page cache squeezed by the big heap on
-    // a disk-backed /tmp) and neighbor steal, so measure both.
-    def ioBytes(field: String): Long = ToolSession.ioBytes(field)
-    def statJiffies: (Long, Long) = ToolSession.statJiffies
-    val spark = ToolSession.local(32)
-    // `fullcache`: same drill with the cross-trigger index cache on —
-    // the A/B for the at-rest-rescan bottleneck the 10M run named.
-    if (args.length > 3 && args(3) == "fullcache")
+private[tools] object ScreenDrill
+    extends DrillDef("screen", Seq("2000", "2", "200", "fullcache")) {
+  def run(r: DrillRun, args: Seq[String]): Unit = {
+    val standingN = args.lift(0).fold(200000L)(_.toLong)
+    val triggers = args.lift(1).fold(6)(_.toInt)
+    val batchN = args.lift(2).fold(1000)(_.toInt)
+    val full = args.lift(3).exists(_.startsWith("full"))
+    val spark = r.spark
+    // `fullcache`: the A/B for the at-rest-rescan bottleneck the 10M
+    // run named.
+    if (args.lift(3).contains("fullcache"))
       spark.conf.set("spark.graft.indexCache", "true")
     import spark.implicits._
 
@@ -83,20 +53,18 @@ object ScreenDrill {
       .select(col("id").as("doc_id"), tokens(col("id")).as("text"))
       .localCheckpoint()
 
-    val tmp = java.nio.file.Files
-      .createTempDirectory("screen-drill").toString
-    val idx = s"$tmp/idx"
-    val t0 = System.nanoTime()
-    graft.ext.Dedup.buildMinhashIndex(standing, idx)
-    println(f"index build ($standingN%d docs): ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    val idx = r.dir("idx")
+    r.phase(s"index build ($standingN docs)") {
+      graft.ext.Dedup.buildMinhashIndex(standing, idx)
+    }
 
     // Full mode: the frozen reference state the r14 screens consume.
     val evalN = 1000
     val evalSeed = 3333333333L
     def mkEmb(id: Long, noise: Float): Array[Float] = {
-      val r = new scala.util.Random(id)
+      val rnd = new scala.util.Random(id)
       Array.tabulate(64)(j => (if (j == 0) 10f else 0f) +
-        (r.nextFloat() * 2 - 1) * noise)
+        (rnd.nextFloat() * 2 - 1) * noise)
     }
     // Fuzzy (r18, the curation_screen_v3 config): a SECOND eval suite
     // of 5-token docs with its own MinHash index — short enough that a
@@ -106,24 +74,24 @@ object ScreenDrill {
     // screen's UNIQUE coverage, planted through the composite.
     val ndEvalN = 1000
     val ndSeed = 5555555555L
-    val (evIdx, oIdx, ndIdx) = (s"$tmp/evidx", s"$tmp/oidx", s"$tmp/ndidx")
+    val (evIdx, oIdx, ndIdx) = (r.dir("evidx"), r.dir("oidx"), r.dir("ndidx"))
     if (full) {
-      val te = System.nanoTime()
-      graft.ext.Contamination.buildEvalIndex(
-        spark.range(evalN).select(col("id").as("doc_id"),
-          tokens(col("id") + evalSeed).as("text")), evIdx)
-      println(f"eval-gram index build ($evalN%d docs): ${(System.nanoTime() - te) / 1e9}%.1f s")
-      val tn = System.nanoTime()
-      graft.ext.Dedup.buildMinhashIndex(
-        spark.range(ndEvalN).select(col("id").as("doc_id"),
-          tokensN(col("id") + ndSeed, 5).as("text")), ndIdx)
-      println(f"fuzzy-eval MinHash index build ($ndEvalN%d docs): ${(System.nanoTime() - tn) / 1e9}%.1f s")
-      val to = System.nanoTime()
-      graft.ext.Similarity.buildOutlierIndex(
-        spark.range(50000).select(col("id").as("vec_id")).as[Long]
-          .map(i => (i, mkEmb(i, 0.01f))).toDF("vec_id", "embedding"),
-        oIdx)
-      println(f"outlier model fit (50000 vecs): ${(System.nanoTime() - to) / 1e9}%.1f s")
+      r.phase(s"eval-gram index build ($evalN docs)") {
+        graft.ext.Contamination.buildEvalIndex(
+          spark.range(evalN).select(col("id").as("doc_id"),
+            tokens(col("id") + evalSeed).as("text")), evIdx)
+      }
+      r.phase(s"fuzzy-eval MinHash index build ($ndEvalN docs)") {
+        graft.ext.Dedup.buildMinhashIndex(
+          spark.range(ndEvalN).select(col("id").as("doc_id"),
+            tokensN(col("id") + ndSeed, 5).as("text")), ndIdx)
+      }
+      r.phase("outlier model fit (50000 vecs)") {
+        graft.ext.Similarity.buildOutlierIndex(
+          spark.range(50000).select(col("id").as("vec_id")).as[Long]
+            .map(i => (i, mkEmb(i, 0.01f))).toDF("vec_id", "embedding"),
+          oIdx)
+      }
     }
 
     val copies = batchN / 10      // planted standing dups
@@ -136,8 +104,8 @@ object ScreenDrill {
     val fresh = batchN - copies - blocked - 2 * twinPairs - contam -
       fuzzy - outliers - stutter
 
-    // One generator for both modes; the embedding column is ignored by
-    // the 2-column stream.
+    // One generator for both modes; the stream drops the embedding
+    // column outside full mode.
     def mkBatch(trig: Int): Seq[(Long, String, Array[Float])] = {
       val base = standingN * 10L + trig.toLong * batchN
       spark.range(base, base + batchN).select(
@@ -173,115 +141,69 @@ object ScreenDrill {
                 concat(lit("stutterphrasealphawordb"), col("doc_id")),
                 concat(lit("stutterphrasealphawordc"), col("doc_id"))))))
           .otherwise(tokens(col("doc_id") + 7777777L)).as("text"))
-        .collect().map { r =>
-          val (id, k) = (r.getLong(0), r.getLong(1))
+        .collect().map { row =>
+          val (id, k) = (row.getLong(0), row.getLong(1))
           val garbage = k >= copies + blocked + 2 * twinPairs + contam +
             fuzzy + stutter &&
             k < copies + blocked + 2 * twinPairs + contam + fuzzy +
               stutter + outliers
-          (id, r.getString(2), mkEmb(id, if (garbage) 3f else 0.01f))
+          (id, row.getString(2), mkEmb(id, if (garbage) 3f else 0.01f))
         }.toSeq
     }
 
-    if (full) {
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Array[Float])](
-          implicitly[org.apache.spark.sql.Encoder[(Long, String, Array[Float])]],
-          spark.sqlContext)
-      // outlierZ = 4: at the default z = 2 the frozen boundary flags
-      // the clean cloud's own ~2σ tail by construction (measured 2.7%
-      // of in-distribution docs at this corpus) — correct screen
-      // behavior, but this drill asserts EXACT planted counts, so it
-      // pins at a cut where clean docs never land while the garbage
-      // plants (cos ≈ 0.58 vs µ ≈ 0.9999, tens of σ out) always do.
-      val query = graft.stream.Pipeline.curationStream(
-        source.toDF().toDF("doc_id", "text", "embedding"), idx,
-        s"$tmp/verdicts", s"$tmp/ckpt", blocklist = Seq("plantbad"),
-        contamIndexPath = Some(evIdx), contamSpanMinRun = Some(8),
-        neardupEvalIndexPath = Some(ndIdx),
-        outlierIndexPath = Some(oIdx),
-        outlierZ = 4.0, repetitionMaxDupFrac = Some(0.2),
-        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))
-      try {
-        (0 until triggers).foreach { trig =>
-          val batch = mkBatch(trig)
-          dropPageCache()
-          val (g0, r0, w0) = (gcMillis, ioBytes("read_bytes"),
-            ioBytes("write_bytes"))
-          val (iw0, st0) = statJiffies
-          val tb = System.nanoTime()
+    val source = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String, Array[Float])](
+        implicitly[org.apache.spark.sql.Encoder[(Long, String, Array[Float])]],
+        spark.sqlContext)
+    val input = source.toDF().toDF("doc_id", "text", "embedding")
+    // outlierZ = 4: at the default z = 2 the frozen boundary flags the
+    // clean cloud's own ~2σ tail by construction (measured 2.7% of
+    // in-distribution docs at this corpus) — correct screen behavior,
+    // but this drill asserts EXACT planted counts, so it pins at a cut
+    // where clean docs never land while the garbage plants (cos ≈ 0.58
+    // vs µ ≈ 0.9999, tens of σ out) always do.
+    val query = graft.stream.Pipeline.curationStream(
+      if (full) input else input.select("doc_id", "text"), idx,
+      r.dir("verdicts"), r.dir("ckpt"), blocklist = Seq("plantbad"),
+      contamIndexPath = Option.when(full)(evIdx),
+      contamSpanMinRun = Option.when(full)(8),
+      neardupEvalIndexPath = Option.when(full)(ndIdx),
+      outlierIndexPath = Option.when(full)(oIdx), outlierZ = 4.0,
+      repetitionMaxDupFrac = Option.when(full)(0.2),
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))
+    try {
+      (0 until triggers).foreach { trig =>
+        val batch = mkBatch(trig)
+        r.phase(s"trigger $trig") {
           source.addData(batch: _*)
           query.processAllAvailable()
-          val sec = (System.nanoTime() - tb) / 1e9
-          val gcSec = (gcMillis - g0) / 1e3
-          val rGb = (ioBytes("read_bytes") - r0) / 1e9
-          val wGb = (ioBytes("write_bytes") - w0) / 1e9
-          val (iw1, st1) = statJiffies
-          val (iowSec, stSec) = ((iw1 - iw0) / 100.0, (st1 - st0) / 100.0)
-          val v = spark.read.parquet(s"$tmp/verdicts/batch_id=$trig")
-          val kept = v.filter(col("kept")).count()
-          val caught = v.filter(!col("is_novel")).count()
-          val gated = v.filter(!col("blocklist_ok")).count()
-          val cont = v.filter(col("is_contaminated")).count()
-          val spanHits = v.filter(!col("span_ok")).count()
-          val fuzz = v.filter(!col("neardup_ok")).count()
-          val outl = v.filter(col("is_outlier")).count()
-          val rep = v.filter(!col("repetition_ok")).count()
-          println(f"trigger $trig%d: $sec%6.2f s (gc $gcSec%5.2f s, read $rGb%6.2f GB, write $wGb%6.2f GB, iowait $iowSec%6.1f cpu-s, steal $stSec%5.1f cpu-s)  kept=$kept%d caught=$caught%d blocked=$gated%d contaminated=$cont%d spans=$spanHits%d fuzzy=$fuzz%d outliers=$outl%d stutter=$rep%d")
-          assert(caught == copies, s"trigger $trig: caught $caught != $copies")
-          assert(gated == blocked, s"trigger $trig: blocked $gated != $blocked")
-          assert(cont == contam, s"trigger $trig: contaminated $cont != $contam")
-          // the verbatim eval copies are 30-token runs — the span rule
-          // catches exactly them (standing/fresh/stutter text shares no
-          // eval 3-gram sequences)
-          assert(spanHits == contam, s"trigger $trig: spans $spanHits != $contam")
-          // the fuzzy screen's index is the SHORT suite only, so its
-          // planted family is exactly the flagged set — the count/span
-          // plants share no gram with it
-          assert(fuzz == fuzzy, s"trigger $trig: fuzzy $fuzz != $fuzzy")
-          assert(outl == outliers, s"trigger $trig: outliers $outl != $outliers")
-          assert(rep == stutter, s"trigger $trig: stutter $rep != $stutter")
-          assert(kept == fresh + twinPairs,
-            s"trigger $trig: kept $kept != ${fresh + twinPairs}")
         }
-      } finally query.stop()
-    } else {
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)](
-          implicitly[org.apache.spark.sql.Encoder[(Long, String)]],
-          spark.sqlContext)
-      val query = graft.stream.Pipeline.curationStream(
-        source.toDF().toDF("doc_id", "text"), idx,
-        s"$tmp/verdicts", s"$tmp/ckpt", blocklist = Seq("plantbad"),
-        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))
-      try {
-        (0 until triggers).foreach { trig =>
-          val batch = mkBatch(trig).map(t => (t._1, t._2))
-          dropPageCache()
-          val (g0, r0, w0) = (gcMillis, ioBytes("read_bytes"),
-            ioBytes("write_bytes"))
-          val (iw0, st0) = statJiffies
-          val tb = System.nanoTime()
-          source.addData(batch: _*)
-          query.processAllAvailable()
-          val sec = (System.nanoTime() - tb) / 1e9
-          val gcSec = (gcMillis - g0) / 1e3
-          val rGb = (ioBytes("read_bytes") - r0) / 1e9
-          val wGb = (ioBytes("write_bytes") - w0) / 1e9
-          val (iw1, st1) = statJiffies
-          val (iowSec, stSec) = ((iw1 - iw0) / 100.0, (st1 - st0) / 100.0)
-          val v = spark.read.parquet(s"$tmp/verdicts/batch_id=$trig")
-          val kept = v.filter(col("kept")).count()
-          val caught = v.filter(!col("is_novel")).count()
-          val gated = v.filter(!col("blocklist_ok")).count()
-          println(f"trigger $trig%d: $sec%6.2f s (gc $gcSec%5.2f s, read $rGb%6.2f GB, write $wGb%6.2f GB, iowait $iowSec%6.1f cpu-s, steal $stSec%5.1f cpu-s)  kept=$kept%d caught=$caught%d blocked=$gated%d")
-          assert(caught == copies, s"trigger $trig: caught $caught != $copies")
-          assert(gated == blocked, s"trigger $trig: blocked $gated != $blocked")
-          assert(kept == fresh + twinPairs,
-            s"trigger $trig: kept $kept != ${fresh + twinPairs}")
-        }
-      } finally query.stop()
-    }
-    spark.stop()
+        val v = spark.read.parquet(r.dir(s"verdicts/batch_id=$trig"))
+        val kept = v.filter(col("kept")).count()
+        val caught = v.filter(!col("is_novel")).count()
+        val gated = v.filter(!col("blocklist_ok")).count()
+        val cont = v.filter(col("is_contaminated")).count()
+        val spanHits = v.filter(!col("span_ok")).count()
+        val fuzz = v.filter(!col("neardup_ok")).count()
+        val outl = v.filter(col("is_outlier")).count()
+        val rep = v.filter(!col("repetition_ok")).count()
+        println(f"trigger $trig%d: kept=$kept%d caught=$caught%d blocked=$gated%d contaminated=$cont%d spans=$spanHits%d fuzzy=$fuzz%d outliers=$outl%d stutter=$rep%d")
+        assert(caught == copies, s"trigger $trig: caught $caught != $copies")
+        assert(gated == blocked, s"trigger $trig: blocked $gated != $blocked")
+        assert(cont == contam, s"trigger $trig: contaminated $cont != $contam")
+        // the verbatim eval copies are 30-token runs — the span rule
+        // catches exactly them (standing/fresh/stutter text shares no
+        // eval 3-gram sequences)
+        assert(spanHits == contam, s"trigger $trig: spans $spanHits != $contam")
+        // the fuzzy screen's index is the SHORT suite only, so its
+        // planted family is exactly the flagged set — the count/span
+        // plants share no gram with it
+        assert(fuzz == fuzzy, s"trigger $trig: fuzzy $fuzz != $fuzzy")
+        assert(outl == outliers, s"trigger $trig: outliers $outl != $outliers")
+        assert(rep == stutter, s"trigger $trig: stutter $rep != $stutter")
+        assert(kept == fresh + twinPairs,
+          s"trigger $trig: kept $kept != ${fresh + twinPairs}")
+      }
+    } finally query.stop()
   }
 }

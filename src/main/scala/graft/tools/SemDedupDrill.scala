@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
 
-/** SemDeDup scale drill (`runMain graft.tools.SemDedupDrill [vectors]`):
+/** SemDeDup scale drill (`semdedup [vectors]`, default 1M):
   * measures the multi-assignment trade on a synthetic 1M × 64-dim
   * corpus with PLANTED near-duplicates — pair-space factor and
   * cell-stage recall for single assignment, boundary-conditional top-2
@@ -16,22 +16,15 @@ import graft.ext.Similarity
   * operator then runs end-to-end at a smaller volume as a wall-clock
   * sanity check. Cells come from [[Similarity.assignedCells]] — the
   * operator's real assignment path, not a replica. Findings live in
-  * SCALE.md. Not part of the driver contract.
+  * SCALE.md.
   */
-object SemDedupDrill {
-  def main(args: Array[String]): Unit = {
-    val n = if (args.nonEmpty) args(0).toLong else 1000000L
+private[tools] object SemDedupDrill extends DrillDef("semdedup", Seq("2000")) {
+  def run(r: DrillRun, args: Seq[String]): Unit = {
+    val n = args.lift(0).fold(1000000L)(_.toLong)
     val nDups = n / 50 // 2% planted near-duplicates
     val dim = 64
     val k = 128
-    val spark = ToolSession.local(32)
-
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"$label%-44s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
+    val spark = r.spark
 
     // Same deterministic hash-mix corpus as AnnDrill; the planted dup of
     // base vector b is b with component 0 scaled 1.05× — cosine > 0.999,
@@ -48,7 +41,7 @@ object SemDedupDrill {
         .as("embedding"))
     val emb = base.unionByName(dups).localCheckpoint()
 
-    val cs = time(s"k-means fit (k=$k, 2 iters, ${n + nDups} vecs)") {
+    val cs = r.phase(s"k-means fit (k=$k, 2 iters, ${n + nDups} vecs)") {
       Similarity.kmeansFit(emb, k = k, iters = 2, dim = dim)
     }
 
@@ -58,22 +51,21 @@ object SemDedupDrill {
       ("m=2 eps=0.02", 2, 0.02), ("m=2 eps=0.05", 2, 0.05),
       ("m=2 eps=0.1", 2, 0.1), ("m=2 uncond", 2, 2.0))
 
-    val rows = regimes.map { case (label, m, eps) =>
+    val table = regimes.map { case (label, m, eps) =>
       val celled = Similarity.assignedCells(emb, cs, m, eps)
         .select("vec_id", "cell").localCheckpoint()
       val assigned = celled.count()
       // Exact candidate-pair count from occupancy: Σ_cell c·(c−1)/2.
-      val pairs = time(s"pair space ($label)") {
+      val pairs = r.phase(s"pair space ($label)") {
         celled.groupBy("cell").agg(count(lit(1)).as("c"))
           .agg(sum(col("c") * (col("c") - 1) / 2).cast("long"))
           .head().getLong(0)
       }
       // Recall of the CELL stage on the planted pairs: (b, b+n) is
       // comparable iff the two sides share ≥1 cell.
-      val recall = time(s"planted-pair cell recall ($label)") {
+      val recall = r.phase(s"planted-pair cell recall ($label)") {
         val l = celled.as("l")
-        val r = celled.as("r")
-        val hit = l.join(r,
+        val hit = l.join(celled.as("r"),
             col("l.vec_id") + lit(n) === col("r.vec_id") &&
               col("l.cell") === col("r.cell"))
           .select(col("l.vec_id")).distinct().count()
@@ -81,10 +73,10 @@ object SemDedupDrill {
       }
       (label, assigned, pairs, recall)
     }
-    val basePairs = rows.head._3
+    val basePairs = table.head._3
     println(f"${"regime"}%-14s ${"rows"}%12s ${"beta"}%7s " +
       f"${"cand pairs"}%14s ${"factor"}%7s ${"recall"}%7s")
-    rows.foreach { case (label, assigned, pairs, recall) =>
+    table.foreach { case (label, assigned, pairs, recall) =>
       val beta = assigned.toDouble / (n + nDups) - 1.0
       println(f"$label%-14s $assigned%12d $beta%7.3f $pairs%14d " +
         f"${pairs.toDouble / basePairs}%7.3f $recall%7.4f")
@@ -102,16 +94,16 @@ object SemDedupDrill {
     Seq(n / 10, n).foreach { s =>
       val corpus = emb.filter(col("vec_id") < s)
       Seq(8, Similarity.scaledCellCount(s)).distinct.foreach { kk =>
-        val t0 = System.nanoTime()
-        val cs2 = Similarity.kmeansFit(corpus, kk, iters = 2, dim = dim)
-        val fitSec = (System.nanoTime() - t0) / 1e9
+        val fit = s"k-means fit (k=$kk, 2 iters, $s vecs)"
+        val cs2 = r.phase(fit)(
+          Similarity.kmeansFit(corpus, kk, iters = 2, dim = dim))
         val occ = Similarity.assignedCells(corpus, cs2, 1, 0.0)
           .groupBy("cell").agg(count(lit(1)).as("c"))
           .agg(max(col("c")), avg(col("c")),
             sum(col("c") * (col("c") - 1) / 2).cast("long"))
           .head()
         println(f"$s%10d $kk%6d ${occ.getLong(0)}%10d ${occ.getDouble(1)}%10.1f " +
-          f"${occ.getLong(2)}%14d $fitSec%7.2f")
+          f"${occ.getLong(2)}%14d ${r.seconds(fit)}%7.2f")
       }
     }
 
@@ -122,13 +114,12 @@ object SemDedupDrill {
     val smallN = small.count()
     Seq(("m=1", 1, 0.0), ("m=2 eps=0.1", 2, 0.1)).foreach {
       case (label, m, eps) =>
-        time(s"semanticDedup end-to-end ($label, $smallN vecs)") {
+        r.phase(s"semanticDedup end-to-end ($label, $smallN vecs)") {
           val out = Similarity.semanticDedupAssigned(small, cs,
             threshold = 0.95, assignments = m, boundaryEps = eps)
           val kept = out.filter(col("keep")).count()
           println(f"  kept $kept%d of $smallN%d")
         }
     }
-    spark.stop()
   }
 }

@@ -3,8 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Quiet local session and host-telemetry readers for the dev tools.
-  * The /proc readers are the r16 I/O-counter convention — one
-  * implementation so a parsing fix lands once.
+  * The /proc readers feed [[DrillRun.phase]] — one implementation so a
+  * parsing fix lands once.
   */
 private[tools] object ToolSession {
   /** /proc/self/io counter (e.g. "read_bytes", "write_bytes") — actual
@@ -20,18 +20,18 @@ private[tools] object ToolSession {
       finally src.close()
     } catch { case _: Throwable => -1L }
 
-  /** Host-wide (iowait, steal) jiffies from /proc/stat's aggregate cpu
-    * line — the writeback-stall and hypervisor-contention signals the
-    * drills delta around each measured phase; (-1, -1) when unreadable.
+  /** Host-wide steal jiffies from /proc/stat's aggregate cpu line —
+    * the hypervisor-contention signal deltaed around each drill phase;
+    * -1 when unreadable.
     */
-  def statJiffies: (Long, Long) =
+  def stealJiffies: Long =
     try {
       val src = scala.io.Source.fromFile("/proc/stat")
       try src.getLines().find(_.startsWith("cpu "))
         .map(_.trim.split("\\s+")).filter(_.length > 8)
-        .map(f => (f(5).toLong, f(8).toLong)).getOrElse((-1L, -1L))
+        .map(_(8).toLong).getOrElse(-1L)
       finally src.close()
-    } catch { case _: Throwable => (-1L, -1L) }
+    } catch { case _: Throwable => -1L }
 
   /** The drill corpus token generator (ScreenDrill/PrepBackfillDrill
     * convention): n "drilltokenwordNNNNN" tokens from a 50k vocab —
@@ -46,7 +46,12 @@ private[tools] object ToolSession {
         pmod(xxhash64(seed * 31 + i), lit(50000)))))
   }
 
-  def local(cores: Int): SparkSession = {
+  /** The tools' session: `SPARK_GRAFT_CPUS` cores (the variable Bench
+    * and Verify read), or every available core when it is unset.
+    */
+  def local(): SparkSession = {
+    val cores = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
     val spark = graft.GraftSession.builder(cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark

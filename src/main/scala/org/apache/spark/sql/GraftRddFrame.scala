@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.StructType
   * A standing-index mirror is exactly such a plan, and a streaming
   * composite APPENDS to the index every trigger: the mirror's blocks
   * were discarded on every fold and re-read from storage table-sized
-  * on the next screen — the per-trigger re-read the round-16 dropcache
-  * drill measured with the cache ON. (IndexCache's own per-partition
+  * on the next screen — the per-trigger re-read a round-16 drill
+  * measured with the cache ON and the page cache dropped. (IndexCache's own per-partition
   * fingerprints already detect real changes; Spark's path-level
   * recache is strictly coarser and cannot be scoped to the untouched
   * partitions.)

@@ -741,13 +741,6 @@ class ExtSpec extends AnyFunSuite {
     assert(off(100L).getAs[Boolean]("kept") &&
       off(100L).getAs[Boolean]("span_ok") &&
       off(100L).isNullAt(off(100L).fieldIndex("contam_span_run")))
-    // shareShingles = false takes the re-derive path (no positional
-    // checkpoint) — identical verdicts
-    val noShare = graft.ext.CorpusPrep.prepare(corpus, evalSet,
-        contaminationMinShared = 10, contamSpanMinRun = Some(8),
-        shareShingles = false)
-      .collect().map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
-    assert(noShare == byId.map { case (k, r) => k -> r.toSeq })
   }
 
   test("staged survivors: clean near-dup copy survives a tainted canonical") {
@@ -1686,6 +1679,48 @@ class ExtSpec extends AnyFunSuite {
         !v(id).getAs[Boolean]("kept"), v(id).toString)
   }
 
+  test("screenIncremental merge path (the backfill shape): batch parquet scanned once, novelty screen merge-joins, verdicts equal the broadcast path") {
+    // broadcastBatch = false is the plan for a corpus-sized batch that
+    // arrives as files: every screen rides the one up-front checkpoint
+    // of the batch, and the novelty screen's band join is a shuffled
+    // merge, never a broadcast of the batch side.
+    def text(tag: String, i: Long) =
+      (1 to 30).map(j => s"$tag${i}x$j").mkString(" ")
+    val dir = java.nio.file.Files.createTempDirectory("screen-merge").toString
+    val idx = s"$dir/mh"
+    Dedup.buildMinhashIndex(
+      (0L until 20L).map(i => (i, text("standing", i))).toDF("doc_id", "text"),
+      idx)
+    // 4 copies of standing docs, 2 blocklisted, 14 fresh
+    (100L until 120L).map { i =>
+        (i, if (i < 104) text("standing", i - 100)
+            else if (i < 106) text("freshtext", i) + " plantbad"
+            else text("freshtext", i))
+      }.toDF("doc_id", "text").write.parquet(s"$dir/batch")
+    val batch = spark.read.parquet(s"$dir/batch")
+    def screen(broadcastBatch: Boolean) = CorpusPrep.screenIncremental(
+      batch, idx, blocklist = Seq("plantbad"),
+      broadcastBatch = broadcastBatch, sorted = false)
+    val merge = screen(broadcastBatch = false)
+    val v = merge.collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
+    val p = merge.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==")(0)
+    assert(!p.contains(s"$dir/batch"), s"batch FileScan in the final plan:\n$p")
+    val novelty = Dedup.minhashNovelAgainstIndex(batch, idx,
+      broadcastBatch = false)
+    novelty.collect()
+    val np = novelty.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==")(0)
+    assert(np.contains("SortMergeJoin") || np.contains("ShuffledHashJoin"),
+      s"no shuffled join in the merge-path novelty screen:\n$np")
+    assert(v.values.count(!_.getAs[Boolean]("is_novel")) == 4)
+    assert(v.values.count(!_.getAs[Boolean]("blocklist_ok")) == 2)
+    assert(v.values.count(_.getAs[Boolean]("kept")) == 14)
+    val bcast = screen(broadcastBatch = true).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.toSeq).toMap
+    assert(bcast == v.map { case (k, r) => k -> r.toSeq })
+  }
+
   test("screenIncremental: each screen vetoes independently; intra-batch dups keep one survivor") {
     // 8-letter tags keep the alpha ratio comfortably above the 0.6
     // quality boundary (4-letter tags + digits land exactly ON it).
@@ -1899,6 +1934,48 @@ class ExtSpec extends AnyFunSuite {
     // cache off again: plain reads agree with the post-rebuild state
     // (the original standing corpus is gone, so the old dup is novel)
     assert(screen(batch).forall(_(1) == true))
+  }
+
+  test("index cache: an append keeps the standing mirrors persisted and adds one mirror per table (the round-16 recache-thrash fix)") {
+    // A DataFrame.persist mirror is plan-keyed, so Spark's
+    // recacheByPath dropped it on every write under the index root —
+    // every streaming fold re-read the full table. The RDD mirror must
+    // survive the append: same RDD id, still persisted, and the refresh
+    // adds exactly the new partition's mirror.
+    def text(tag: String, n: Int) =
+      (1 to n).map(i => s"$tag$i").mkString(" ")
+    val idx = java.nio.file.Files
+      .createTempDirectory("idx-cache-mirror").toString + "/mh"
+    Dedup.buildMinhashIndex(Seq((0L, text("mirrordocs", 30)),
+      (1L, text("otherdocs", 30))).toDF("doc_id", "text"), idx)
+    val batch = Seq((10L, text("mirrordocs", 30)), (11L, text("freshdocs", 30)))
+      .toDF("doc_id", "text")
+    def mirrors: Map[String, Int] = spark.sparkContext.getPersistentRDDs
+      .values.map(rdd => Option(rdd.name).getOrElse("") -> rdd.id)
+      .filter(_._1.startsWith(s"graft-index-mirror:$idx/")).toMap
+    spark.conf.set("spark.graft.indexCache", "true")
+    try {
+      Dedup.minhashNovelAgainstIndex(batch, idx).collect()
+      val before = mirrors
+      val tables = Seq("bands", "sets")
+      assert(tables.forall(t =>
+        before.contains(s"graft-index-mirror:$idx/$t/ingest=0")), before)
+      Dedup.appendMinhashIndex(
+        Seq((2L, text("addeddocs", 30))).toDF("doc_id", "text"), idx,
+        ingestId = 3L)
+      Dedup.minhashNovelAgainstIndex(batch, idx).collect()
+      val after = mirrors
+      tables.foreach { t =>
+        val base = s"graft-index-mirror:$idx/$t/ingest=0"
+        assert(after.get(base) == before.get(base), s"$t: $before -> $after")
+      }
+      assert(after.keySet -- before.keySet == tables.map(t =>
+        s"graft-index-mirror:$idx/$t/ingest=3").toSet, s"$before -> $after")
+      assert(before.keySet.subsetOf(after.keySet), s"$before -> $after")
+    } finally {
+      spark.conf.unset("spark.graft.indexCache")
+      IndexCache.clear()
+    }
   }
 
   test("outliersAgainstIndex: frozen-model verdicts match the in-frame screen; new garbage flags without moving the boundary") {
