@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftStreamPlan, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.etl.{Enrich, Quality}
@@ -108,21 +108,24 @@ object Pipeline {
     * replaces the dates it carries instead of duplicating them — the
     * effectively-once upgrade of the reference's at-least-once append
     * that SURVEY §2.6 names. The stream writes through
-    * [[graft.warehouse.WarehouseSink]] inside its own micro-batch plan,
-    * not through a `foreachBatch`: one job per trigger, whose tasks read
-    * the Hadoop job conf from one broadcast instead of each
-    * deserializing a copy, and the same commit
-    * [[graft.warehouse.Warehouse.appendTripsIdempotent]] runs. The batch
+    * [[graft.warehouse.WarehouseSink]]'s micro-batch sink, not through a
+    * `foreachBatch`: one job per trigger, run inside the trigger's own
+    * SQL execution over the plan the trigger built, whose tasks read the
+    * Hadoop job conf from one broadcast per query, and the same writer
+    * and commit [[graft.warehouse.Warehouse.appendTripsIdempotent]]
+    * runs. The plan is optimized once, here
+    * ([[org.apache.spark.sql.GraftStreamPlan]]), so each trigger's
+    * analysis and optimization find nothing left to rewrite. The batch
     * id is in the path, not in the plan, so a steady trigger reuses the
     * write's generated code; with the session's `file:` filesystem
     * ([[graft.functions.GraftExtensions]]) it forks no process either
-    * (PipelineSpec pins both).
+    * (PipelineSpec pins both, and the optimizer's two runs a trigger).
     */
   def startIdempotent(raw: DataFrame, warehousePath: String,
                       checkpointDir: String,
                       trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
       : StreamingQuery =
-    Warehouse.withPickupDate(transform(raw)).writeStream
+    GraftStreamPlan.optimizedOnce(Warehouse.withPickupDate(transform(raw))).writeStream
       .format(classOf[WarehouseSink].getName)
       .outputMode("append")
       .trigger(trigger)

@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 /** Parquet warehouse — replaces the reference's PostgreSQL layer
   * (reference: database_handler.py:65-195 DDL + :197-268 batch inserts).
   *
-  * Trip rows have one writer, [[WarehouseSink]], reached from a batch
-  * through [[appendTripsIdempotent]] and from a stream through
-  * [[graft.stream.Pipeline.startIdempotent]]. Appends are inherently
-  * batched (S7) — one file per task and date, no per-row round trips.
+  * Trip rows have one writer, [[WarehouseSink]]'s writer tasks and
+  * commit, reached from a batch through [[appendTripsIdempotent]] (its
+  * DataSource V2 write) and from a stream through
+  * [[graft.stream.Pipeline.startIdempotent]] (its micro-batch sink).
+  * Appends are inherently batched (S7) — one file per task and date, no
+  * per-row round trips.
   *
   * The reference's three B-tree indexes (pickup_datetime, vendor_id,
   * pickup_hour — database_handler.py:167-180) become **storage layout**:

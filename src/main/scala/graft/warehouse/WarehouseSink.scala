@@ -5,12 +5,12 @@ import java.util
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftRddFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.util.DateFormatter
@@ -18,34 +18,46 @@ import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapabi
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.streaming.Sink
+import org.apache.spark.sql.sources.StreamSinkProvider
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-/** The effectively-once warehouse sink, as one DataSource V2 table: the
-  * idempotent ingest writes `path/batch_id=N/pickup_date=D/part-*.parquet`
-  * through it, from a stream (`writeStream.format(...).start(path)`, N =
-  * the micro-batch id) or from a batch (`write.format(...)
-  * .option("batch_id", N).mode("append").save(path)`). The stream writes
-  * inside its own micro-batch plan, and both paths share one writer and
-  * one commit.
+/** The effectively-once warehouse sink: the idempotent ingest writes
+  * `path/batch_id=N/pickup_date=D/part-*.parquet` through it, from a
+  * batch as one DataSource V2 table (`write.format(...)
+  * .option("batch_id", N).mode("append").save(path)`) and from a stream
+  * as a micro-batch sink (`writeStream.format(...).start(path)`, N = the
+  * micro-batch id). Both paths share one writer and one commit.
   *
   * Rows carry a `pickup_date` (DateType) column, which becomes the
   * directory key and leaves the file; every other column is written.
   * File bytes are V1's: the parquet writer factory and the Hadoop job
-  * conf come from `ParquetFileFormat.prepareWrite`, and the write asks
-  * for the same local `pickup_date` sort V1's planner inserts, so a task
-  * holds one open file at a time. Directory names are V1's too:
-  * `yyyy-MM-dd`, and `__HIVE_DEFAULT_PARTITION__` for a null date.
+  * conf come from `ParquetFileFormat.prepareWrite`, and each task's rows
+  * are sorted by `pickup_date` first, the local sort V1's planner
+  * inserts, so a task holds one open file at a time. Directory names are
+  * V1's too: `yyyy-MM-dd`, and `__HIVE_DEFAULT_PARTITION__` for a null
+  * date.
   *
   * What it saves over V1 is the per-task job conf. V1 puts the conf
   * (about a thousand entries) in every task's write description, so
-  * every task deserializes it; here it is prepared once per write and
-  * broadcast, and the writer factory holds only the broadcast handle,
-  * the schema, the staging dir and the output factory.
+  * every task deserializes it; here it is prepared and broadcast once
+  * (per batch write, or per streaming query), and the writer factory
+  * holds only the broadcast handle, the schema, the staging dir and the
+  * output factory.
+  *
+  * The stream half is a V1 `Sink`, not a V2 streaming write, because of
+  * what a micro-batch costs the driver. Each trigger's SQL execution
+  * builds its plan description by planning a fresh copy of the
+  * micro-batch; a V2 write's nested `collect()` is a second SQL
+  * execution and plans a second copy. The sink instead writes the rows
+  * of the plan the trigger already built (its `QueryExecution.toRdd`),
+  * inside the trigger's own execution: one job of the same writer tasks,
+  * after a per-task date sort planned over those rows alone.
   *
   * Commit protocol, after the staged-move shape of
   * [[graft.sources.AvroSource]]'s writer: tasks write into
@@ -60,18 +72,19 @@ import org.apache.spark.util.SerializableConfiguration
   * staging dir. All of it runs through the session's Hadoop
   * `FileSystem`, which for `file:` forks no process.
   */
-class WarehouseSink extends TableProvider {
+class WarehouseSink extends TableProvider with StreamSinkProvider {
   // Writers hand their own schema to getTable: the sink accepts any.
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     new StructType()
   override def supportsExternalMetadata(): Boolean = true
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table = {
-    val path = properties.get("path")
-    require(path != null, "WarehouseSink requires a path")
-    new WarehouseTable(path, schema)
-  }
+                        properties: util.Map[String, String]): Table =
+    new WarehouseTable(WarehouseSink.path(properties.get("path")), schema)
+
+  override def createSink(sqlContext: SQLContext, parameters: Map[String, String],
+                          partitionColumns: Seq[String], outputMode: OutputMode): Sink =
+    new WarehouseStreamSink(WarehouseSink.path(parameters.getOrElse("path", null)))
 }
 
 object WarehouseSink {
@@ -80,15 +93,20 @@ object WarehouseSink {
 
   /** The batch write's id: N in `batch_id=N`. */
   private[graft] val BatchIdOption = "batch_id"
+
+  private def path(p: String): String = {
+    require(p != null, "WarehouseSink requires a path")
+    p
+  }
 }
 
+// No STREAMING_WRITE: a stream falls back to WarehouseSink's V1 sink.
 private class WarehouseTable(path: String, tableSchema: StructType)
     extends SupportsWrite {
   override def name(): String = s"warehouse($path)"
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] = util.EnumSet.of(
-    TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
-    TableCapability.ACCEPT_ANY_SCHEMA)
+    TableCapability.BATCH_WRITE, TableCapability.ACCEPT_ANY_SCHEMA)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = new WarehouseWrite(path, info.schema(),
@@ -103,56 +121,29 @@ private case class StagedFile(partDir: String, file: String)
 
 private case class StagedFiles(files: Seq[StagedFile]) extends WriterCommitMessage
 
-/** One write: a batch write's, or one micro-batch's (Spark builds a
-  * `Write` per micro-batch). `batchId` is the batch write's id; a
-  * stream's comes from the epoch.
+/** The job conf, its broadcast and the parquet output factory for rows
+  * of `schema` written under `path`, and the commit of one staged write.
   */
-private class WarehouseWrite(path: String, schema: StructType, batchId: Option[Long])
-    extends Write with RequiresDistributionAndOrdering {
+private class PreparedWrite(spark: SparkSession, path: String, val schema: StructType) {
   import WarehouseSink.PartitionColumn
 
   require(schema.fieldNames.contains(PartitionColumn),
     s"WarehouseSink rows need a $PartitionColumn column: ${schema.simpleString}")
-  private val spark = SparkSession.active
-  private val staging = new Path(path, s"_staging/${java.util.UUID.randomUUID()}")
+  private val job = Job.getInstance(spark.sessionState.newHadoopConf())
+  private val fs: FileSystem = new Path(path).getFileSystem(job.getConfiguration)
+  private val output = new ParquetFileFormat().prepareWrite(spark, job, Map.empty,
+    PreparedWrite.dataSchema(schema))
+  private val conf = spark.sparkContext.broadcast(
+    new SerializableConfiguration(job.getConfiguration))
 
-  // No distribution, so no exchange: only V1's per-task date sort.
-  override def requiredDistribution(): Distribution = Distributions.unspecified()
-  override def requiredOrdering(): Array[SortOrder] = Array(
-    Expressions.sort(Expressions.column(PartitionColumn), SortDirection.ASCENDING))
-
-  // The job conf and the parquet output factory, prepared once and only
-  // when the write runs; `conf` is the factory's broadcast until cleanUp.
-  private lazy val job = Job.getInstance(spark.sessionState.newHadoopConf())
-  private lazy val fs = staging.getFileSystem(job.getConfiguration)
-  private var conf: Broadcast[SerializableConfiguration] = _
-  private lazy val factory: WarehouseWriterFactory = {
-    val output = new ParquetFileFormat().prepareWrite(spark, job, Map.empty,
-      WarehouseWrite.dataSchema(schema))
-    conf = spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
+  def factory(staging: Path): WarehouseWriterFactory =
     new WarehouseWriterFactory(conf, schema, staging.toString, output)
-  }
 
-  override def toBatch: BatchWrite = new BatchWrite {
-    override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-      factory
-    override def commit(messages: Array[WriterCommitMessage]): Unit =
-      WarehouseWrite.this.commit(batchId.getOrElse(throw new IllegalArgumentException(
-        s"a WarehouseSink batch write needs the ${WarehouseSink.BatchIdOption} option")),
-        messages)
-    override def abort(messages: Array[WriterCommitMessage]): Unit = cleanUp()
-  }
-
-  override def toStreaming: StreamingWrite = new StreamingWrite {
-    override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-        : StreamingDataWriterFactory = factory
-    override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-      WarehouseWrite.this.commit(epochId, messages)
-    override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-      cleanUp()
-  }
-
-  private def commit(batch: Long, messages: Array[WriterCommitMessage]): Unit = {
+  /** Batch N's commit: moves the staged files of each date the messages
+    * name into `batch_id=N/pickup_date=D`, replacing what was there, then
+    * drops the staging dir.
+    */
+  def commit(batch: Long, staging: Path, messages: Array[WriterCommitMessage]): Unit = {
     val staged = messages.toSeq.flatMap {
       case StagedFiles(files) => files
       case _ => Nil
@@ -167,21 +158,91 @@ private class WarehouseWrite(path: String, schema: StructType, batchId: Option[L
         require(fs.rename(src, to), s"rename failed: $src -> $to")
       }
     }
-    cleanUp()
+    abort(staging)
+  }
+
+  /** Drops the staging dir; safe to repeat. */
+  def abort(staging: Path): Unit = fs.delete(staging, true)
+
+  def destroy(): Unit = conf.destroy()
+}
+
+private object PreparedWrite {
+  def dataSchema(schema: StructType): StructType =
+    StructType(schema.filterNot(_.name == WarehouseSink.PartitionColumn))
+
+  def newStaging(path: String): Path =
+    new Path(path, s"_staging/${java.util.UUID.randomUUID()}")
+}
+
+/** One batch write: `batchId` is its id. */
+private class WarehouseWrite(path: String, schema: StructType, batchId: Option[Long])
+    extends Write with RequiresDistributionAndOrdering {
+  private val spark = SparkSession.active
+  private val staging = PreparedWrite.newStaging(path)
+
+  // No distribution, so no exchange: only V1's per-task date sort.
+  override def requiredDistribution(): Distribution = Distributions.unspecified()
+  override def requiredOrdering(): Array[SortOrder] = Array(
+    Expressions.sort(Expressions.column(WarehouseSink.PartitionColumn),
+      SortDirection.ASCENDING))
+
+  // Prepared only when the write runs (planning alone builds a Write),
+  // and destroyed by cleanUp.
+  private var prepared: PreparedWrite = _
+
+  override def toBatch: BatchWrite = new BatchWrite {
+    override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+      if (prepared == null) prepared = new PreparedWrite(spark, path, schema)
+      prepared.factory(staging)
+    }
+    override def commit(messages: Array[WriterCommitMessage]): Unit = {
+      prepared.commit(batchId.getOrElse(throw new IllegalArgumentException(
+        s"a WarehouseSink batch write needs the ${WarehouseSink.BatchIdOption} option")),
+        staging, messages)
+      cleanUp()
+    }
+    override def abort(messages: Array[WriterCommitMessage]): Unit = cleanUp()
   }
 
   /** Drops the staging dir and the broadcast conf; safe to repeat (an
     * abort can follow a failed commit).
     */
-  private def cleanUp(): Unit = {
-    fs.delete(staging, true)
-    if (conf != null) { conf.destroy(); conf = null }
+  private def cleanUp(): Unit = if (prepared != null) {
+    prepared.abort(staging)
+    prepared.destroy()
+    prepared = null
   }
 }
 
-private object WarehouseWrite {
-  def dataSchema(schema: StructType): StructType =
-    StructType(schema.filterNot(_.name == WarehouseSink.PartitionColumn))
+/** The stream's writer: micro-batch N lands as `batch_id=N`. It runs
+  * inside the trigger's own SQL execution, over the rows of the plan the
+  * trigger built; the only other plan is the per-task `pickup_date` sort
+  * over those rows, whose generated code is the same every trigger. The
+  * job conf is prepared and broadcast on the first batch and kept for the
+  * query's life; Spark's context cleaner drops the broadcast once the
+  * stopped query's sink is collected.
+  */
+private class WarehouseStreamSink(path: String) extends Sink {
+  private var prepared: PreparedWrite = _
+
+  override def addBatch(batchId: Long, data: DataFrame): Unit = {
+    val spark = data.sparkSession
+    if (prepared == null || prepared.schema != data.schema) {
+      if (prepared != null) prepared.destroy()
+      prepared = new PreparedWrite(spark, path, data.schema)
+    }
+    val sorted = GraftRddFrame.fromRowRdd(spark, GraftRddFrame.rows(data), data.schema)
+      .sortWithinPartitions(WarehouseSink.PartitionColumn)
+    val staging = PreparedWrite.newStaging(path)
+    val factory = prepared.factory(staging)
+    val messages =
+      try spark.sparkContext.runJob(GraftRddFrame.rows(sorted), WarehouseDataWriter.run(factory) _)
+      catch { case e: Throwable => prepared.abort(staging); throw e }
+    prepared.commit(batchId, staging, messages)
+  }
+
+  override def toString: String = s"WarehouseSink[$path]"
 }
 
 /** What every write task receives. It holds no `Configuration`: the job
@@ -190,12 +251,10 @@ private object WarehouseWrite {
 private class WarehouseWriterFactory(conf: Broadcast[SerializableConfiguration],
                                      schema: StructType, staging: String,
                                      output: OutputWriterFactory)
-    extends DataWriterFactory with StreamingDataWriterFactory {
+    extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new WarehouseDataWriter(conf.value.value, schema, new Path(staging), output,
       partitionId, taskId)
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] = createWriter(partitionId, taskId)
 }
 
 /** Writes one task's rows, sorted by `pickup_date`, one staged file per
@@ -206,7 +265,7 @@ private class WarehouseDataWriter(conf: Configuration, schema: StructType,
                                   partitionId: Int, taskId: Long)
     extends DataWriter[InternalRow] {
   private val dateOrdinal = schema.fieldIndex(WarehouseSink.PartitionColumn)
-  private val dataSchema = WarehouseWrite.dataSchema(schema)
+  private val dataSchema = PreparedWrite.dataSchema(schema)
   private val data = ProjectingInternalRow(dataSchema,
     schema.indices.filter(_ != dateOrdinal))
   // A task-local copy of the shared conf (the context copies it).
@@ -261,4 +320,19 @@ private class WarehouseDataWriter(conf: Configuration, schema: StructType,
 private object WarehouseDataWriter {
   /** Below every day number an `Int` date can hold. */
   val NullDate: Long = Long.MinValue
+
+  /** One stream write task: the body of Spark's V2 write task for the
+    * batch write. It needs no commit coordinator: the driver commits only
+    * the files of the one attempt whose result it receives.
+    */
+  def run(factory: WarehouseWriterFactory)(context: TaskContext,
+                                           rows: Iterator[InternalRow]): WriterCommitMessage = {
+    val writer = factory.createWriter(context.partitionId(), context.taskAttemptId())
+    try {
+      rows.foreach(writer.write)
+      writer.commit()
+    } catch {
+      case t: Throwable => writer.abort(); throw t
+    } finally writer.close()
+  }
 }

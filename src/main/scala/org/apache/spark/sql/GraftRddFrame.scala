@@ -27,6 +27,10 @@ import org.apache.spark.sql.types.StructType
   * `localCheckpoint` would. Rows are copied before persisting (the
   * scan reuses its `UnsafeRow` buffer within a partition).
   *
+  * [[rows]] and [[fromRowRdd]] also serve [[graft.warehouse.WarehouseSink]]'s
+  * micro-batch sink: it rewraps a batch's rows to sort them in a plan
+  * of their own, without planning the batch again.
+  *
   * `internalCreateDataFrame` is `private[sql]`, hence this bridge
   * lives in the `sql` package like [[GraftColumn]].
   */
@@ -35,9 +39,14 @@ object GraftRddFrame {
   /** The frame's rows as a copy-safe `InternalRow` RDD (not yet
     * persisted — the caller owns the storage level).
     */
-  def toRowRdd(df: DataFrame): RDD[InternalRow] =
+  def toRowRdd(df: DataFrame): RDD[InternalRow] = rows(df).map(_.copy())
+
+  /** The rows of the frame's own `QueryExecution`: no new plan and no
+    * new SQL execution. A partition may reuse one row buffer, so a
+    * consumer that keeps rows must copy them.
+    */
+  def rows(df: DataFrame): RDD[InternalRow] =
     classic.ClassicConversions.castToImpl(df).queryExecution.toRdd
-      .map(_.copy())
 
   /** Rewrap a (typically persisted) row RDD as a DataFrame with the
     * given schema.

@@ -239,6 +239,74 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(warehouse).count() == 10)
   }
 
+  test("a steady idempotent trigger runs the optimizer twice over the ingest plan") {
+    // One run plans the micro-batch; the trigger's SQL execution plans a
+    // fresh copy for its description. A V2 streaming write's nested
+    // collect() would be a second SQL execution, and a third run.
+    // The stream runs in a session cloned at start, so the counting rule
+    // goes in before start; the per-batch sort plan holds no
+    // `graft_parsed` node and is not counted.
+    import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
+    import org.apache.spark.sql.catalyst.rules.Rule
+    val runs = new java.util.concurrent.atomic.AtomicInteger
+    object CountIngestRuns extends Rule[LogicalPlan] {
+      override def apply(plan: LogicalPlan): LogicalPlan = {
+        if (plan.exists {
+          case c: CollectMetrics => c.name == "graft_parsed"
+          case _ => false
+        }) runs.incrementAndGet()
+        plan
+      }
+    }
+    val warehouse = Files.createTempDirectory("graft-wh-passes").toString
+    val checkpoint = Files.createTempDirectory("graft-ckpt-passes").toString
+    val source = MemoryStream[String](
+      implicitly[org.apache.spark.sql.Encoder[String]], spark.sqlContext)
+    val extra = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = extra :+ CountIngestRuns
+    val query =
+      try Pipeline.startIdempotent(source.toDF(), warehouse, checkpoint,
+        Trigger.ProcessingTime("0 seconds"))
+      finally spark.experimental.extraOptimizations = extra
+    def trigger(): Unit = {
+      source.addData(goodRows ++ badRows: _*)
+      query.processAllAvailable()
+    }
+    try {
+      trigger(); trigger()
+      val runs0 = runs.get
+      (1 to 3).foreach(_ => trigger())
+      assert(query.recentProgress.count(_.numInputRows > 0) == 5)
+      assert(runs.get - runs0 == 2 * 3, s"${runs.get - runs0} optimizer runs in 3 triggers")
+    } finally query.stop()
+  }
+
+  test("the stream is planned once at start, unless its plan reads the clock") {
+    // An optimized plan would hold current_timestamp() folded to the
+    // time of the call; the micro-batch engine pins it per batch.
+    import org.apache.spark.sql.GraftStreamPlan
+    import org.apache.spark.sql.catalyst.expressions.CurrentTimestamp
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.functions.current_timestamp
+    val source = MemoryStream[String](
+      implicitly[org.apache.spark.sql.Encoder[String]], spark.sqlContext)
+    val clocked = GraftStreamPlan.optimizedOnce(
+      source.toDF().withColumn("seen", current_timestamp())).queryExecution.analyzed
+    assert(clocked.exists(_.expressions.exists(_.exists(_.isInstanceOf[CurrentTimestamp]))),
+      clocked.toString)
+    // The ingest plan comes back as the optimizer leaves it: a trigger's
+    // passes over it rewrite nothing. The projections the optimizer
+    // keeps apart are the ones whose costly output (the parsed struct,
+    // the parsed timestamps) is read more than once.
+    val ingest = Warehouse.withPickupDate(Pipeline.transform(source.toDF()))
+    val planned = GraftStreamPlan.optimizedOnce(ingest).queryExecution.analyzed
+    def projects(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+      p.collect { case p: Project => p }.size
+    assert(projects(planned) < projects(ingest.queryExecution.analyzed), planned.toString)
+    assert(spark.sessionState.optimizer.execute(planned) == planned, planned.toString)
+    assert(planned.isStreaming && planned.schema == ingest.schema)
+  }
+
   test("idempotent warehouse layout: batch_id=N/pickup_date=D, replays replace only their dates") {
     import scala.jdk.CollectionConverters._
     def dataFiles(dir: String) = Files.walk(java.nio.file.Paths.get(dir))
