@@ -57,7 +57,10 @@ import org.apache.spark.util.SerializableConfiguration
   * execution and plans a second copy. The sink instead writes the rows
   * of the plan the trigger already built (its `QueryExecution.toRdd`),
   * inside the trigger's own execution: one job of the same writer tasks,
-  * after a per-task date sort planned over those rows alone.
+  * after a per-task date sort planned over those rows alone. A V1 sink
+  * reports no write metrics: a trigger's
+  * `StreamingQueryProgress.sink.numOutputRows` reads -1, and the SQL UI
+  * shows no write node for it.
   *
   * Commit protocol, after the staged-move shape of
   * [[graft.sources.AvroSource]]'s writer: tasks write into
@@ -236,10 +239,12 @@ private class WarehouseStreamSink(path: String) extends Sink {
       .sortWithinPartitions(WarehouseSink.PartitionColumn)
     val staging = PreparedWrite.newStaging(path)
     val factory = prepared.factory(staging)
-    val messages =
-      try spark.sparkContext.runJob(GraftRddFrame.rows(sorted), WarehouseDataWriter.run(factory) _)
-      catch { case e: Throwable => prepared.abort(staging); throw e }
-    prepared.commit(batchId, staging, messages)
+    // A failed job or a failed commit (mkdirs, rename) drops the staging dir.
+    try {
+      val messages =
+        spark.sparkContext.runJob(GraftRddFrame.rows(sorted), WarehouseDataWriter.run(factory) _)
+      prepared.commit(batchId, staging, messages)
+    } catch { case e: Throwable => prepared.abort(staging); throw e }
   }
 
   override def toString: String = s"WarehouseSink[$path]"

@@ -423,6 +423,26 @@ class PipelineSpec extends AnyFunSuite {
       .map(_.getFileName.toString).toSeq == Seq("orphan"))
   }
 
+  test("a failed idempotent sink commit drops its staging dir") {
+    val warehouse = Files.createTempDirectory("graft-wh-commit-fail")
+    val checkpoint = Files.createTempDirectory("graft-ckpt-commit-fail").toString
+    // A plain file where batch 0's dir goes: the commit's mkdirs fails
+    // after the write job has staged its files.
+    Files.write(warehouse.resolve("batch_id=0"), Array.emptyByteArray)
+    val source = MemoryStream[String](
+      implicitly[org.apache.spark.sql.Encoder[String]], spark.sqlContext)
+    val query = Pipeline.startIdempotent(source.toDF(), warehouse.toString, checkpoint,
+      Trigger.ProcessingTime("0 seconds"))
+    try {
+      source.addData(goodRows: _*)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        query.processAllAvailable())
+    } finally query.stop()
+    val staging = warehouse.resolve("_staging")
+    assert(!Files.exists(staging) || !Files.list(staging).iterator().hasNext,
+      Files.walk(staging).toArray.toSeq)
+  }
+
   test("a persisting index stream computes each input row once, its emptiness probe included") {
     // The non-empty probe reads the persisted batch, so the rows it
     // touches are not computed a second time for the body.

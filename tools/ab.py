@@ -2,7 +2,7 @@
 """Interleaved A/B pairs of the benchmark: a parent tree against a change tree.
 
     python3 tools/ab.py --parent DIR [--change DIR] --workload W
-                        --seeds 801-810 [--pairs N] [--seconds 10] [--out FILE]
+                        --seeds 801-810 [--out FILE]
 
 Each tree is a full source tree (make the parent with `git archive`, not a
 worktree); `--change` defaults to the current directory. Pair i runs
@@ -11,8 +11,9 @@ worktree); `--change` defaults to the current directory. Pair i runs
 
 once in each tree, from that tree's root, and alternates which side runs
 first (the parent in even pairs, the change in odd ones), so drift in the
-host's load lands on both sides alike. `--seeds` takes a comma list and
-ranges (`801-805,811`); `--pairs` defaults to the number of seeds.
+host's load lands on both sides alike. S is the change tree's
+BENCHMARK.json `run_seconds`, the same on both sides. `--seeds` takes a
+comma list and ranges (`801-805,811`); there is one pair per seed.
 
 For every end-to-end metric of the change tree's BENCHMARK.json it prints
 one row per pair, then each side's median and quartiles, the pairs the
@@ -98,23 +99,19 @@ def main():
     ap.add_argument("--change", default=".")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, type=parse_seeds)
-    ap.add_argument("--pairs", type=int)
-    ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--out")
     a = ap.parse_args()
-    n = a.pairs or len(a.seeds)
-    if n > len(a.seeds):
-        sys.exit(f"ab: {n} pairs need {n} seeds, got {len(a.seeds)}")
+    n = len(a.seeds)
     trees = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
     with open(os.path.join(trees["change"], "BENCHMARK.json")) as f:
         spec = json.load(f)
 
     pairs = []
-    for i, seed in enumerate(a.seeds[:n]):
+    for i, seed in enumerate(a.seeds):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         pair = {"seed": seed, "first": order[0]}
         for side in order:
-            pair[side] = run(trees[side], a.workload, seed, a.seconds)
+            pair[side] = run(trees[side], a.workload, seed, spec["run_seconds"])
         pairs.append(pair)
         print(f"pair {i + 1}/{n} seed {seed} first {order[0]}: " + ", ".join(
             f"{s} {pair[s]['metrics']['op_ms_p50']:.1f} ms p50 "
