@@ -111,9 +111,10 @@ object Pipeline {
     * [[graft.warehouse.WarehouseSink]]'s micro-batch sink, not through a
     * `foreachBatch`: one job per trigger, run inside the trigger's own
     * SQL execution over the plan the trigger built, whose tasks read the
-    * Hadoop job conf from one broadcast per query, and the same writer
-    * and commit [[graft.warehouse.Warehouse.appendTripsIdempotent]]
-    * runs. The plan is optimized once, here
+    * Hadoop job conf from one broadcast per query. The sink calls
+    * [[graft.warehouse.WarehouseSink.write]], the write function
+    * [[graft.warehouse.Warehouse.appendTripsIdempotent]] calls. The plan
+    * is optimized once, here
     * ([[org.apache.spark.sql.GraftStreamPlan]]), so each trigger's
     * analysis and optimization find nothing left to rewrite. The batch
     * id is in the path, not in the plan, so a steady trigger reuses the

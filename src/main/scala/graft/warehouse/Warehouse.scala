@@ -1,14 +1,13 @@
 package graft.warehouse
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftRddFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Parquet warehouse — replaces the reference's PostgreSQL layer
   * (reference: database_handler.py:65-195 DDL + :197-268 batch inserts).
   *
-  * Trip rows have one writer, [[WarehouseSink]]'s writer tasks and
-  * commit, reached from a batch through [[appendTripsIdempotent]] (its
-  * DataSource V2 write) and from a stream through
+  * Trip rows have one writer, [[WarehouseSink.write]], reached from a
+  * batch through [[appendTripsIdempotent]] and from a stream through
   * [[graft.stream.Pipeline.startIdempotent]] (its micro-batch sink).
   * Appends are inherently batched (S7) — one file per task and date, no
   * per-row round trips.
@@ -40,13 +39,16 @@ object Warehouse {
     * data without any coordination; the reference's non-idempotent JDBC
     * append (spark_consumer.py:106) cannot make that claim.
     *
-    * The write goes through [[WarehouseSink]], the same writer and
-    * commit [[graft.stream.Pipeline.startIdempotent]]'s micro-batches
-    * use: `path/batch_id=N/pickup_date=D/part-*.parquet`, readers of
-    * `path` discover both keys, and a replay of batch N replaces only
-    * the dates it carries. The batch id goes into the output path, not
-    * into the rows: a `lit(batchId)` column would be inlined by codegen
-    * and compile fresh classes every micro-batch.
+    * The write is [[WarehouseSink.write]], the function
+    * [[graft.stream.Pipeline.startIdempotent]]'s micro-batches call:
+    * `path/batch_id=N/pickup_date=D/part-*.parquet`, readers of `path`
+    * discover both keys, and a replay of batch N replaces only the dates
+    * it carries. The batch id goes into the output path, not into the
+    * rows: a `lit(batchId)` column would be inlined by codegen and
+    * compile fresh classes every micro-batch. The job conf is broadcast
+    * for this one append, and the write runs as the frame's own SQL
+    * execution, named "save" like a `DataFrameWriter.save`, so
+    * `QueryExecutionListener`s receive its observed metrics.
     *
     * Lifecycle: the `batch_id=` partitions ARE the replay protection
     * and must be preserved while the stream can still replay those ids;
@@ -57,11 +59,12 @@ object Warehouse {
     * only partition key (PipelineSpec pins rows-intact + one file per
     * date).
     */
-  def appendTripsIdempotent(df: DataFrame, path: String, batchId: Long): Unit =
-    withPickupDate(df).write.format(classOf[WarehouseSink].getName)
-      .option(WarehouseSink.BatchIdOption, batchId)
-      .mode("append")
-      .save(path)
+  def appendTripsIdempotent(df: DataFrame, path: String, batchId: Long): Unit = {
+    val trips = withPickupDate(df)
+    val prepared = new PreparedWrite(trips.sparkSession, path, trips.schema)
+    try GraftRddFrame.asSave(trips)(WarehouseSink.write(prepared, path, batchId, trips))
+    finally prepared.destroy()
+  }
 
   /** S5 as the reference actually wired it — JDBC append — for
     * deployments where a live database replaces the parquet warehouse.

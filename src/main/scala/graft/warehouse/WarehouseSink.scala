@@ -1,7 +1,5 @@
 package graft.warehouse
 
-import java.util
-
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
@@ -14,25 +12,20 @@ import org.apache.spark.sql.{DataFrame, GraftRddFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.util.DateFormatter
-import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder, Transform}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.sources.StreamSinkProvider
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
 /** The effectively-once warehouse sink: the idempotent ingest writes
-  * `path/batch_id=N/pickup_date=D/part-*.parquet` through it, from a
-  * batch as one DataSource V2 table (`write.format(...)
-  * .option("batch_id", N).mode("append").save(path)`) and from a stream
-  * as a micro-batch sink (`writeStream.format(...).start(path)`, N = the
-  * micro-batch id). Both paths share one writer and one commit.
+  * `path/batch_id=N/pickup_date=D/part-*.parquet` through one function,
+  * [[WarehouseSink.write]]. A batch reaches it through
+  * [[Warehouse.appendTripsIdempotent]] (N given by the caller), a stream
+  * through this class's micro-batch sink
+  * (`writeStream.format(...).start(path)`, N = the micro-batch id).
   *
   * Rows carry a `pickup_date` (DateType) column, which becomes the
   * directory key and leaves the file; every other column is written.
@@ -46,21 +39,20 @@ import org.apache.spark.util.SerializableConfiguration
   * What it saves over V1 is the per-task job conf. V1 puts the conf
   * (about a thousand entries) in every task's write description, so
   * every task deserializes it; here it is prepared and broadcast once
-  * (per batch write, or per streaming query), and the writer factory
+  * (per batch append, or per streaming query), and the writer factory
   * holds only the broadcast handle, the schema, the staging dir and the
-  * output factory.
+  * output factory. The write runs one job over the rows of the frame's
+  * own plan (its `QueryExecution.toRdd`), after a per-task date sort
+  * planned over those rows alone.
   *
   * The stream half is a V1 `Sink`, not a V2 streaming write, because of
   * what a micro-batch costs the driver. Each trigger's SQL execution
   * builds its plan description by planning a fresh copy of the
   * micro-batch; a V2 write's nested `collect()` is a second SQL
-  * execution and plans a second copy. The sink instead writes the rows
-  * of the plan the trigger already built (its `QueryExecution.toRdd`),
-  * inside the trigger's own execution: one job of the same writer tasks,
-  * after a per-task date sort planned over those rows alone. A V1 sink
-  * reports no write metrics: a trigger's
-  * `StreamingQueryProgress.sink.numOutputRows` reads -1, and the SQL UI
-  * shows no write node for it.
+  * execution and plans a second copy. The sink instead writes inside the
+  * trigger's own execution. A V1 sink reports no write metrics: a
+  * trigger's `StreamingQueryProgress.sink.numOutputRows` reads -1, and
+  * the SQL UI shows no write node for it.
   *
   * Commit protocol, after the staged-move shape of
   * [[graft.sources.AvroSource]]'s writer: tasks write into
@@ -71,50 +63,41 @@ import org.apache.spark.util.SerializableConfiguration
   * staging dir last. Dates the batch does not carry are left alone, so
   * a replay replaces exactly its own dates; a batch with no rows
   * creates no `batch_id=` dir. Files of failed or duplicate task
-  * attempts are never named in a commit message, and go away with the
+  * attempts are never named in a commit result, and go away with the
   * staging dir. All of it runs through the session's Hadoop
   * `FileSystem`, which for `file:` forks no process.
   */
-class WarehouseSink extends TableProvider with StreamSinkProvider {
-  // Writers hand their own schema to getTable: the sink accepts any.
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    new StructType()
-  override def supportsExternalMetadata(): Boolean = true
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new WarehouseTable(WarehouseSink.path(properties.get("path")), schema)
-
+class WarehouseSink extends StreamSinkProvider {
   override def createSink(sqlContext: SQLContext, parameters: Map[String, String],
-                          partitionColumns: Seq[String], outputMode: OutputMode): Sink =
-    new WarehouseStreamSink(WarehouseSink.path(parameters.getOrElse("path", null)))
+                          partitionColumns: Seq[String], outputMode: OutputMode): Sink = {
+    val path = parameters.getOrElse("path", null)
+    require(path != null, "WarehouseSink requires a path")
+    new WarehouseStreamSink(path)
+  }
 }
 
 object WarehouseSink {
   /** The date column that becomes the `pickup_date=D` directory. */
   private[warehouse] val PartitionColumn = "pickup_date"
 
-  /** The batch write's id: N in `batch_id=N`. */
-  private[graft] val BatchIdOption = "batch_id"
-
-  private def path(p: String): String = {
-    require(p != null, "WarehouseSink requires a path")
-    p
+  /** Writes `data` as batch `batchId` under `path`: one job of writer
+    * tasks over the frame's rows, each task's rows sorted by
+    * `pickup_date`, then `prepared`'s commit. A failed job or a failed
+    * commit (mkdirs, rename) drops the staging dir.
+    */
+  private[warehouse] def write(prepared: PreparedWrite, path: String, batchId: Long,
+                               data: DataFrame): Unit = {
+    val spark = data.sparkSession
+    val sorted = GraftRddFrame.fromRowRdd(spark, GraftRddFrame.rows(data), data.schema)
+      .sortWithinPartitions(PartitionColumn)
+    val staging = PreparedWrite.newStaging(path)
+    val factory = prepared.factory(staging)
+    try {
+      val staged =
+        spark.sparkContext.runJob(GraftRddFrame.rows(sorted), WarehouseDataWriter.run(factory) _)
+      prepared.commit(batchId, staging, staged)
+    } catch { case e: Throwable => prepared.abort(staging); throw e }
   }
-}
-
-// No STREAMING_WRITE: a stream falls back to WarehouseSink's V1 sink.
-private class WarehouseTable(path: String, tableSchema: StructType)
-    extends SupportsWrite {
-  override def name(): String = s"warehouse($path)"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] = util.EnumSet.of(
-    TableCapability.BATCH_WRITE, TableCapability.ACCEPT_ANY_SCHEMA)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder {
-      override def build(): Write = new WarehouseWrite(path, info.schema(),
-        Option(info.options().get(WarehouseSink.BatchIdOption)).map(_.toLong))
-    }
 }
 
 /** A file staged by one task: its path, and the `pickup_date=D` dir it
@@ -122,12 +105,12 @@ private class WarehouseTable(path: String, tableSchema: StructType)
   */
 private case class StagedFile(partDir: String, file: String)
 
-private case class StagedFiles(files: Seq[StagedFile]) extends WriterCommitMessage
+private case class StagedFiles(files: Seq[StagedFile])
 
 /** The job conf, its broadcast and the parquet output factory for rows
   * of `schema` written under `path`, and the commit of one staged write.
   */
-private class PreparedWrite(spark: SparkSession, path: String, val schema: StructType) {
+private[graft] class PreparedWrite(spark: SparkSession, path: String, val schema: StructType) {
   import WarehouseSink.PartitionColumn
 
   require(schema.fieldNames.contains(PartitionColumn),
@@ -142,16 +125,13 @@ private class PreparedWrite(spark: SparkSession, path: String, val schema: Struc
   def factory(staging: Path): WarehouseWriterFactory =
     new WarehouseWriterFactory(conf, schema, staging.toString, output)
 
-  /** Batch N's commit: moves the staged files of each date the messages
-    * name into `batch_id=N/pickup_date=D`, replacing what was there, then
-    * drops the staging dir.
+  /** Batch N's commit: moves the staged files of each date the tasks
+    * report into `batch_id=N/pickup_date=D`, replacing what was there,
+    * then drops the staging dir.
     */
-  def commit(batch: Long, staging: Path, messages: Array[WriterCommitMessage]): Unit = {
-    val staged = messages.toSeq.flatMap {
-      case StagedFiles(files) => files
-      case _ => Nil
-    }
-    for ((partDir, files) <- staged.groupBy(_.partDir)) {
+  private[warehouse] def commit(batch: Long, staging: Path,
+                                staged: Array[StagedFiles]): Unit = {
+    for ((partDir, files) <- staged.toSeq.flatMap(_.files).groupBy(_.partDir)) {
       val dest = new Path(path, s"batch_id=$batch/$partDir")
       fs.delete(dest, true)
       require(fs.mkdirs(dest), s"mkdirs failed: $dest")
@@ -178,46 +158,6 @@ private object PreparedWrite {
     new Path(path, s"_staging/${java.util.UUID.randomUUID()}")
 }
 
-/** One batch write: `batchId` is its id. */
-private class WarehouseWrite(path: String, schema: StructType, batchId: Option[Long])
-    extends Write with RequiresDistributionAndOrdering {
-  private val spark = SparkSession.active
-  private val staging = PreparedWrite.newStaging(path)
-
-  // No distribution, so no exchange: only V1's per-task date sort.
-  override def requiredDistribution(): Distribution = Distributions.unspecified()
-  override def requiredOrdering(): Array[SortOrder] = Array(
-    Expressions.sort(Expressions.column(WarehouseSink.PartitionColumn),
-      SortDirection.ASCENDING))
-
-  // Prepared only when the write runs (planning alone builds a Write),
-  // and destroyed by cleanUp.
-  private var prepared: PreparedWrite = _
-
-  override def toBatch: BatchWrite = new BatchWrite {
-    override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-      if (prepared == null) prepared = new PreparedWrite(spark, path, schema)
-      prepared.factory(staging)
-    }
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      prepared.commit(batchId.getOrElse(throw new IllegalArgumentException(
-        s"a WarehouseSink batch write needs the ${WarehouseSink.BatchIdOption} option")),
-        staging, messages)
-      cleanUp()
-    }
-    override def abort(messages: Array[WriterCommitMessage]): Unit = cleanUp()
-  }
-
-  /** Drops the staging dir and the broadcast conf; safe to repeat (an
-    * abort can follow a failed commit).
-    */
-  private def cleanUp(): Unit = if (prepared != null) {
-    prepared.abort(staging)
-    prepared.destroy()
-    prepared = null
-  }
-}
-
 /** The stream's writer: micro-batch N lands as `batch_id=N`. It runs
   * inside the trigger's own SQL execution, over the rows of the plan the
   * trigger built; the only other plan is the per-task `pickup_date` sort
@@ -230,21 +170,11 @@ private class WarehouseStreamSink(path: String) extends Sink {
   private var prepared: PreparedWrite = _
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    val spark = data.sparkSession
     if (prepared == null || prepared.schema != data.schema) {
       if (prepared != null) prepared.destroy()
-      prepared = new PreparedWrite(spark, path, data.schema)
+      prepared = new PreparedWrite(data.sparkSession, path, data.schema)
     }
-    val sorted = GraftRddFrame.fromRowRdd(spark, GraftRddFrame.rows(data), data.schema)
-      .sortWithinPartitions(WarehouseSink.PartitionColumn)
-    val staging = PreparedWrite.newStaging(path)
-    val factory = prepared.factory(staging)
-    // A failed job or a failed commit (mkdirs, rename) drops the staging dir.
-    try {
-      val messages =
-        spark.sparkContext.runJob(GraftRddFrame.rows(sorted), WarehouseDataWriter.run(factory) _)
-      prepared.commit(batchId, staging, messages)
-    } catch { case e: Throwable => prepared.abort(staging); throw e }
+    WarehouseSink.write(prepared, path, batchId, data)
   }
 
   override def toString: String = s"WarehouseSink[$path]"
@@ -253,22 +183,22 @@ private class WarehouseStreamSink(path: String) extends Sink {
 /** What every write task receives. It holds no `Configuration`: the job
   * conf is a broadcast, read from the executor's block manager.
   */
-private class WarehouseWriterFactory(conf: Broadcast[SerializableConfiguration],
-                                     schema: StructType, staging: String,
-                                     output: OutputWriterFactory)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+private[graft] class WarehouseWriterFactory(conf: Broadcast[SerializableConfiguration],
+                                            schema: StructType, staging: String,
+                                            output: OutputWriterFactory)
+    extends Serializable {
+  private[warehouse] def createWriter(partitionId: Int,
+                                      taskId: Long): WarehouseDataWriter =
     new WarehouseDataWriter(conf.value.value, schema, new Path(staging), output,
       partitionId, taskId)
 }
 
 /** Writes one task's rows, sorted by `pickup_date`, one staged file per
-  * date; the commit message names them.
+  * date; its commit returns their names.
   */
 private class WarehouseDataWriter(conf: Configuration, schema: StructType,
                                   staging: Path, output: OutputWriterFactory,
-                                  partitionId: Int, taskId: Long)
-    extends DataWriter[InternalRow] {
+                                  partitionId: Int, taskId: Long) {
   private val dateOrdinal = schema.fieldIndex(WarehouseSink.PartitionColumn)
   private val dataSchema = PreparedWrite.dataSchema(schema)
   private val data = ProjectingInternalRow(dataSchema,
@@ -283,7 +213,7 @@ private class WarehouseDataWriter(conf: Configuration, schema: StructType,
   private var writer: OutputWriter = _
   private var date = 0L // of the open file; NullDate for a null date
 
-  override def write(row: InternalRow): Unit = {
+  def write(row: InternalRow): Unit = {
     val d = if (row.isNullAt(dateOrdinal)) WarehouseDataWriter.NullDate
       else row.getInt(dateOrdinal).toLong
     if (writer == null || d != date) open(d)
@@ -308,30 +238,30 @@ private class WarehouseDataWriter(conf: Configuration, schema: StructType,
     w.close()
   }
 
-  override def commit(): WriterCommitMessage = {
+  def commit(): StagedFiles = {
     closeFile()
     StagedFiles(staged.toSeq)
   }
 
-  override def abort(): Unit = {
+  def abort(): Unit = {
     try closeFile() catch { case _: Exception => () }
     val fs = staging.getFileSystem(context.getConfiguration)
     staged.foreach(f => fs.delete(new Path(f.file), false))
   }
 
-  override def close(): Unit = closeFile()
+  def close(): Unit = closeFile()
 }
 
 private object WarehouseDataWriter {
   /** Below every day number an `Int` date can hold. */
   val NullDate: Long = Long.MinValue
 
-  /** One stream write task: the body of Spark's V2 write task for the
-    * batch write. It needs no commit coordinator: the driver commits only
-    * the files of the one attempt whose result it receives.
+  /** One write task of [[WarehouseSink.write]]'s job. It needs no
+    * commit coordinator: the driver commits only the files of the one
+    * attempt whose result it receives.
     */
   def run(factory: WarehouseWriterFactory)(context: TaskContext,
-                                           rows: Iterator[InternalRow]): WriterCommitMessage = {
+                                           rows: Iterator[InternalRow]): StagedFiles = {
     val writer = factory.createWriter(context.partitionId(), context.taskAttemptId())
     try {
       rows.foreach(writer.write)

@@ -28,8 +28,9 @@ import org.apache.spark.sql.types.StructType
   * scan reuses its `UnsafeRow` buffer within a partition).
   *
   * [[rows]] and [[fromRowRdd]] also serve [[graft.warehouse.WarehouseSink]]'s
-  * micro-batch sink: it rewraps a batch's rows to sort them in a plan
-  * of their own, without planning the batch again.
+  * write: it rewraps a batch's rows to sort them in a plan of their own,
+  * without planning the batch again; [[asSave]] gives a batch append the
+  * SQL execution a `DataFrameWriter.save` would.
   *
   * `internalCreateDataFrame` is `private[sql]`, hence this bridge
   * lives in the `sql` package like [[GraftColumn]].
@@ -55,4 +56,12 @@ object GraftRddFrame {
                  schema: StructType): DataFrame =
     classic.ClassicConversions.castToImpl(spark)
       .internalCreateDataFrame(rdd, schema)
+
+  /** Runs `body`, which computes [[rows]] of `df`, as the frame's own
+    * SQL execution named "save": `QueryExecutionListener`s hear only of
+    * named executions, and read the frame's observed metrics from it.
+    */
+  def asSave[T](df: DataFrame)(body: => T): T =
+    execution.SQLExecution.withNewExecutionId(
+      classic.ClassicConversions.castToImpl(df).queryExecution, Some("save"))(body)
 }

@@ -346,33 +346,19 @@ class PipelineSpec extends AnyFunSuite {
   test("the warehouse sink's writer factory carries no Hadoop conf to its tasks") {
     // V1's per-task write description holds the whole job conf, which
     // every task deserializes; the sink's factory holds a broadcast handle.
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.connector.catalog.SupportsWrite
-    import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo}
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    import graft.warehouse.WarehouseSink
+    import graft.warehouse.PreparedWrite
     val trips = Warehouse.withPickupDate(Pipeline.transform(goodRows.toDF("value")))
     val dir = Files.createTempDirectory("graft-sink-factory").toString
-    val table = new WarehouseSink()
-      .getTable(trips.schema, Array.empty, Map("path" -> dir).asJava)
-      .asInstanceOf[SupportsWrite]
-    val write = table.newWriteBuilder(new LogicalWriteInfo {
-      override def options(): CaseInsensitiveStringMap = new CaseInsensitiveStringMap(
-        Map(WarehouseSink.BatchIdOption -> "0").asJava)
-      override def queryId(): String = "factory-size"
-      override def schema(): org.apache.spark.sql.types.StructType = trips.schema
-    }).build().toBatch
-    val factory = write.createBatchWriterFactory(new PhysicalWriteInfo {
-      override def numPartitions(): Int = 4
-    })
+    val prepared = new PreparedWrite(spark, dir, trips.schema)
     try {
+      val factory = prepared.factory(new org.apache.hadoop.fs.Path(dir, "_staging/factory-size"))
       val ser = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
       val factoryBytes = ser.serialize(factory).limit()
       val confBytes = ser.serialize(new org.apache.spark.util.SerializableConfiguration(
         spark.sessionState.newHadoopConf())).limit()
       assert(factoryBytes < 16 * 1024 && confBytes > 16 * 1024,
         s"writer factory $factoryBytes B, session Hadoop conf $confBytes B")
-    } finally write.abort(Array.empty)
+    } finally prepared.destroy()
   }
 
   test("idempotent sink crash after its commit, before the commit log: the replay equals an uninterrupted run") {
@@ -424,23 +410,46 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("a failed idempotent sink commit drops its staging dir") {
-    val warehouse = Files.createTempDirectory("graft-wh-commit-fail")
-    val checkpoint = Files.createTempDirectory("graft-ckpt-commit-fail").toString
     // A plain file where batch 0's dir goes: the commit's mkdirs fails
-    // after the write job has staged its files.
-    Files.write(warehouse.resolve("batch_id=0"), Array.emptyByteArray)
-    val source = MemoryStream[String](
-      implicitly[org.apache.spark.sql.Encoder[String]], spark.sqlContext)
-    val query = Pipeline.startIdempotent(source.toDF(), warehouse.toString, checkpoint,
-      Trigger.ProcessingTime("0 seconds"))
+    // after the write job has staged its files. Once from a stream, once
+    // from a batch append.
+    def failedCommit(write: String => Unit): Unit = {
+      val warehouse = Files.createTempDirectory("graft-wh-commit-fail")
+      Files.write(warehouse.resolve("batch_id=0"), Array.emptyByteArray)
+      write(warehouse.toString)
+      val staging = warehouse.resolve("_staging")
+      assert(!Files.exists(staging) || !Files.list(staging).iterator().hasNext,
+        Files.walk(staging).toArray.toSeq)
+    }
+    failedCommit { warehouse =>
+      val checkpoint = Files.createTempDirectory("graft-ckpt-commit-fail").toString
+      val source = MemoryStream[String](
+        implicitly[org.apache.spark.sql.Encoder[String]], spark.sqlContext)
+      val query = Pipeline.startIdempotent(source.toDF(), warehouse, checkpoint,
+        Trigger.ProcessingTime("0 seconds"))
+      try {
+        source.addData(goodRows: _*)
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+          query.processAllAvailable())
+      } finally query.stop()
+    }
+    failedCommit { warehouse =>
+      intercept[Exception](Warehouse.appendTripsIdempotent(
+        Pipeline.transform(goodRows.toDF("value")), warehouse, 0L))
+    }
+  }
+
+  test("a batch append reports its observed metrics to query execution listeners") {
+    val observed = ObservedMetrics.attach(spark)
     try {
-      source.addData(goodRows: _*)
-      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
-        query.processAllAvailable())
-    } finally query.stop()
-    val staging = warehouse.resolve("_staging")
-    assert(!Files.exists(staging) || !Files.list(staging).iterator().hasNext,
-      Files.walk(staging).toArray.toSeq)
+      val dir = Files.createTempDirectory("graft-append-observed").toString
+      Warehouse.appendTripsIdempotent(
+        Pipeline.transform((goodRows ++ badRows).toDF("value")), dir, 0L)
+      assert(observed.drain())
+      assert(observed.get("graft_valid").flatMap(_.get("rows_valid")).contains(2L),
+        observed.snapshot)
+      assert(observed.get("graft_parsed").isDefined, observed.snapshot)
+    } finally observed.detach()
   }
 
   test("a persisting index stream computes each input row once, its emptiness probe included") {
