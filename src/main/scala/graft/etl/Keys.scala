@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Partition-key derivation — the producer's keying cascade
@@ -20,10 +20,4 @@ object Keys {
       when(lon.isNotNull && lat.isNotNull,
         pmod(hash(concat_ws("_", lon, lat)), lit(1000)).cast("string")),
       pmod(hash(vendorId), lit(100)).cast("string"))
-
-  /** Physical analog of Kafka key-partitioning: co-locate rows sharing a
-    * key so downstream per-key work is shuffle-free.
-    */
-  def repartitionByKey(df: DataFrame, key: Column, partitions: Int): DataFrame =
-    df.repartition(partitions, key)
 }

@@ -122,17 +122,6 @@ object Dedup {
   // MinHash + LSH near-duplicate detection
   // ---------------------------------------------------------------------
 
-  /** Word n-gram shingles as an array column (empty when the document has
-    * fewer than n tokens).
-    */
-  def shingles(text: Column, n: Int): Column = {
-    val toks = split(trim(text), "\\s+")
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-      .otherwise(array())
-  }
-
   /** MinHash signature: doc_id → array of `numHashes` minima of seeded
     * xxhash64 over the shingle stream. No `distinct` pre-pass: MIN over a
     * multiset equals MIN over its set, and `min` partial-aggregates

@@ -183,15 +183,6 @@ object IndexStamp {
     !fresh
   }
 
-  /** Next unused ingest id for the partitioned index layout: max
-    * existing `ingest=` id + 1 (one metadata listing; non-numeric
-    * suffixes like `__HIVE_DEFAULT_PARTITION__` are ignored). Shared by
-    * both index families so id-assignment policy lives in one place.
-    */
-  private[graft] def nextIngestId(fs: org.apache.hadoop.fs.FileSystem,
-                                  dir: Path): Long =
-    ingestIds(fs, dir).foldLeft(-1L)(math.max) + 1L
-
   /** Whether a partitioned index directory holds any DATA partition —
     * a committed empty base (cold-start initialization) has a
     * `_SUCCESS` marker but zero `ingest=` directories, and reading it

@@ -24,11 +24,6 @@ object Similarity {
   /** L2 norm via the same kernel. */
   def norm(a: Column): Column = vec_norm(a)
 
-  /** Cosine similarity (safe for non-normalized inputs). Prefer the
-    * precomputed-norm forms below for anything pairwise.
-    */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Per-vector sanity statistics (norm / mean / max component). */
   def embedStats(emb: DataFrame): DataFrame = emb.select(
       col("vec_id"),

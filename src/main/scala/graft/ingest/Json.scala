@@ -20,11 +20,6 @@ object Json {
     .select(from_json(col("value").cast("string"), schema).as("data"))
     .select("data.*")
 
-  /** P2 on a bare string column (e.g. `events.props`). */
-  def parseColumn(df: DataFrame, jsonCol: Column, schema: StructType,
-                  as: String = "data"): DataFrame =
-    df.withColumn(as, from_json(jsonCol, schema))
-
   /** P14 — NaN → null normalization (kafka_producer.py:57-59): floating
     * NaNs become JSON nulls rather than non-standard `NaN` tokens.
     */

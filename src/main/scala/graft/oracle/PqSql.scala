@@ -125,41 +125,6 @@ p${s}c$i AS (SELECT c.code,
        |SELECT a.vec_id, a.label, a.adc_ip FROM adc a JOIN coarse c ON c.vec_id = a.vec_id
        |WHERE c.cell IN (SELECT pcell FROM qprobe) ORDER BY a.adc_ip DESC, a.vec_id LIMIT 10""".stripMargin
 
-  /** Oracle for `pq_rerank` (two-stage retrieval): the ADC top-`kCand`
-    * shortlist, exact round-4 cosine rerank of exactly those
-    * candidates. The shortlist cut is deterministic on both engines
-    * (adc_ip is rounded 4dp and ties break on vec_id — the `pq_topk`
-    * contract), so a hash match certifies shortlist AND rerank.
-    */
-  def pqRerankSql(k: Int = 10, kCand: Int = 50): String =
-    s"""WITH ${common()},
-       |cand AS (SELECT vec_id FROM adc ORDER BY adc_ip DESC, vec_id LIMIT $kCand),
-       |ex AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb_d,
-       |       sqrt(list_dot_product(list_transform(embedding, x -> CAST(x AS DOUBLE)), list_transform(embedding, x -> CAST(x AS DOUBLE)))) AS nrm
-       |       FROM embeddings),
-       |q AS (SELECT emb_d AS qe, nrm AS qn FROM ex WHERE vec_id = 0)
-       |SELECT e.vec_id, e.label, ROUND(list_dot_product(e.emb_d, q.qe)/(e.nrm*q.qn), 4) AS cosine
-       |FROM ex e JOIN cand c ON c.vec_id = e.vec_id, q
-       |ORDER BY cosine DESC, e.vec_id LIMIT $k""".stripMargin
-
-  /** Oracle for `pq_rerank_indexed`: the PROBED-cell ADC shortlist
-    * (the indexed ranker equals the in-frame IVF×PQ composition —
-    * QuantizationSpec's pinned equality, the `pq_topk_indexed` oracle
-    * rule) reranked by exact round-4 cosine.
-    */
-  def pqRerankIvfSql(k: Int = 10, kCand: Int = 50): String =
-    s"""WITH ${common()},
-       |$coarse,
-       |cand AS (SELECT a.vec_id FROM adc a JOIN coarse c ON c.vec_id = a.vec_id
-       |  WHERE c.cell IN (SELECT pcell FROM qprobe) ORDER BY a.adc_ip DESC, a.vec_id LIMIT $kCand),
-       |ex AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb_d,
-       |       sqrt(list_dot_product(list_transform(embedding, x -> CAST(x AS DOUBLE)), list_transform(embedding, x -> CAST(x AS DOUBLE)))) AS nrm
-       |       FROM embeddings),
-       |q AS (SELECT emb_d AS qe, nrm AS qn FROM ex WHERE vec_id = 0)
-       |SELECT e.vec_id, e.label, ROUND(list_dot_product(e.emb_d, q.qe)/(e.nrm*q.qn), 4) AS cosine
-       |FROM ex e JOIN cand c ON c.vec_id = e.vec_id, q
-       |ORDER BY cosine DESC, e.vec_id LIMIT $k""".stripMargin
-
   /** Exact-rerank tail shared by the auto-threshold oracles. */
   private def rerankTail(k: Int): String =
     s"""ex AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb_d,

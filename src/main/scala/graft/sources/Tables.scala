@@ -3,12 +3,14 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Loaders for the driver's deterministic parquet testdata (TESTDATA.md).
+/** The engine's batch inputs: the reference's two, parquet and CSV.
   *
-  * One parquet file per table under `/root/testdata/sf&lt;N&gt;/`. All engine
-  * queries read through here so scans stay uniform: plain
+  * [[load]] reads the deterministic parquet testdata (TESTDATA.md), one
+  * `<name>.parquet` file per table in a scale-factor dir. All engine
+  * queries read through it so scans stay uniform: plain
   * `spark.read.parquet` — column pruning and predicate pushdown reach the
-  * scan via Catalyst, no options needed.
+  * scan via Catalyst, no options needed. [[csv]] is the reference's CSV
+  * input with an explicit schema.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -92,70 +94,4 @@ object Tables {
   def csv(spark: SparkSession, path: String,
           schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
-
-  /** ORC batch scan — the second columnar format the warehouse tier
-    * speaks (Spark bundles the ORC reader natively; same vectorized
-    * read, predicate pushdown and column pruning contract as parquet —
-    * `TablesSpec` pins pushed filters appear in the scan). Schema is
-    * read from the ORC footer; pass `schema` to fail loudly on drift
-    * instead of silently retyping, mirroring [[csv]].
-    */
-  def orc(spark: SparkSession, path: String,
-          schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    val r = spark.read.format("orc")
-    schema.fold(r)(r.schema).load(path)
-  }
-
-  /** XML batch scan (Spark 4 bundles the XML source natively): rows are
-    * the `rowTag` elements. Explicit schema optional, same
-    * fail-loudly-on-drift rationale as [[csv]]/[[jsonl]]; without one
-    * the source infers from the documents (an extra pass — fine for
-    * exploration, not for production ingest).
-    */
-  def xml(spark: SparkSession, path: String, rowTag: String,
-          schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    val r = spark.read.format("xml").option("rowTag", rowTag)
-    schema.fold(r)(r.schema).load(path)
-  }
-
-  /** Avro container-file batch scan — [[AvroSource]], the engine's own
-    * DSv2 reader over the avro core jars (the `spark-avro` external
-    * module is not on this classpath). Schema comes from the first
-    * file's writer schema; column pruning happens at Avro DECODE level
-    * via a projected reader schema.
-    */
-  def avro(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("graft.sources.AvroSource").load(path)
-
-  /** Avro container-file batch sink — [[AvroSource]]'s write side
-    * (staged per-task files, job-commit move; overwrite truncates the
-    * existing `*.avro` data files first).
-    */
-  def avroWrite(df: DataFrame, path: String,
-                overwrite: Boolean = true): Unit =
-    df.write.format("graft.sources.AvroSource")
-      .mode(if (overwrite) org.apache.spark.sql.SaveMode.Overwrite
-        else org.apache.spark.sql.SaveMode.Append)
-      .save(path)
-
-  /** JSONL batch scan with explicit schema — the batch twin of the
-    * streaming [[graft.stream.Pipeline.fileTextSource]] + from_json
-    * path. Explicit schema for the same reason as [[csv]]: schema
-    * inference costs an extra full pass over the data AND retypes on
-    * drift; production ingest declares its contract. PERMISSIVE mode
-    * with a corrupt-record column so malformed lines surface as rows,
-    * not job failures (the reference's consumer drops malformed
-    * messages the same way — spark_consumer.py:46-50).
-    */
-  def jsonl(spark: SparkSession, path: String,
-            schema: org.apache.spark.sql.types.StructType,
-            corruptCol: String = "_corrupt_record"): DataFrame = {
-    val withCorrupt = org.apache.spark.sql.types.StructType(
-      schema.fields :+ org.apache.spark.sql.types.StructField(
-        corruptCol, org.apache.spark.sql.types.StringType))
-    spark.read.schema(withCorrupt)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", corruptCol)
-      .json(path)
-  }
 }

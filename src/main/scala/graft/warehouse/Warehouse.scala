@@ -23,8 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Warehouse {
 
-  val TripsTable = "taxi_trips"
-
   /** The warehouse partition key, derived from `pickup_datetime`, so
     * callers write the 12-column contract of
     * [[graft.model.Schemas.warehouseTrips]].

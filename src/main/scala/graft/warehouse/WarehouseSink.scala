@@ -54,8 +54,7 @@ import org.apache.spark.util.SerializableConfiguration
   * trigger's `StreamingQueryProgress.sink.numOutputRows` reads -1, and
   * the SQL UI shows no write node for it.
   *
-  * Commit protocol, after the staged-move shape of
-  * [[graft.sources.AvroSource]]'s writer: tasks write into
+  * Commit protocol: stage, then move. Tasks write into
   * `path/_staging/<writeId>/pickup_date=D/` (an underscore dir readers
   * do not list) and report the files they wrote. The driver's commit
   * for batch N then, for each date the batch carries, replaces

@@ -215,40 +215,6 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("Avro write→read roundtrip is the identity on adversarial generated rows") {
-    // NaN/±Inf doubles, empty/unicode/whitespace strings, null
-    // patterns, empty arrays — the value classes the hand-written
-    // SourcesSpec shapes don't reach. Equality is by key lookup (NaN
-    // != NaN, so compare via java.lang.Double bit semantics).
-    val cellGen: Gen[(Long, Option[String], Double, Seq[Int])] = for {
-      id <- Gen.choose(0L, Long.MaxValue / 2)
-      s <- Gen.option(Gen.oneOf("", "  ", "héllo wörld", "日本語テキスト",
-        "line\nbreak\ttab", "plain", "\"quoted\" + ,comma"))
-      d <- Gen.oneOf(Gen.choose(-1e18, 1e18),
-        Gen.oneOf(Double.NaN, Double.PositiveInfinity,
-          Double.NegativeInfinity, -0.0, Double.MinPositiveValue))
-      xs <- Gen.listOf(Gen.choose(Int.MinValue, Int.MaxValue))
-    } yield (id, s, d, xs)
-    val rows = Gen.listOfN(300, cellGen)
-      .apply(Gen.Parameters.default, Seed(7L)).get
-      .zipWithIndex.map { case ((_, s, d, xs), i) => (i.toLong, s, d, xs) }
-    val df = rows.toDF("id", "tag", "v", "xs").repartition(5)
-    val dir = java.nio.file.Files
-      .createTempDirectory("avro-prop").toString + "/t"
-    graft.sources.Tables.avroWrite(df, dir)
-    val back = graft.sources.Tables.avro(spark, dir).collect()
-      .map(r => r.getLong(0) ->
-        ((Option(r.getString(1)),
-          java.lang.Double.doubleToLongBits(r.getDouble(2)),
-          r.getSeq[Int](3).toList)))
-      .toMap
-    assert(back.size == rows.size)
-    rows.foreach { case (id, s, d, xs) =>
-      assert(back(id) ===
-        ((s, java.lang.Double.doubleToLongBits(d), xs)), s"row $id")
-    }
-  }
-
   test("NaN normalization: NaN doubles serialize as JSON nulls (P14)") {
     val df = Seq((1, Double.NaN, 2.5)).toDF("VendorID", "fare_amount", "trip_distance")
     val parsed = Json.parseStream(Json.toKeyedJson(df, col("VendorID")),

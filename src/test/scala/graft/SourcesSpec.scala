@@ -1,14 +1,11 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Tables
 
-/** Source/sink format breadth beyond the parquet warehouse: Avro
-  * (the engine's own DSv2 reader), ORC and JSON-lines roundtrips
-  * through the same schemas, and the CSV reader's explicit-schema
-  * contract.
+/** The CSV reader's explicit-schema contract ([[Tables.csv]]): a
+  * written frame reads back with the declared names, types and rows.
   */
 class SourcesSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -20,177 +17,6 @@ class SourcesSpec extends AnyFunSuite {
   // File sources report every column nullable — compare names and types.
   private def shape(s: org.apache.spark.sql.types.StructType) =
     s.fields.map(f => (f.name, f.dataType)).toSeq
-
-  test("Avro container roundtrip: types, nulls, logical timestamps, decode-level pruning") {
-    import org.apache.avro.{LogicalTypes, Schema, SchemaBuilder}
-    import org.apache.avro.file.DataFileWriter
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-    val ts = LogicalTypes.timestampMicros()
-      .addToSchema(Schema.create(Schema.Type.LONG))
-    val schema = SchemaBuilder.record("Trip").fields()
-      .requiredLong("id")
-      .name("tag").`type`().unionOf().nullType().and().stringType().endUnion()
-        .nullDefault()
-      .requiredDouble("v")
-      .name("ts").`type`(ts).noDefault()
-      .name("xs").`type`().array().items().longType().noDefault()
-      .endRecord()
-    val dir = java.nio.file.Files.createTempDirectory("avro").toString
-    val w = new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](schema))
-    w.create(schema, new java.io.File(dir, "part-0.avro"))
-    def rec(id: Long, tag: String, v: Double, tsUs: Long, xs: Seq[Long]) = {
-      val r = new GenericData.Record(schema)
-      r.put("id", id); r.put("tag", tag); r.put("v", v); r.put("ts", tsUs)
-      r.put("xs", java.util.Arrays.asList(xs.map(Long.box): _*))
-      r
-    }
-    w.append(rec(1L, "a", 1.5, 1700000000000000L, Seq(1L, 2L)))
-    w.append(rec(2L, null, 2.5, 1700000001000000L, Seq.empty))
-    w.close()
-    val back = Tables.avro(spark, dir)
-    assert(shape(back.schema) == Seq(
-      ("id", org.apache.spark.sql.types.LongType),
-      ("tag", org.apache.spark.sql.types.StringType),
-      ("v", org.apache.spark.sql.types.DoubleType),
-      ("ts", org.apache.spark.sql.types.TimestampType),
-      ("xs", org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, containsNull = false))))
-    val got = back.orderBy("id")
-      .select(col("id"), col("tag"), col("v"),
-        unix_micros(col("ts")).as("ts_us"), col("xs"))
-      .collect()
-      .map(r => (r.getLong(0), Option(r.getString(1)), r.getDouble(2),
-        r.getLong(3), r.getSeq[Long](4)))
-    assert(got.toSeq == Seq(
-      (1L, Some("a"), 1.5, 1700000000000000L, Seq(1L, 2L)),
-      (2L, None, 2.5, 1700000001000000L, Seq.empty)))
-    // Decode-level pruning: the DSv2 scan's read schema narrows to the
-    // projection (the projected Avro READER schema skips the rest).
-    val pruned = back.select("id", "v")
-    assert(pruned.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      == Seq((1L, 1.5), (2L, 2.5)))
-    val scanDesc = pruned.queryExecution.executedPlan.toString
-    assert(scanDesc.contains("AvroScan ReadSchema: struct<id:bigint,v:double>"),
-      scanDesc.take(800))
-  }
-
-  test("Avro write roundtrip through own reader: nested types, append and overwrite") {
-    val dir = java.nio.file.Files.createTempDirectory("avro-write").toString
-    val src = Seq(
-      (1L, Some("a"), Seq(1, 2), Map("k" -> 1.5), ("x", 7L)),
-      (2L, None, Seq.empty[Int], Map.empty[String, Double], ("y", 8L)))
-      .toDF("id", "tag", "xs", "m", "nested")
-    Tables.avroWrite(src, dir)
-    val back = Tables.avro(spark, dir)
-    assert(shape(back.schema) == shape(src.schema))
-    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("id").collect()
-      .map(r => (r.getLong(0), Option(r.getString(1)), r.getSeq[Int](2),
-        r.getMap[String, Double](3).toMap, r.getStruct(4).toSeq)).toSeq
-    assert(rows(back) == rows(src))
-    // append adds rows; overwrite replaces them
-    Tables.avroWrite(src.filter(col("id") === 1L), dir, overwrite = false)
-    assert(Tables.avro(spark, dir).count() == 3L)
-    Tables.avroWrite(src.filter(col("id") === 2L), dir)
-    val after = Tables.avro(spark, dir)
-    assert(after.count() == 1L && after.head().getLong(0) == 2L)
-  }
-
-  test("Avro sync-marker splitting: many byte-range partitions, rows exactly once") {
-    import org.apache.avro.{Schema, SchemaBuilder}
-    import org.apache.avro.file.DataFileWriter
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-    val schema = SchemaBuilder.record("R").fields()
-      .requiredLong("id").requiredString("s").endRecord()
-    val dir = java.nio.file.Files.createTempDirectory("avro-split").toString
-    val w = new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](schema))
-    w.setSyncInterval(64) // tiny blocks → many sync points in one file
-    w.create(schema, new java.io.File(dir, "big.avro"))
-    (0L until 2000L).foreach { i =>
-      val r = new GenericData.Record(schema)
-      r.put("id", i); r.put("s", s"row-$i-payload")
-      w.append(r)
-    }
-    w.close()
-    // force many splits: each byte-range partition must sync to its
-    // first owned block and stop at pastSync(end) — every row exactly
-    // once, regardless of where range bounds fall inside blocks
-    val split = spark.read.format("graft.sources.AvroSource")
-      .option("splitBytes", 1024).load(dir)
-    assert(split.rdd.getNumPartitions > 5, split.rdd.getNumPartitions)
-    val ids = split.select("id").collect().map(_.getLong(0)).sorted
-    assert(ids.toSeq == (0L until 2000L))
-    // split and unsplit reads agree row-for-row
-    val whole = Tables.avro(spark, dir).collect().map(_.toSeq).toSet
-    assert(split.collect().map(_.toSeq).toSet == whole)
-  }
-
-
-  test("Avro read rejects a conflicting user schema instead of ignoring it") {
-    val dir = java.nio.file.Files.createTempDirectory("avro-uschema").toString
-    Tables.avroWrite(Seq((1L, "a")).toDF("id", "tag"), dir)
-    val wrong = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.IntegerType)))
-    val e = intercept[IllegalArgumentException] {
-      spark.read.format("graft.sources.AvroSource")
-        .schema(wrong).load(dir).collect()
-    }
-    assert(e.getMessage.contains("writer schema"))
-  }
-
-  test("ORC roundtrip preserves rows, schema, and nulls") {
-    val dir = java.nio.file.Files.createTempDirectory("orc").toString
-    df.write.mode("overwrite").orc(dir)
-    val back = Tables.orc(spark, dir, Some(df.schema))
-    assert(shape(back.schema) == shape(df.schema))
-    assert(back.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
-    // Predicate pushdown reaches the ORC scan too.
-    val plan = back.filter(col("id") > 1).queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("GreaterThan(id,1)"), plan)
-    // Footer-schema path (no explicit schema) reads the same shape.
-    assert(shape(Tables.orc(spark, dir).schema) == shape(df.schema))
-  }
-
-  test("JSON-lines roundtrip with explicit schema preserves values") {
-    val dir = java.nio.file.Files.createTempDirectory("jsonl").toString
-    df.write.mode("overwrite").json(dir)
-    val back = Tables.jsonl(spark, dir, df.schema)
-    assert(back.select("id", "tag", "v").orderBy("id").collect().toSeq ==
-      df.orderBy("id").collect().toSeq)
-    // Clean lines carry a null corrupt-record column. (Spark disallows
-    // plans whose referenced columns are ONLY the corrupt column —
-    // QUERY_ONLY_CORRUPT_RECORD_COLUMN — so reference a data column too.)
-    assert(back.select("id", "_corrupt_record").collect()
-      .forall(_.isNullAt(1)))
-  }
-
-  test("JSONL malformed lines surface as corrupt-record rows, not failures") {
-    val dir = java.nio.file.Files.createTempDirectory("jsonl_bad")
-    java.nio.file.Files.writeString(dir.resolve("a.jsonl"),
-      """{"id": 1, "tag": "a", "v": 1.5}
-        |not json at all
-        |{"id": 2, "tag": "b", "v": 2.5}
-        |""".stripMargin)
-    val back = Tables.jsonl(spark, dir.toString, df.schema)
-      .select("id", "_corrupt_record").collect()
-    assert(back.count(_.isNullAt(1)) == 2)
-    val bad = back.filter(!_.isNullAt(1))
-    assert(bad.length == 1)
-    assert(bad.head.getString(1).contains("not json"))
-  }
-
-  test("XML roundtrip (native Spark 4 source) with explicit schema") {
-    val dir = java.nio.file.Files.createTempDirectory("xml").toString
-    df.write.format("xml").option("rootTag", "rows").option("rowTag", "row")
-      .mode("overwrite").save(dir)
-    val back = Tables.xml(spark, dir, rowTag = "row", Some(df.schema))
-    assert(shape(back.schema) == shape(df.schema))
-    assert(back.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
-    // Inference path reads the same row count.
-    assert(Tables.xml(spark, dir, rowTag = "row").count() == df.count())
-  }
 
   test("CSV reader enforces its explicit schema") {
     val dir = java.nio.file.Files.createTempDirectory("csv").toString
